@@ -6429,7 +6429,7 @@ def _drift_local_fns():
     costing ~1.5-2.5 s of pure scheduling per query AT ANY DATA SIZE
     (the tail input is the bounded sufficient statistic, so this cost
     never amortizes with scale). The replay is the house bit-exactness
-    discipline: identical IEEE expression order, layer_c's _np_rnd
+    discipline: identical IEEE expression order, lanes.np_rnd's
     audited-HALF_UP kernel for every round (the ln() ulp risk rides
     the same EPS-nudge + knife-edge-audit argument that certifies the
     committed pagerank/unigram/doremi lanes), exact BIGINT cumsums and
@@ -6445,9 +6445,9 @@ def _drift_local_fns():
     the registered queries' exact column orders."""
     import numpy as np
 
-    from demo_segmenter_spark.operators.layer_c import _np_rnd
+    from demo_segmenter_spark.functions.lanes import np_rnd
 
-    r0, r6 = _np_rnd(0), _np_rnd(6)
+    r0, r6 = np_rnd(0), np_rnd(6)
 
     def arrays(rows):
         et = [r[0] for r in rows]

@@ -34,6 +34,7 @@ from demo_segmenter_spark.functions.compat import (
     sql_money_sum,
     sql_rnd,
 )
+from demo_segmenter_spark.functions.lanes import block_lane, np_gather, np_rnd
 from demo_segmenter_spark.registry import query
 from demo_segmenter_spark.sources import load_table
 
@@ -1845,7 +1846,7 @@ def b_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def b_ivm_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING twin of b_ivm_agg, SAME oracle: the retraction
     changelog arrives as seq-ordered micro-batches (inserts, then
-    deletes, then the update retraction pairs — six files via
+    deletes, then the update retraction pairs — four chunk files via
     maxFilesPerTrigger=1) and the view is maintained as complete-mode
     aggregation state: one state row per realized group holding the
     running (sum(op), sum(op·cents)) — the live view after every
@@ -1862,8 +1863,8 @@ def b_ivm_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     ch = _ivm_changelog(spark, sf_dir)
     try:
-        # Round-12 (guide §2.4): the six seq/parity chunk files are
-        # written in ONE job instead of six filtered changelog scans.
+        # Round-12 (guide §2.4): the seq/parity chunk files are
+        # written in ONE job instead of one filtered changelog scan each.
         from demo_segmenter_spark.streaming.sources import (
             chunked_parquet_src,
             stream_state_parts,
@@ -3055,106 +3056,20 @@ PAGERANK_DAMP = 0.85
 # distributed algorithm first"): the bounded-round graph queries run
 # 2-3 exchanges per unrolled round (join + groupBy + argmax window) on
 # a graph whose EDGE LIST fits one task by orders of magnitude at
-# fixture scale. Below GRAPH_BLOCK_EDGES edges, the edge list (built
+# fixture scale. Below CAPS["graph"] edges, the edge list (built
 # distributed — the wedge/distinct joins stay on the certified path)
 # coalesces into ONE mapInPandas task that replays every round in
 # numpy: integer label votes / peels are bit-exact by construction;
 # pagerank's per-iteration rnd(·, 6) replays through the HALF_UP +
-# Decimal-audit kernel (the _nd_block_fns discipline), with the same
+# Decimal-audit kernel (lanes.np_rnd), with the same
 # noise-floor argument that already certifies Spark-vs-DuckDB float
 # sums under the EPS nudge. At 100 TB these graphs exceed the cap and
 # the distributed rounds run unchanged — the lane is the "subgraph
 # fits a task" tier (per-tenant graphs, filtered slices), exactly how
 # a production graph engine local-solves small components.
-# Row-identity of the two lanes is pinned in tests/test_graph_block.py
-# and every oracle hash is re-certified at three scale factors.
-#
-# Cap sizing (measured, guide §1.1 — twice, on two different boxes):
-# session 4's sandbox charged ~150 ms/MB of first-touch page faults to
-# FRESH allocations in a cold Python worker (Firecracker lazy memory),
-# so a 600 k-pair pagerank gather paid ~10 s of fault cost and LOST to
-# the 3-exchange-per-round distributed lane — the cap was set to 250 k
-# there. Session 5's box shows NO such pathology (healthy page-in):
-# the same pagerank at sf0.1 (590 k pairs) reads 1.65 s via the block
-# lane vs 2.91 s distributed (solo warm best-of-3), so the default cap
-# is 1 M edges (~16 MB payload — still a trivially task-sized block).
-# A box with the lazy-memory pathology tunes it back down via the env
-# knob; bigger graphs take the distributed rounds, which is also the
-# correct 100 TB answer.
+# Row-identity of the two lanes is pinned in tests/test_lanes.py and
+# every oracle hash is re-certified at three scale factors.
 # ---------------------------------------------------------------------------
-
-import os as _os  # noqa: E402 — cap override, see below
-
-# Env-overridable (SPARK_GRAFT_GRAPH_BLOCK_EDGES): production tuning
-# knob for the lane tier, and -1 forces the distributed rounds (used
-# by plan dumps / A-B equivalence runs).
-GRAPH_BLOCK_EDGES = int(
-    _os.environ.get("SPARK_GRAFT_GRAPH_BLOCK_EDGES", "1000000")
-)
-
-
-def _np_half_up6():
-    """numpy twin of rnd(col, 6): HALF_UP (away-from-zero) rounding of
-    x + EPS[6] to 6 decimals, with a Decimal audit of knife-edge
-    values (|scaled frac − .5| < 1e-6) where binary floor(+0.5) could
-    disagree with Spark's BigDecimal(shortest-repr) reading. The audit
-    set is empty on every fixture (the EPS nudge keeps true values off
-    exact halves); it exists so the lane can never silently diverge."""
-    import numpy as np
-
-    eps = EPS[6]
-
-    def r6(x):
-        y = np.asarray(x, dtype=np.float64) + eps
-        ay = np.abs(y)
-        scaled = ay * 1_000_000.0
-        out = np.floor(scaled + 0.5)
-        risky = np.flatnonzero(
-            np.abs((scaled - np.floor(scaled)) - 0.5) < 1e-6
-        )
-        if len(risky):
-            from decimal import ROUND_HALF_UP, Decimal
-
-            for i in risky:
-                out[i] = float(
-                    Decimal(repr(float(ay[i]))).quantize(
-                        Decimal("0.000001"), rounding=ROUND_HALF_UP
-                    )
-                ) * 1_000_000.0
-        return np.where(y < 0, -out, out) / 1_000_000.0 + 0.0
-
-    return r6
-
-
-def _graph_block(pairs: DataFrame, kernel, schema: str) -> DataFrame | None:
-    """Gate + gather of the block lane: ``pairs`` (persisted by the
-    caller) must hold at most GRAPH_BLOCK_EDGES rows; its single
-    coalesced partition feeds ``kernel`` (an iterator-of-pandas
-    replay). Returns None above the cap (distributed rounds run).
-    The gate is a bounded probe, not a full count — above the cap
-    (the 100 TB tier) deciding the lane must not cost a pass over
-    the edge list (round-13, guide §1.2)."""
-    from demo_segmenter_spark.functions.cache import exceeds_cap
-
-    if exceeds_cap(pairs, GRAPH_BLOCK_EDGES):
-        return None
-    return pairs.coalesce(1).mapInPandas(kernel, schema)
-
-
-def _np_gather(batches, cols):
-    """Concatenate the named int64 columns across a partition's
-    pandas batches."""
-    import numpy as np
-
-    out = {c: [] for c in cols}
-    for pdf in batches:
-        if len(pdf):
-            for c in cols:
-                out[c].append(pdf[c].to_numpy(dtype=np.int64))
-    empty = np.empty(0, dtype=np.int64)
-    return [
-        (np.concatenate(out[c]) if out[c] else empty) for c in cols
-    ]
 
 
 def _grouped_counts(keys_a, keys_b):
@@ -3232,7 +3147,7 @@ def b_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     One groupBy(dst) shuffle per iteration with map-side partial sums;
     never a driver-side loop over collect()ed ranks. The iteration
     count is the driver loop; it is unrolled here so Catalyst sees one
-    plan and the oracle can replay it. Below GRAPH_BLOCK_EDGES pairs
+    plan and the oracle can replay it. Below CAPS["graph"] pairs
     the block lane replays the iterations in one task (HALF_UP +
     Decimal-audit kernel; same noise-floor argument the DuckDB oracle
     already certifies)."""
@@ -3245,14 +3160,14 @@ def b_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_partkey") * 2 + 1).alias("p"),
         ).distinct()
     )
-    r6 = _np_half_up6()
+    r6 = np_rnd(6)
     iters, damp = PAGERANK_ITERS, PAGERANK_DAMP
 
     def kern(batches):
         import numpy as np
         import pandas as pd
 
-        o, p = _np_gather(batches, ["o", "p"])
+        o, p = np_gather(batches, ["o", "p"])
         src = np.concatenate([o, p])
         dst = np.concatenate([p, o])
         # unique + searchsorted instead of return_inverse: this numpy's
@@ -3281,7 +3196,7 @@ def b_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    blk = _graph_block(pairs, kern, "node long, pr double, rank long")
+    blk = block_lane(pairs, "graph", kern, "node long, pr double, rank long")
     if blk is not None:
         return blk
     both = F.array(
@@ -3501,7 +3416,7 @@ def b_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     pagerank's — labels live in a node-count table that AQE broadcasts
     against the persisted edge list, one groupBy(dst) shuffle per
     round with map-side MIN partials; never a driver-side loop. Below
-    GRAPH_BLOCK_EDGES pairs the block lane replays the rounds in one
+    CAPS["graph"] pairs the block lane replays the rounds in one
     task — integer min-labels, bit-exact by construction."""
     from demo_segmenter_spark.functions.cache import persist
 
@@ -3520,7 +3435,7 @@ def b_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        o, p = _np_gather(batches, ["o", "p"])
+        o, p = np_gather(batches, ["o", "p"])
         src = np.concatenate([o, p])
         dst = np.concatenate([p, o])
         nodes = np.unique(src)
@@ -3547,8 +3462,8 @@ def b_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    blk = _graph_block(
-        pairs, kern, "component long, n_nodes long, min_node long"
+    blk = block_lane(
+        pairs, "graph", kern, "component long, n_nodes long, min_node long"
     )
     if blk is not None:
         return blk
@@ -3660,7 +3575,7 @@ def b_graph_community(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted edge list (broadcast at fixture sf, co-partitioned
     shuffle at 100 TB). Rounds are a constant, not a convergence loop —
     the bounded-round contract that makes the plan static. Below
-    GRAPH_BLOCK_EDGES pairs the block lane replays the rounds in one
+    CAPS["graph"] pairs the block lane replays the rounds in one
     task — all-integer votes, bit-exact by construction."""
     from demo_segmenter_spark.functions.cache import persist
 
@@ -3679,7 +3594,7 @@ def b_graph_community(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        o, p = _np_gather(batches, ["o", "p"])
+        o, p = np_gather(batches, ["o", "p"])
         src = np.concatenate([o, p])
         dst = np.concatenate([p, o])
         nodes = np.unique(src)
@@ -3708,8 +3623,8 @@ def b_graph_community(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    blk = _graph_block(
-        pairs, kern, "community long, n_nodes long, min_node long"
+    blk = block_lane(
+        pairs, "graph", kern, "community long, n_nodes long, min_node long"
     )
     if blk is not None:
         return blk
@@ -3813,7 +3728,7 @@ def b_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     hub-part with 10k co-purchases contributes wedges only from edges
     where it is the LARGER endpoint). All-integer, total-order
     tiebreaks everywhere — the oracle replays the identical
-    orientation and wedge ordering. Below GRAPH_BLOCK_EDGES edges the
+    orientation and wedge ordering. Below CAPS["graph"] edges the
     orientation + wedge close replay in one task (the co-purchase
     self-join that BUILDS the edge list stays distributed — it is the
     corpus-sized step); integer degrees and ids, bit-exact."""
@@ -3836,7 +3751,7 @@ def b_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        u, v = _np_gather(batches, ["u", "v"])
+        u, v = np_gather(batches, ["u", "v"])
         nodes = np.unique(np.r_[u, v])
         ui = np.searchsorted(nodes, u)
         vi = np.searchsorted(nodes, v)
@@ -3878,7 +3793,7 @@ def b_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"node": tn[top], "n_triangles": cnt[top].astype(np.int64)}
         )
 
-    blk = _graph_block(e, kern, "node long, n_triangles long")
+    blk = block_lane(e, "graph", kern, "node long, n_triangles long")
     if blk is not None:
         return blk
     # explode-array instead of unionAll-of-projections: references the
@@ -3991,7 +3906,7 @@ def b_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays every round with zero tolerance. Scale story: one
     groupBy(dst) shuffle per round with map-side MIN partials against
     the persisted edge list — textbook distributed frontier expansion
-    (Pregel's BFS) as pure dataflow. Below GRAPH_BLOCK_EDGES pairs the
+    (Pregel's BFS) as pure dataflow. Below CAPS["graph"] pairs the
     block lane replays the rounds in one task — +inf stands for the
     NULL "unreached" distance (min over all-inf stays inf, exactly
     NULL-skipping MIN), distances stay exact small integers."""
@@ -4012,7 +3927,7 @@ def b_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        o, p = _np_gather(batches, ["o", "p"])
+        o, p = np_gather(batches, ["o", "p"])
         src = np.concatenate([o, p])
         dst = np.concatenate([p, o])
         nodes = np.unique(src)
@@ -4043,7 +3958,9 @@ def b_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    blk = _graph_block(pairs, kern, "dist long, n_nodes long, min_node long")
+    blk = block_lane(
+        pairs, "graph", kern, "dist long, n_nodes long, min_node long"
+    )
     if blk is not None:
         return blk
     both = F.array(
@@ -4150,7 +4067,7 @@ def b_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass + restriction base both read it) is paid once at runtime —
     the same bounded-round discipline as components/BFS, on the one
     graph pattern that SHRINKS its input each round. Below
-    GRAPH_BLOCK_EDGES edges the peels replay in one task — integer
+    CAPS["graph"] edges the peels replay in one task — integer
     degrees, bit-exact by construction."""
     from demo_segmenter_spark.functions.cache import persist
 
@@ -4172,7 +4089,7 @@ def b_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        u, v = _np_gather(batches, ["u", "v"])
+        u, v = np_gather(batches, ["u", "v"])
         for _ in range(rounds):
             nodes, counts = np.unique(np.r_[u, v], return_counts=True)
             surv = nodes[counts >= k]
@@ -4184,7 +4101,7 @@ def b_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"node": nodes[top], "degree": deg[top].astype(np.int64)}
         )
 
-    blk = _graph_block(edges, kern, "node long, degree long")
+    blk = block_lane(edges, "graph", kern, "node long, degree long")
     if blk is not None:
         return blk
 
@@ -5312,7 +5229,7 @@ def b_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle per round with map-side MIN partials against the persisted
     weighted edge list — Pregel's SSSP as pure dataflow; rounds at
     100 TB are the driver loop with the same per-round cost. Below
-    GRAPH_BLOCK_EDGES pairs the block lane replays the rounds in one
+    CAPS["graph"] pairs the block lane replays the rounds in one
     task — integer weights, +inf for the NULL "unreached" distance
     (the b_graph_bfs kernel generalized to w in 1..3)."""
     from demo_segmenter_spark.functions.cache import persist
@@ -5332,7 +5249,7 @@ def b_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        o, p, ew = _np_gather(batches, ["o", "p", "w"])
+        o, p, ew = np_gather(batches, ["o", "p", "w"])
         src = np.concatenate([o, p])
         dst = np.concatenate([p, o])
         nodes = np.unique(src)
@@ -5363,7 +5280,9 @@ def b_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    blk = _graph_block(pairs, kern, "dist long, n_nodes long, min_node long")
+    blk = block_lane(
+        pairs, "graph", kern, "dist long, n_nodes long, min_node long"
+    )
     if blk is not None:
         return blk
     both = F.array(

@@ -39,6 +39,12 @@ from demo_segmenter_spark.functions.cache import (
     local_checkpoint,
     persist,
 )
+from demo_segmenter_spark.functions.lanes import (
+    CAPS,
+    block_lane,
+    emb_gather,
+    np_rnd,
+)
 from demo_segmenter_spark.functions.vectors import as_double, dot
 from demo_segmenter_spark.registry import query
 from demo_segmenter_spark.sources import load_table, spread
@@ -339,8 +345,9 @@ def c_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     conservative under the cap: intersections lose hot shingles,
     union sizes keep them (identical on the fixture, where max df=5).
     (Planted pair at j≈0.97; background soup pairs below 0.03.)
-    Shingles travel as xxhash64 longs: same exact Jaccard (collisions
-    vanishingly rare at 2^64), ~5x narrower shuffle rows."""
+    Shingles travel as 64-bit siphash longs (_hashed_shingles): same
+    exact Jaccard (collisions vanishingly rare at 2^64), ~5x narrower
+    shuffle rows."""
     docs = spread(load_table(spark, sf_dir, "documents"))
     sh = _shingle_doc_table(
         docs, _hashed_shingles()
@@ -976,19 +983,19 @@ def c_sim_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a corpus shuffle, which is exactly how production Lloyd runs
     on 100 TB (the iteration count is the driver loop; here it is
     unrolled to keep the whole plan visible to Catalyst and the
-    oracle). Below EMB_BLOCK_CAP vectors the embedding block lane
+    oracle). Below CAPS["emb"] vectors the embedding block lane
     replays both Lloyd rounds in one task (_kmeans_block_fns)."""
     raw = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r4 = _np_rnd(4)
+    r4 = np_rnd(4)
     _, cent_sims, train = _kmeans_block_fns()
 
     def kern(batches):
         import numpy as np
         import pandas as pd
 
-        ids, X = _emb_gather_np(batches)
+        ids, X = emb_gather(batches)
         U, cids, C1, cn1 = train(ids, X)
         sims = cent_sims(U, C1, cn1)
         k = np.argmax(sims, axis=1)
@@ -1000,8 +1007,8 @@ def c_sim_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    blk = _emb_block(
-        raw, kern, "vec_id long, cluster_id long, cos_sim double"
+    blk = block_lane(
+        raw, "emb", kern, "vec_id long, cluster_id long, cos_sim double"
     )
     if blk is not None:
         return blk
@@ -1146,13 +1153,13 @@ def c_sim_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector store exposes. Probe sets of different queries reuse the
     same cluster-keyed candidate table (one shuffle key: cluster_id).
     Recall vs exact at 200k vectors is measured in the scale smoke
-    (trained centroids, nprobe=2). Below EMB_BLOCK_CAP vectors the
+    (trained centroids, nprobe=2). Below CAPS["emb"] vectors the
     embedding block lane replays train + probe + search in one task
     (per-query cumsum-fold dots over the probed cells' members)."""
     raw0 = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r4 = _np_rnd(4)
+    r4 = np_rnd(4)
     _, cent_sims, train = _kmeans_block_fns()
     nq, nk, nprobe = KNN_QUERIES, KNN_K, IVF_NPROBE
 
@@ -1160,7 +1167,7 @@ def c_sim_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        ids, X = _emb_gather_np(batches)
+        ids, X = emb_gather(batches)
         U, cids, C1, cn1 = train(ids, X)
         sims = cent_sims(U, C1, cn1)
         cluster = cids[np.argmax(sims, axis=1)]
@@ -1197,8 +1204,9 @@ def c_sim_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    blk = _emb_block(
+    blk = block_lane(
         raw0,
+        "emb",
         kern,
         "query_id long, neighbor_id long, cluster_id long, "
         "cos_sim double, rank long",
@@ -1557,23 +1565,23 @@ def c_sim_lsh_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle for hashing), one band-key exchange makes candidates, one
     bounded verify; at 100 TB, RHP_ROWS grows ~log2(n) to keep buckets
     under the cap, exactly like any production SimHash index. Below
-    EMB_BLOCK_CAP vectors the embedding block lane (round-12 pass 2)
+    CAPS["emb"] vectors the embedding block lane (round-12 pass 2)
     replays banding + exact verify in ONE task — _rhp_cand_np is the
     identical plane matmul, the pair dots are the cumsum fold's exact
     value (same kernel discipline as _nd_block_fns.score), and the
     threshold + rnd(·,4) run on the same doubles; row identity vs the
-    distributed lane is pinned in tests/test_emb_block.py."""
+    distributed lane is pinned in tests/test_lanes.py."""
     raw0 = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r4 = _np_rnd(4)
+    r4 = np_rnd(4)
     thr = RHP_COS_THRESHOLD
 
     def kern(batches):
         import numpy as np
         import pandas as pd
 
-        ids, X = _emb_gather_np(batches)
+        ids, X = emb_gather(batches)
         va, vb = _rhp_cand_np(ids, X)
         ia = np.searchsorted(ids, va)
         ib = np.searchsorted(ids, vb)
@@ -1604,7 +1612,7 @@ def c_sim_lsh_native(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"va": va[keep], "vb": vb[keep], "cos_sim": r4(cos[keep])}
         )
 
-    blk = _emb_block(raw0, kern, "va long, vb long, cos_sim double")
+    blk = block_lane(raw0, "emb", kern, "va long, vb long, cos_sim double")
     if blk is not None:
         return blk
     emb = spread(load_table(spark, sf_dir, "embeddings"))
@@ -1673,13 +1681,13 @@ def c_sim_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     full banding, so the query keeps its FULL hash oracle. Emits
     (dropped vec, its label, kept duplicate-of = the best earlier
     candidate, cos). Deterministic: rounded cosine + total-order
-    tiebreak. Below EMB_BLOCK_CAP vectors the embedding block lane
+    tiebreak. Below CAPS["emb"] vectors the embedding block lane
     replays banding + verify + keep-rule in one task (_rhp_cand_np is
     the identical plane matmul the certified pandas_udf runs)."""
     raw0 = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", "embedding"
     )
-    r4 = _np_rnd(4)
+    r4 = np_rnd(4)
 
     def kern(batches):
         import numpy as np
@@ -1717,8 +1725,9 @@ def c_sim_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    blk = _emb_block(
+    blk = block_lane(
         raw0,
+        "emb",
         kern,
         "vec_id long, label int, dup_of long, cos_sim double",
     )
@@ -1840,19 +1849,19 @@ def c_sim_dedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     paper's pairwise similarity matrix per cluster), bounded by the
     knob production actually turns: K. Measured at 200k vectors with
     K=512 + planted duplicates in tests/test_ann.py. Below
-    EMB_BLOCK_CAP vectors the embedding block lane replays train +
+    CAPS["emb"] vectors the embedding block lane replays train +
     scan order + pairwise verdicts in one task."""
     raw0 = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r4 = _np_rnd(4)
+    r4 = np_rnd(4)
     _, cent_sims, train = _kmeans_block_fns()
 
     def kern(batches):
         import numpy as np
         import pandas as pd
 
-        ids, X = _emb_gather_np(batches)
+        ids, X = emb_gather(batches)
         U, cids, C1, cn1 = train(ids, X)
         sims = cent_sims(U, C1, cn1)
         k = np.argmax(sims, axis=1)
@@ -1887,8 +1896,9 @@ def c_sim_dedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    blk = _emb_block(
+    blk = block_lane(
         raw0,
+        "emb",
         kern,
         "vec_id long, cluster_id long, dup_of long, "
         "cent_sim double, cos_sim double",
@@ -3174,8 +3184,9 @@ def c_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELF-JOIN — two corpus-sized exchanges of exploded shingle
     STRINGS plus the join — where every sibling dedup query already
     runs the grouped-pairs form: ONE exchange on (block, shingle),
-    pairs emitted per group with pure codegen, shingles as xxhash64
-    longs (~5x narrower rows; pair-set equality modulo 2^-64
+    pairs emitted per group with pure codegen, shingles as 64-bit
+    siphash longs from _hashed_shingles' pd.util.hash_array (~5x
+    narrower rows; pair-set equality modulo 2^-64
     collisions is the same argument the c_dedup_ngram oracle already
     accepts). No df cap is applied — this oracle has none, so the
     hot-shingle quadratic risk is identical in both forms (it is the
@@ -4551,13 +4562,12 @@ def c_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # serving indexes trained on it) run 4-46 static exchanges of
 # broadcast joins, posexplode+groupBy(dim) passes and K-row rebuilds
 # over a corpus that fits one task by orders of magnitude at fixture
-# scale (sf0.1 = 2 000 × 64 doubles ≈ 1 MB). Below EMB_BLOCK_CAP
+# scale (sf0.1 = 2 000 × 64 doubles ≈ 1 MB). Below CAPS["emb"]
 # vectors, ONE coalesced mapInPandas task scans the corpus once and
 # replays the whole chain in numpy with the house bit-exactness
 # discipline: cumulative-sum folds (the left fold's exact value),
-# elementwise IEEE twins of transform/zip_with, _np_rnd's HALF_UP +
-# Decimal-audit quantization (the _np_half_up6 / _nd_block_fns
-# kernel, generalized over the rounding scale), lexsort total orders.
+# elementwise IEEE twins of transform/zip_with, lanes.np_rnd's
+# HALF_UP + Decimal-audit quantization, lexsort total orders.
 # Row-sum reorderings (X'c, centroid means) ride the same noise-floor
 # argument that already certifies the DuckDB oracle's float sums
 # under the EPS nudge — with the Decimal audit catching any
@@ -4565,86 +4575,10 @@ def c_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # unchanged — also the correct 100 TB answer (fit-small/
 # transform-everything: PCA/k-means TRAINING at corpus scale runs on
 # a bounded sample/shard; the apply passes stay corpus-parallel).
-# Equivalence pinned in tests/test_emb_block.py (block vs distributed
+# Equivalence pinned in tests/test_lanes.py (block vs distributed
 # lane row-identity on the live fixture) + oracle hash-match at
 # three scale factors.
 # ---------------------------------------------------------------------------
-
-import os as _os  # noqa: E402 — cap override, see below
-
-# Env-overridable (SPARK_GRAFT_EMB_BLOCK_CAP): production tuning knob
-# for the lane tier, and -1 forces the distributed chains (plan dumps
-# / A-B equivalence runs).
-EMB_BLOCK_CAP = int(_os.environ.get("SPARK_GRAFT_EMB_BLOCK_CAP", "20000"))
-
-
-def _np_rnd(n: int):
-    """numpy twin of rnd(col, n): HALF_UP (away-from-zero) rounding of
-    x + EPS[n] to n decimals, with a Decimal audit of knife-edge
-    values (|scaled frac − .5| < 1e-6) where binary floor(+0.5) could
-    disagree with Spark's BigDecimal(shortest-repr) reading. The audit
-    set is empty on every fixture (the EPS nudge keeps true values off
-    exact halves); it exists so the lane can never silently diverge.
-    (The layer_b pagerank kernel is the n=6 instance of this.)"""
-    import numpy as np
-
-    eps = EPS[n]
-    scale = 10.0 ** n
-
-    def r(x):
-        y = np.asarray(x, dtype=np.float64) + eps
-        ay = np.abs(y)
-        scaled = ay * scale
-        out = np.floor(scaled + 0.5)
-        # audit on raveled views so n-dim inputs (the (n, K) sim
-        # matrices) index correctly
-        flat_s, flat_a, flat_o = scaled.ravel(), ay.ravel(), out.reshape(-1)
-        risky = np.flatnonzero(
-            np.abs((flat_s - np.floor(flat_s)) - 0.5) < 1e-6
-        )
-        if len(risky):
-            from decimal import ROUND_HALF_UP, Decimal
-
-            q = Decimal(1).scaleb(-n)
-            for i in risky:
-                flat_o[i] = float(
-                    Decimal(repr(float(flat_a[i]))).quantize(
-                        q, rounding=ROUND_HALF_UP
-                    )
-                ) * scale
-        return np.where(y < 0, -out, out) / scale + 0.0
-
-    return r
-
-
-def _emb_block(raw: DataFrame, kernel, schema: str) -> DataFrame | None:
-    """Gate + dispatch of the embedding block lane: ``raw`` must be
-    the (vec_id, embedding) corpus projection. Returns None above
-    EMB_BLOCK_CAP (the distributed chains run). Bounded-probe gate
-    (round-13): above the cap the decision costs a LocalLimit probe,
-    not a full corpus pass (guide §1.2)."""
-    if exceeds_cap(raw, EMB_BLOCK_CAP):
-        return None
-    return raw.coalesce(1).mapInPandas(kernel, schema)
-
-
-def _emb_gather_np(batches):
-    """vec_id-ascending (ids, X float64 matrix) from a partition's
-    pandas batches — float32→float64 elementwise (exact, the
-    as_double twin)."""
-    import numpy as np
-
-    ids_l, rows = [], []
-    for pdf in batches:
-        if len(pdf):
-            ids_l.append(pdf["vec_id"].to_numpy(dtype=np.int64))
-            rows.append(np.array(pdf["embedding"].tolist(), dtype=np.float64))
-    if not ids_l:
-        return np.empty(0, dtype=np.int64), np.empty((0, 0))
-    ids = np.concatenate(ids_l)
-    X = np.concatenate(rows)
-    order = np.argsort(ids, kind="stable")
-    return ids[order], X[order]
 
 
 def _np_cumdot(A, v):
@@ -4683,7 +4617,7 @@ def _kmeans_block_fns():
     the noise-floor row-sum argument (the oracle's own tolerance)."""
     import numpy as np
 
-    r6 = _np_rnd(6)
+    r6 = np_rnd(6)
 
     def unitize(X):
         nrm = np.sqrt(_np_cumdot(X, X))
@@ -4720,7 +4654,7 @@ def _rq_train_np(ids, X):
     code2 values, final d2)."""
     import numpy as np
 
-    r6 = _np_rnd(6)
+    r6 = np_rnd(6)
     _, cent_sims, train = _kmeans_block_fns()
     U, cids, C1, cn1 = train(ids, X)
     sims = cent_sims(U, C1, cn1)
@@ -4754,7 +4688,7 @@ def _pq_train_np(ids, X):
     (n,m), d2fin (n,m))."""
     import numpy as np
 
-    r6 = _np_rnd(6)
+    r6 = np_rnd(6)
     n, dim = X.shape
     m = PQ_M
     sub = dim // m
@@ -5065,19 +4999,19 @@ def c_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE tiny shuffle, never a corpus shuffle, never a driver-side loop
     (the 64-float component travels as a broadcast row, not a
     collect()). At 100 TB this is exactly distributed power iteration:
-    deflate and repeat for the top-k components. Below EMB_BLOCK_CAP
+    deflate and repeat for the top-k components. Below CAPS["emb"]
     vectors the block lane replays the iterations in one task (cumsum
-    folds + noise-floor row sums under _np_rnd's audited HALF_UP)."""
+    folds + noise-floor row sums under np_rnd's audited HALF_UP)."""
     raw = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r6, r2 = _np_rnd(6), _np_rnd(2)
+    r6, r2 = np_rnd(6), np_rnd(2)
 
     def kern(batches):
         import numpy as np
         import pandas as pd
 
-        _, X = _emb_gather_np(batches)
+        _, X = emb_gather(batches)
         v, nrm = _pca_power_np(X, r6)
         dim = np.arange(1, X.shape[1] + 1, dtype=np.int64)
         yield pd.DataFrame(
@@ -5088,7 +5022,9 @@ def c_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    blk = _emb_block(raw, kern, "dim long, loading double, eig_norm double")
+    blk = block_lane(
+        raw, "emb", kern, "dim long, loading double, eig_norm double"
+    )
     if blk is not None:
         return blk
     emb = spread(load_table(spark, sf_dir, "embeddings"))
@@ -5148,20 +5084,20 @@ def c_embed_pca_deflate(spark: SparkSession, sf_dir: str) -> DataFrame:
     row, NOT per element); each extra component costs one more
     deflation pass + the same per-iteration tiny (64-row) shuffles —
     top-k PCA at 100 TB is k chained copies of this plan, never a
-    covariance materialization. Below EMB_BLOCK_CAP vectors the block
+    covariance materialization. Below CAPS["emb"] vectors the block
     lane replays both component chains + the deflation in one task
     (the deflation zip_with is the elementwise IEEE twin
     X − c[:,None]·v1)."""
     raw = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r6, r4, r2 = _np_rnd(6), _np_rnd(4), _np_rnd(2)
+    r6, r4, r2 = np_rnd(6), np_rnd(4), np_rnd(2)
 
     def kern(batches):
         import numpy as np
         import pandas as pd
 
-        _, X = _emb_gather_np(batches)
+        _, X = emb_gather(batches)
         v1, _ = _pca_power_np(X, r6)
         c = _np_cumdot(X, v1)
         Xd = X - c[:, None] * v1
@@ -5179,8 +5115,9 @@ def c_embed_pca_deflate(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    blk = _emb_block(
+    blk = block_lane(
         raw,
+        "emb",
         kern,
         "dim long, loading1 double, loading2 double, "
         "eig_norm2 double, ortho double",
@@ -5284,19 +5221,19 @@ def c_embed_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds, one zip_with chain, zero shuffles beyond training. At
     100 TB this is the classic fit-small/transform-everything split:
     the transform dominates and is embarrassingly parallel. Below
-    EMB_BLOCK_CAP vectors the block lane replays train + apply in one
+    CAPS["emb"] vectors the block lane replays train + apply in one
     task (the residual chain is the elementwise IEEE twin of the
     nested zip_with)."""
     raw = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r6, r4 = _np_rnd(6), _np_rnd(4)
+    r6, r4 = np_rnd(6), np_rnd(4)
 
     def kern(batches):
         import numpy as np
         import pandas as pd
 
-        ids, X = _emb_gather_np(batches)
+        ids, X = emb_gather(batches)
         v1, _ = _pca_power_np(X, r6)
         c = _np_cumdot(X, v1)
         Xd = X - c[:, None] * v1
@@ -5313,8 +5250,9 @@ def c_embed_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    blk = _emb_block(
+    blk = block_lane(
         raw,
+        "emb",
         kern,
         "vec_id long, p1 double, p2 double, resid_norm double",
     )
@@ -5479,7 +5417,7 @@ def bpe_encode_tokens(
 # ---------------------------------------------------------------------------
 # Tokenizer-train BLOCK LANE (round-12 optimization; guide §1.2 "fix the
 # distributed algorithm first", §4.2 "hand whole batches to native code
-# inside the task"): below TOK_BLOCK_CAP documents, the merge-training
+# inside the task"): below CAPS["tok"] documents, the merge-training
 # replay (BPE count rule / WordPiece likelihood rule) runs inside ONE
 # mapInPandas task over the corpus block, emitting only the BOUNDED
 # artifacts (per-round argmax rows, t0 unit counts, final vocabulary) —
@@ -5491,15 +5429,10 @@ def bpe_encode_tokens(
 # integer/string (counts, BIGINT floor division, lexicographic (a, b)
 # tiebreaks on the pure-ASCII corpus — Python code-point order equals
 # the engines' binary collation there), so the replay is bit-exact vs
-# the window chain; tests/test_tok_block.py pins the two lanes
-# row-identical on the fixture and the oracles certify the block lane
+# the window chain; tests/test_tok_block.py and tests/test_lanes.py pin
+# the two lanes row-identical and the oracles certify the block lane
 # at all three scale factors.
 # ---------------------------------------------------------------------------
-
-# documents; above this the distributed lanes run. Env-overridable
-# (round-13) so the committed lane-off guard bench can force the
-# distributed tokenizer chains from the environment (-1 = always off).
-TOK_BLOCK_CAP = int(_os.environ.get("SPARK_GRAFT_TOK_BLOCK_CAP", "200000"))
 
 _TOK_ART_SCHEMA = (
     "kind string, rnd long, a string, b string, c long, ca long,"
@@ -5581,11 +5514,9 @@ def _tok_train_block(docs: DataFrame, rule: str, rounds: int):
     same collect volume _wp_vocab_set already materializes on the
     distributed lane) and the distinct final tokens. Returns
     (bests, units, fvocab) or None when the block exceeds
-    TOK_BLOCK_CAP documents (the distributed lanes take over).
+    CAPS["tok"] documents (the distributed lanes take over).
     Bounded-probe gate (round-13): above the cap the decision costs
     a LocalLimit probe, not a full corpus pass (guide §1.2)."""
-    if exceeds_cap(docs, TOK_BLOCK_CAP):
-        return None
 
     def replay(batches):
         texts: list = []
@@ -5615,12 +5546,12 @@ def _tok_train_block(docs: DataFrame, rule: str, rounds: int):
             emit("fvocab", tok=t)
         yield pd.DataFrame(rows)
 
-    art = (
-        docs.select("doc_id", "text")
-        .coalesce(1)
-        .mapInPandas(replay, _TOK_ART_SCHEMA)
-        .collect()
+    blk = block_lane(
+        docs.select("doc_id", "text"), "tok", replay, _TOK_ART_SCHEMA
     )
+    if blk is None:
+        return None
+    art = blk.collect()
     bests = sorted(
         (
             {
@@ -5690,7 +5621,7 @@ def _bpe_encode_block(
 
 
 def _bpe_final_toks(spark: SparkSession, sf_dir: str):
-    """Shared BPE train→final-tokenization entry: below TOK_BLOCK_CAP
+    """Shared BPE train→final-tokenization entry: below CAPS["tok"]
     the block lanes run (one artifact task + one encode pass, zero
     window chains); above it the certified distributed rounds run
     unchanged. Returns (toks DataFrame of (doc_id, pos, tok), art)
@@ -5796,7 +5727,7 @@ def c_token_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a driver loop, never a per-row UDF; real BPE training at
     100 TB runs precisely this dataflow with rounds as the driver
     loop (unrolled here so Catalyst sees one plan and the oracle can
-    replay it). Below TOK_BLOCK_CAP docs the block lane replays the
+    replay it). Below CAPS["tok"] docs the block lane replays the
     identical integer dataflow in one task (see _tok_train_block)."""
     art = _tok_train_block(load_table(spark, sf_dir, "documents"),
                            "bpe", BPE_ROUNDS)
@@ -5889,7 +5820,7 @@ def c_token_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact itself), never corpus size, and the id assignment joins
     back via broadcast. n_tokens rides the existing doc_id
     partitioning (window count, no extra exchange). Below
-    TOK_BLOCK_CAP docs the block lane runs: one artifact task trains
+    CAPS["tok"] docs the block lane runs: one artifact task trains
     the merges, then ONE mapInPandas pass replays them per doc with
     ids and counts attached in-task — zero exchanges end to end."""
     art = _tok_train_block(load_table(spark, sf_dir, "documents"),
@@ -5944,9 +5875,6 @@ UNI_LMAX = 8  # DP unroll depth == max word length (fixture max is 8;
 # guarded by an assertion test — a longer word would need a deeper chain)
 UNI_ROUNDS = 2  # EM rounds unrolled
 UNI_SEED = 256  # seed vocab cap: top substrings by count (+ all chars)
-# Train block-lane gate: DISTINCT WORDS (the DP's work unit — vocab-
-# bounded, not corpus-bounded). Env-overridable like the other caps.
-UNI_BLOCK_CAP = int(_os.environ.get("SPARK_GRAFT_UNI_BLOCK_CAP", "200000"))
 
 _UNI_BASE_SQL = f"""
 WITH utoks AS MATERIALIZED (
@@ -6218,12 +6146,12 @@ def _unigram_train(
     _kmeans_train discipline).
 
     Round-12 optimization (the tokenizer block-lane tier): below
-    UNI_BLOCK_CAP distinct words, ONE mapInPandas task replays the
+    CAPS["uni"] distinct words, ONE mapInPandas task replays the
     whole chain — seed substring counts, the (cnt DESC, piece) seed
     rank, and every hard-EM round's Viterbi/M-step/ilogp — emitting
     the bounded per-round vocabulary tables. The per-word DP is the
     SAME _uni_viterbi_word the distributed pass runs; counts are
-    exact integers; ilogp rides _np_rnd(0)'s audited HALF_UP (ln
+    exact integers; ilogp rides np_rnd(0)'s audited HALF_UP (ln
     under the noise-floor argument that already certifies the DuckDB
     replay). Above the cap the distributed rounds run unchanged —
     the 100 TB answer is also that unigram training runs on a
@@ -6234,82 +6162,81 @@ def _unigram_train(
         .agg(F.count("*").cast("long").alias("wfreq"))
         .withColumn("wlen", F.length("word").cast("long"))
     )
-    if not exceeds_cap(uwords, UNI_BLOCK_CAP):
-        r0 = _np_rnd(0)
-        maxp, seed_cap, rounds = UNI_MAXP, UNI_SEED, UNI_ROUNDS
+    r0 = np_rnd(0)
+    maxp, seed_cap, rounds = UNI_MAXP, UNI_SEED, UNI_ROUNDS
 
-        def kern(batches):
-            import numpy as np
-            import pandas as pd
+    def kern(batches):
+        import numpy as np
+        import pandas as pd
 
-            words, freqs = [], []
-            for pdf in batches:
-                if len(pdf):
-                    words.extend(pdf["word"].tolist())
-                    freqs.extend(pdf["wfreq"].tolist())
+        words, freqs = [], []
+        for pdf in batches:
+            if len(pdf):
+                words.extend(pdf["word"].tolist())
+                freqs.extend(pdf["wfreq"].tolist())
 
-            def ilogp_of(c):
-                tot, nv = sum(c.values()), len(c)
-                ps = sorted(c)
-                arr = (
-                    np.log(
-                        (np.array([c[p] for p in ps]) + 1.0) / (tot + nv)
-                    )
-                    * 1_000_000
+        def ilogp_of(c):
+            tot, nv = sum(c.values()), len(c)
+            ps = sorted(c)
+            arr = (
+                np.log(
+                    (np.array([c[p] for p in ps]) + 1.0) / (tot + nv)
                 )
-                return dict(zip(ps, r0(arr).astype(np.int64).tolist()))
-
-            cnt: dict = {}
-            for w, f in zip(words, freqs):
-                n = len(w)
-                for s in range(n):
-                    for l in range(1, min(maxp, n - s) + 1):
-                        p = w[s : s + l]
-                        cnt[p] = cnt.get(p, 0) + f
-            ranked = sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))
-            keep = {p for p, _ in ranked[:seed_cap]} | {
-                p for p in cnt if len(p) == 1
-            }
-            cur = {p: cnt[p] for p in keep}
-            lp = ilogp_of(cur)
-            out = []
-            for rd in range(rounds + 1):
-                ps = sorted(cur)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "round": np.full(len(ps), rd, dtype=np.int32),
-                            "piece": ps,
-                            "l": np.array(
-                                [len(p) for p in ps], dtype=np.int64
-                            ),
-                            "cnt": np.array(
-                                [cur[p] for p in ps], dtype=np.int64
-                            ),
-                            "ilogp": np.array(
-                                [lp[p] for p in ps], dtype=np.int64
-                            ),
-                        }
-                    )
-                )
-                if rd == rounds:
-                    break
-                used: dict = {}
-                for w, f in zip(words, freqs):
-                    for _, piece, _l in _uni_viterbi_word(w, lp):
-                        used[piece] = used.get(piece, 0) + f
-                cur = {p: used.get(p, 0) for p in keep}
-                lp = ilogp_of(cur)
-            yield pd.concat(out)
-
-        allr = persist(
-            uwords.select("word", "wfreq")
-            .coalesce(1)
-            .mapInPandas(
-                kern,
-                "round int, piece string, l long, cnt long, ilogp long",
+                * 1_000_000
             )
-        )
+            return dict(zip(ps, r0(arr).astype(np.int64).tolist()))
+
+        cnt: dict = {}
+        for w, f in zip(words, freqs):
+            n = len(w)
+            for s in range(n):
+                for l in range(1, min(maxp, n - s) + 1):
+                    p = w[s : s + l]
+                    cnt[p] = cnt.get(p, 0) + f
+        ranked = sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))
+        keep = {p for p, _ in ranked[:seed_cap]} | {
+            p for p in cnt if len(p) == 1
+        }
+        cur = {p: cnt[p] for p in keep}
+        lp = ilogp_of(cur)
+        out = []
+        for rd in range(rounds + 1):
+            ps = sorted(cur)
+            out.append(
+                pd.DataFrame(
+                    {
+                        "round": np.full(len(ps), rd, dtype=np.int32),
+                        "piece": ps,
+                        "l": np.array(
+                            [len(p) for p in ps], dtype=np.int64
+                        ),
+                        "cnt": np.array(
+                            [cur[p] for p in ps], dtype=np.int64
+                        ),
+                        "ilogp": np.array(
+                            [lp[p] for p in ps], dtype=np.int64
+                        ),
+                    }
+                )
+            )
+            if rd == rounds:
+                break
+            used: dict = {}
+            for w, f in zip(words, freqs):
+                for _, piece, _l in _uni_viterbi_word(w, lp):
+                    used[piece] = used.get(piece, 0) + f
+            cur = {p: used.get(p, 0) for p in keep}
+            lp = ilogp_of(cur)
+        yield pd.concat(out)
+
+    blk = block_lane(
+        uwords.select("word", "wfreq"),
+        "uni",
+        kern,
+        "round int, piece string, l long, cnt long, ilogp long",
+    )
+    if blk is not None:
+        allr = persist(blk)
         cnts = [
             allr.filter(F.col("round") == i).select("piece", "l", "cnt")
             for i in range(UNI_ROUNDS + 1)
@@ -7790,18 +7717,18 @@ def c_embed_rq(spark: SparkSession, sf_dir: str) -> DataFrame:
     both codebooks are K×dim broadcasts over one corpus scan each —
     map-side assignment, never a corpus shuffle (the c_sim_kmeans
     argument); real RVQ adds stages as a driver loop. Below
-    EMB_BLOCK_CAP vectors the embedding block lane replays the full
+    CAPS["emb"] vectors the embedding block lane replays the full
     two-stage chain in one task (_rq_train_np)."""
     raw0 = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r4 = _np_rnd(4)
+    r4 = np_rnd(4)
 
     def kern(batches):
         import numpy as np
         import pandas as pd
 
-        ids, X = _emb_gather_np(batches)
+        ids, X = emb_gather(batches)
         _, _, _, code1, R, _, _, _, code2, d2fin = _rq_train_np(ids, X)
         yield pd.DataFrame(
             {
@@ -7813,8 +7740,9 @@ def c_embed_rq(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    blk = _emb_block(
+    blk = block_lane(
         raw0,
+        "emb",
         kern,
         "vec_id long, code1 long, code2 long, err1 double, err2 double",
     )
@@ -7889,19 +7817,19 @@ def c_sim_rq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     LUTs are (queries × K) rows — broadcast; the scoring join touches
     only the CODES table (2 longs/vector), and the per-query rank
     window is the one exchange. The corpus floats are never read at
-    query time — that is the entire point. Below EMB_BLOCK_CAP vectors
+    query time — that is the entire point. Below CAPS["emb"] vectors
     the embedding block lane replays train + LUT + ADC in one task."""
     raw0 = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r6, r4 = _np_rnd(6), _np_rnd(4)
+    r6, r4 = np_rnd(6), np_rnd(4)
     nq, nk = KNN_QUERIES, KNN_K
 
     def kern(batches):
         import numpy as np
         import pandas as pd
 
-        ids, X = _emb_gather_np(batches)
+        ids, X = emb_gather(batches)
         U, cids, C1, code1, _, rc_ids, RC, c2i, _, _ = _rq_train_np(ids, X)
         k1i = np.searchsorted(cids, code1)
         out = []
@@ -7939,8 +7867,9 @@ def c_sim_rq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    blk = _emb_block(
+    blk = block_lane(
         raw0,
+        "emb",
         kern,
         "query_id long, neighbor_id long, rank long, adc_score double",
     )
@@ -8013,20 +7942,20 @@ def c_embed_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines. Scale: codebooks are K×dim rows broadcast over
     one corpus scan per round (the kmeans shape); the encode output
     is 4 rows/vector, and ADC query scoring against it is a
-    codes-join — never a corpus shuffle. Below EMB_BLOCK_CAP vectors
+    codes-join — never a corpus shuffle. Below CAPS["emb"] vectors
     the embedding block lane replays both rounds in one task
     (_pq_train_np)."""
     raw0 = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r4 = _np_rnd(4)
+    r4 = np_rnd(4)
     m, sub = PQ_M, 16
 
     def kern(batches):
         import numpy as np
         import pandas as pd
 
-        ids, X = _emb_gather_np(batches)
+        ids, X = emb_gather(batches)
         _, _, code_vals, d2fin = _pq_train_np(ids, X)
         n = len(ids)
         yield pd.DataFrame(
@@ -8038,8 +7967,8 @@ def c_embed_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    blk = _emb_block(
-        raw0, kern, "vec_id long, subspace long, code long, qerr double"
+    blk = block_lane(
+        raw0, "emb", kern, "vec_id long, subspace long, code long, qerr double"
     )
     if blk is not None:
         return blk
@@ -8196,19 +8125,19 @@ def c_sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL replay. Scale: LUT is queries×{PQ_M}×{PQ_K} rows (broadcast);
     the codes join shuffles the 4-row-per-vector index, not vectors —
     the memory/IO win that is the entire point of PQ. Below
-    EMB_BLOCK_CAP vectors the embedding block lane replays train +
+    CAPS["emb"] vectors the embedding block lane replays train +
     LUT + ADC in one task."""
     raw0 = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r6, r4 = _np_rnd(6), _np_rnd(4)
+    r6, r4 = np_rnd(6), np_rnd(4)
     nq, m = PQ_QUERIES, PQ_M
 
     def kern(batches):
         import numpy as np
         import pandas as pd
 
-        ids, X = _emb_gather_np(batches)
+        ids, X = emb_gather(batches)
         n, dim = X.shape
         sub = dim // m
         X3 = X.reshape(n, m, sub)
@@ -8243,8 +8172,11 @@ def c_sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    blk = _emb_block(
-        raw0, kern, "query_id long, rank long, vec_id long, adc_dist double"
+    blk = block_lane(
+        raw0,
+        "emb",
+        kern,
+        "query_id long, rank long, vec_id long, adc_dist double"
     )
     if blk is not None:
         return blk
@@ -8605,7 +8537,7 @@ def c_token_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters on (doc_id, win_id), which the encode chain's doc_id
     partitioning already satisfies — the window pass itself adds ZERO
     exchanges, so the cost at 100 TB is the encode pass it rides.
-    Below TOK_BLOCK_CAP docs the block encode lane feeds the cover
+    Below CAPS["tok"] docs the block encode lane feeds the cover
     (ids attached in-task; the rollup's one exchange remains)."""
     art = _tok_train_block(load_table(spark, sf_dir, "documents"),
                            "bpe", BPE_ROUNDS)
@@ -11150,7 +11082,7 @@ def c_sim_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookups. The corpus floats are never read at query time; the
     fixture's isotropic spectrum keeps absolute recall modest (the
     c_sim_rq_adc caveat), and the 200k-vector scale smoke measures
-    recall on clusterable planted data. Below EMB_BLOCK_CAP vectors
+    recall on clusterable planted data. Below CAPS["emb"] vectors
     the embedding block lane replays the full train + LUT + ADC serve
     chain in one task — all candidate scores stay exact integer
     micro-sums (the _micro twin), so the replay is bit-exact past the
@@ -11158,7 +11090,7 @@ def c_sim_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw0 = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r6, r4, r0 = _np_rnd(6), _np_rnd(4), _np_rnd(0)
+    r6, r4, r0 = np_rnd(6), np_rnd(4), np_rnd(0)
     _, cent_sims, train = _kmeans_block_fns()
     nq, nk, nprobe, m, pqk = KNN_QUERIES, KNN_K, IVF_NPROBE, PQ_M, PQ_K
 
@@ -11169,7 +11101,7 @@ def c_sim_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         def micro(x):
             return r0(r6(x) * 1_000_000.0).astype(np.int64)
 
-        ids, X = _emb_gather_np(batches)
+        ids, X = emb_gather(batches)
         n, dim = X.shape
         sub = dim // m
         U, cids, C1, cn1 = train(ids, X)
@@ -11250,8 +11182,9 @@ def c_sim_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    blk = _emb_block(
+    blk = block_lane(
         raw0,
+        "emb",
         kern,
         "query_id long, neighbor_id long, rank long, "
         "adc_score double, recall_at_k double",
@@ -11367,20 +11300,20 @@ def c_sim_dedup_kmeans_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     (≤ C({SHINGLE_DF_CAP},2) per bucket) that already serves
     c_sim_lsh_native; no all-pairs stage anywhere. At 200k vectors the
     scale smoke's hybrid pass recovers the boundary straddlers the
-    cluster-only pass provably misses. Below EMB_BLOCK_CAP vectors the
+    cluster-only pass provably misses. Below CAPS["emb"] vectors the
     embedding block lane replays train + both pair sources + the one
     keep rule in one task."""
     raw0 = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r4 = _np_rnd(4)
+    r4 = np_rnd(4)
     _, cent_sims, train = _kmeans_block_fns()
 
     def kern(batches):
         import numpy as np
         import pandas as pd
 
-        ids, X = _emb_gather_np(batches)
+        ids, X = emb_gather(batches)
         U, cids, C1, cn1 = train(ids, X)
         sims = cent_sims(U, C1, cn1)
         k = np.argmax(sims, axis=1)
@@ -11434,8 +11367,9 @@ def c_sim_dedup_kmeans_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    blk = _emb_block(
+    blk = block_lane(
         raw0,
+        "emb",
         kern,
         "vec_id long, cluster_id long, dup_of long, "
         "cent_sim double, cos_sim double, via string",
@@ -13922,7 +13856,7 @@ def _wp_train_docs(docs: DataFrame):
 
 def _wp_artifacts(docs: DataFrame):
     """WordPiece block-lane artifacts (see _tok_train_block): below
-    TOK_BLOCK_CAP docs, ONE task replays the WP_ROUNDS likelihood-
+    CAPS["tok"] docs, ONE task replays the WP_ROUNDS likelihood-
     argmax training and returns (bests, units) — the per-round argmax
     dicts and the t0 unit counts (the _wp_vocab_set/_wp_capped_vocab
     inputs, vocabulary-bounded). None above the cap."""
@@ -14243,7 +14177,7 @@ def c_token_wordpiece(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair_count, cnt_a, cnt_b, score_q, n_merges, new_token). Scale:
     identical dataflow to c_token_bpe plus one vocab-sized unit-count
     aggregate per round (map-side partial, broadcast into the argmax) —
-    nothing corpus-quadratic, no driver loop. Below TOK_BLOCK_CAP docs
+    nothing corpus-quadratic, no driver loop. Below CAPS["tok"] docs
     the block lane replays the identical integer dataflow in one task
     (see _tok_train_block)."""
     art = _wp_artifacts(load_table(spark, sf_dir, "documents"))
@@ -14409,13 +14343,6 @@ def c_token_wordpiece_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 DOREMI_ROUNDS = 3
-# Block-lane gate for the DoReMi weight algebra: (domain, token) count
-# rows — vocabulary×domains-sized, NOT corpus-sized, so the cap is
-# about per-task numpy working set, same tier as GRAPH_BLOCK_EDGES.
-# Env-overridable like the other lane caps.
-DOREMI_BLOCK_CAP = int(
-    _os.environ.get("SPARK_GRAFT_DOREMI_BLOCK_CAP", "500000")
-)
 # eta = 0.1: factor = exp(loss_micro / 1e7). Smoothing c = 1/10:
 # alpha <- (9 * alpha_norm) DIV 10 + (1e5 DIV n_domains) — pure-integer
 # arithmetic, so only ln/exp (quantized once each) ever touch floats.
@@ -14514,10 +14441,10 @@ def c_mix_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
     static plan linear, the c_rag_mmr lesson). Real DoReMi spends its
     cost training the proxy; the weight algebra — what this query
     certifies — is exactly this dataflow. Round-12: below
-    DOREMI_BLOCK_CAP (domain, token) rows the weight algebra replays
+    CAPS["doremi"] (domain, token) rows the weight algebra replays
     in ONE task off the distributed count table (the corpus pass
     stays the certified dataflow) — integer micro-unit arithmetic
-    throughout, ln/exp under the same noise-floor + _np_rnd audit
+    throughout, ln/exp under the same noise-floor + np_rnd audit
     that certifies the DuckDB replay's libm."""
     from demo_segmenter_spark.functions.cache import local_checkpoint
 
@@ -14528,7 +14455,7 @@ def c_mix_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
     dcnt = persist(
         tok.groupBy("source", "t").agg(F.count("*").alias("ckt"))
     )
-    r0 = _np_rnd(0)
+    r0 = np_rnd(0)
     rounds = DOREMI_ROUNDS
 
     def kern(batches):
@@ -14585,12 +14512,15 @@ def c_mix_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         yield pd.concat(out)
 
-    if not exceeds_cap(dcnt, DOREMI_BLOCK_CAP):
-        return dcnt.coalesce(1).mapInPandas(
-            kern,
-            "round int, source string, n_tokens long, "
-            "loss_micro long, factor_micro long, alpha_micro long",
-        )
+    blk = block_lane(
+        dcnt,
+        "doremi",
+        kern,
+        "round int, source string, n_tokens long, "
+        "loss_micro long, factor_micro long, alpha_micro long",
+    )
+    if blk is not None:
+        return blk
     dtot = persist(
         dcnt.groupBy("source").agg(F.sum("ckt").cast("long").alias("tk"))
     )
@@ -16203,7 +16133,7 @@ FROM bexp
 
 def _wp_capped_vocab_for(train: DataFrame) -> set:
     """Capped trained vocabulary for a train split, lane-dispatched:
-    block-lane artifacts below TOK_BLOCK_CAP (one task + one
+    block-lane artifacts below CAPS["tok"] (one task + one
     vocabulary-bounded collect), the distributed chain above."""
     art = _wp_artifacts(train)
     if art is not None:
@@ -16764,7 +16694,7 @@ def _nd_sym(ps: DataFrame) -> DataFrame:
     )
 
 
-# Single-TASK block lane (round-12 optimization): below this many
+# Single-TASK block lane (round-12 optimization): below CAPS["nd"]
 # vectors the whole NN-descent refinement (and the beam walk) runs as
 # ONE executor-side numpy pass against the broadcast block matrix,
 # instead of ~6 exchanges + 2 eager checkpoints per round — measured
@@ -16774,12 +16704,9 @@ def _nd_sym(ps: DataFrame) -> DataFrame:
 # tier of the documented shard hierarchy: at 100 TB NN-descent runs per
 # IVF/LSH shard, and a shard small enough for the _nd_matrix gather is
 # also small enough to refine inside the task holding it (the FAISS
-# per-shard build). Between ND_BLOCK_CAP and ND_MAT_CAP the distributed
+# per-shard build). Between CAPS["nd"] and ND_MAT_CAP the distributed
 # rounds + gather scoring run unchanged; beyond ND_MAT_CAP, the join
 # path. Row-identity of the three lanes is pinned in tests/test_ann.py.
-# Env-overridable (round-13): -1 forces the distributed NN-descent
-# rounds for the lane-off guard bench.
-ND_BLOCK_CAP = int(_os.environ.get("SPARK_GRAFT_ND_BLOCK_CAP", "20000"))
 
 
 def _nd_block_fns():
@@ -16788,44 +16715,24 @@ def _nd_block_fns():
     no module references inside task functions). Each kernel is the
     bit-exact twin of its distributed counterpart:
 
-    - round_half_up: F.round(double)'s HALF_UP (away from zero) —
-      vectorized floor(|x|+0.5) with a Decimal audit of knife-edge
-      values (|frac−.5| < 1e-6), where a binary +0.5 could disagree
-      with Spark's decimal-string BigDecimal reading. The audit set is
-      empty on every fixture (the +EPS nudge keeps scores off exact
-      halves); it exists so the lane can never silently diverge.
-    - sm_of: _nd_sm's micro-unit quantization.
+    - sm_of: _nd_sm's micro-unit quantization (lanes.np_rnd's
+      audited HALF_UP at 0 decimals).
     - score: _nd_score_pairs' gather arithmetic — per-row product,
       cumulative-sum fold (the left fold's exact value), one divide.
     - topk: _nd_topk's per-group sorted slice under the (sm DESC, id)
       total order (lexsort's last key is primary)."""
-    eps = EPS[0]
+    r0 = np_rnd(0)
     np = __import__("numpy")
 
-    def round_half_up(x):
-        ax = np.abs(x)
-        y = np.floor(ax + 0.5)
-        risky = np.flatnonzero(np.abs((ax - np.floor(ax)) - 0.5) < 1e-6)
-        if len(risky):
-            from decimal import ROUND_HALF_UP, Decimal
-
-            for i in risky:
-                y[i] = float(
-                    Decimal(repr(float(ax[i]))).quantize(
-                        Decimal(1), rounding=ROUND_HALF_UP
-                    )
-                )
-        return np.where(x < 0, -y, y)
-
     def sm_of(cos):
-        return round_half_up(cos * 1_000_000.0 + eps).astype(np.int64)
+        return r0(cos * 1_000_000.0).astype(np.int64)
 
     def score(ids, V, N, va, vb, chunk=16_384):
         # Two preallocated gather buffers, reused across chunks: the
         # previous fresh-per-chunk form (262 k-pair chunks) touched
         # ~540 MB of NEW pages per task — ~27 s of first-touch faults
         # on a lazy-memory sandbox (measured ~40-55 ms/MB, the
-        # GRAPH_BLOCK_EDGES cap story) whenever the one-task lane
+        # CAPS["graph"] cap story) whenever the one-task lane
         # landed on a cold worker, e.g. every bench pass. Buffered +
         # in-place multiply/cumsum is bit-identical (same per-row
         # fold; out= aliasing verified) and ~10x faster even warm
@@ -16861,7 +16768,7 @@ def _nd_block_fns():
         keep = rank < k
         return v[keep], u[keep], sm[keep]
 
-    return round_half_up, sm_of, score, topk
+    return sm_of, score, topk
 
 
 def _nd_build_block(base: DataFrame, mat, rounds: int) -> DataFrame:
@@ -16887,7 +16794,7 @@ def _nd_build_block(base: DataFrame, mat, rounds: int) -> DataFrame:
     distributed reference replay in tests/test_ann.py; same oracle
     hash at 3 sfs)."""
     ids_b, mat_b, nrm_b = mat
-    _, _, score, topk = _nd_block_fns()
+    _, score, topk = _nd_block_fns()
     nd_k, nd_rcap = ND_K, ND_RCAP
     rhp_cand = _rhp_cand_np
 
@@ -16956,8 +16863,8 @@ def _nd_build_graph(
     rounds=0 (LSH-init only) graph without patching the module global
     (ADVICE r11).
 
-    Lane selection (round-12 optimization, see ND_BLOCK_CAP): blocks
-    of ≤ ND_BLOCK_CAP vectors run init + all rounds in ONE task
+    Lane selection (round-12 optimization, see CAPS["nd"]): blocks
+    of ≤ CAPS["nd"] vectors run init + all rounds in ONE task
     (_nd_build_block); up to ND_MAT_CAP the distributed rounds score
     through the broadcast gather; beyond that, the join path. With
     ``with_mat=True`` returns (graph, mat) so serve-side callers can
@@ -16970,7 +16877,7 @@ def _nd_build_graph(
     # corpus pass (round-13, guide §1.2).
     n = base.limit(ND_MAT_CAP + 1).count()
     mat = _nd_matrix(base) if n <= ND_MAT_CAP else None
-    if mat is not None and n <= ND_BLOCK_CAP:
+    if mat is not None and n <= CAPS["nd"]:
         g = local_checkpoint(_nd_build_block(base, mat, rounds))
         return (g, mat) if with_mat else g
     ps0 = local_checkpoint(
@@ -17246,7 +17153,7 @@ def c_sim_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     geometries."""
     base = _nd_base(spark, sf_dir)
     g, mat = _nd_build_graph(base, with_mat=True)
-    if exceeds_cap(base, ND_BLOCK_CAP):
+    if exceeds_cap(base, CAPS["nd"]):
         mat = None  # block serve only at the single-task tier
     return _gs_serve(base, g, GS_HOPS, mat=mat)
 
@@ -17286,7 +17193,7 @@ def _gs_serve_block(base: DataFrame, g: DataFrame, hops: int, mat) -> DataFrame:
     sc = base.sparkSession.sparkContext
     ev_b = sc.broadcast(edges["v"].to_numpy())
     eu_b = sc.broadcast(edges["u"].to_numpy())
-    _, sm_of, _, _ = _nd_block_fns()
+    sm_of, _, _ = _nd_block_fns()
     knn_q, n_ent, beam_w, nd_k = KNN_QUERIES, GS_ENTRIES, GS_BEAM, ND_K
 
     def walk(batches):
@@ -17365,7 +17272,7 @@ def _gs_serve(
     points, exact micro-cosine beam of GS_BEAM per query, bounded
     ``hops`` expansions, final top-ND_K per query with the in-schema
     exact-sample recall flag. With ``mat`` (the broadcast block
-    artifacts, available below ND_BLOCK_CAP) the walk runs in the
+    artifacts, available below CAPS["nd"]) the walk runs in the
     block lane (_gs_serve_block — one mapInPandas, zero per-hop
     shuffles); otherwise each hop is one bounded join + window with a
     tracked local_checkpoint per beam (the plan references f several
@@ -17539,7 +17446,7 @@ def c_sim_graph_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _nd_base(spark, sf_dir)
     g, mat = _nd_build_graph(base, with_mat=True)
     n = base.count()  # scalar block size (base is persisted)
-    if n > ND_BLOCK_CAP:
+    if n > CAPS["nd"]:
         mat = None  # block serve only at the single-task tier
     gl = g.select("v", "u").unionByName(_gl_skip_edges(base, n)).distinct()
     return _gs_serve(base, gl, GL_HOPS, mat=mat)
@@ -17909,7 +17816,7 @@ def _lr_gd_local(spark: SparkSession, profs: list) -> DataFrame:
       (libm exp can differ from Math.exp in the last ulp, which is
       why numpy/math.exp are NOT used here);
     - F.round(double)'s HALF_UP via BigDecimal.valueOf semantics =
-      Decimal(repr(x)) (the _nd_block_fns lesson); operands are
+      Decimal(repr(x)) (the lanes.np_rnd lesson); operands are
       positive so HALF_UP == away-from-zero == toward +inf here;
     - `g DIV d` (IntegralDivide on BIGINT) truncates toward zero;
       Python // floors, so negative gradients go through an explicit

@@ -10,6 +10,7 @@ Usage: python scripts/ab_lane.py [sf_dir] [name ...]
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 import time
@@ -19,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from demo_segmenter_spark.functions.cache import release_persisted
 from demo_segmenter_spark.registry import REGISTRY, load_all_operators
 from demo_segmenter_spark.session import get_spark
+from laneoff_bench import lanes_off
 
 DEFAULT = [
     "b_graph_components",
@@ -36,16 +38,6 @@ DEFAULT = [
     "c_sim_dedup_kmeans_hybrid",
     "c_mix_doremi",
 ]
-
-
-def set_lanes(on: bool) -> None:
-    import demo_segmenter_spark.operators.layer_b as lb
-    import demo_segmenter_spark.operators.layer_c as lc
-
-    lb.GRAPH_BLOCK_EDGES = 1_000_000 if on else -1
-    lc.EMB_BLOCK_CAP = 20_000 if on else -1
-    lc.DOREMI_BLOCK_CAP = 500_000 if on else -1
-    lc.UNI_BLOCK_CAP = 200_000 if on else -1
 
 
 def run_once(name: str, spark, sf_dir: str) -> float:
@@ -67,17 +59,17 @@ def main() -> None:
     # warm both configurations once (codegen, parquet footers)
     for name in names:
         for on in (True, False):
-            set_lanes(on)
-            run_once(name, spark, sf_dir)
+            with contextlib.nullcontext() if on else lanes_off():
+                run_once(name, spark, sf_dir)
     best: dict[tuple[str, bool], float] = {}
     for _ in range(2):
         for name in names:
             for on in (True, False):
-                set_lanes(on)
                 spark.sparkContext.setJobDescription(
                     f"ab {name} lane={'on' if on else 'off'}"
                 )
-                dt = run_once(name, spark, sf_dir)
+                with contextlib.nullcontext() if on else lanes_off():
+                    dt = run_once(name, spark, sf_dir)
                 k = (name, on)
                 best[k] = min(best.get(k, float("inf")), dt)
     print(f"\n{'query':34s} {'lane_on':>8s} {'lane_off':>9s}  verdict")

@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Above-cap fixture bench (round-13, verdict r12 ask #1): build a
 fixture that sits ABOVE the block-lane caps — embeddings replicated to
-26 k vectors (> EMB_BLOCK_CAP / ND_BLOCK_CAP = 20 k) and lineitem
-replicated so the graph queries see > GRAPH_BLOCK_EDGES = 1 M distinct
+26 k vectors (> lanes.CAPS emb / nd = 20 k) and lineitem replicated
+so the graph queries see > lanes.CAPS graph = 1 M distinct
 edges — and run the gated families on it with NO cap overrides, so the
 lane gates route to the distributed chains naturally and those chains
 get timed (not just row-identity-tested) every round.
@@ -75,7 +75,7 @@ def build_fixture() -> dict:
     counts["embeddings"] = emb.num_rows
     # lineitem x2 with offset orderkey AND partkey so the derived
     # (2*orderkey, 2*partkey+1) edge set is disjoint per copy -> ~1.18M
-    # distinct edges (> GRAPH_BLOCK_EDGES)
+    # distinct edges (> lanes.CAPS["graph"])
     li = pq.read_table(f"{SRC}/lineitem.parquet")
     ostride = pc.max(li.column("l_orderkey")).as_py() + 1
     pstride = pc.max(li.column("l_partkey")).as_py() + 1

@@ -45,7 +45,16 @@ def main() -> None:
     load_all_operators()
     spark = get_spark(app_name="full_sweep", cpus="16", driver_memory="24g")
     spark.sparkContext.setLogLevel("ERROR")
+    names = [
+        n for n in sorted(REGISTRY) if not only or any(s in n for s in only)
+    ]
+    sys.exit(1 if sweep(spark, sf_dir, names, out_json) else 0)
 
+
+def sweep(spark, sf_dir: str, names, out_json: str | None = None) -> int:
+    """Run each named query on Spark and its DuckDB oracle, print the
+    summary and BAD lines, optionally write the per-query JSON, and
+    return the BAD count."""
     from tests.test_oracle import _normalize
 
     ddb = duckdb.connect()
@@ -56,9 +65,7 @@ def main() -> None:
     bad, ok, rows_only = [], 0, 0
     report: dict[str, dict] = {}
     t_start = time.time()
-    for name in sorted(REGISTRY):
-        if only and not any(s in name for s in only):
-            continue
+    for name in names:
         spec = REGISTRY[name]
         rec = {
             "rows_match": None, "schema_match": None, "hash_match": None,
@@ -100,7 +107,7 @@ def main() -> None:
         with open(out_json, "w") as fh:
             json.dump(report, fh, indent=1, sort_keys=True)
         print(f"wrote {out_json} ({len(report)} queries)")
-    sys.exit(1 if bad else 0)
+    return len(bad)
 
 
 if __name__ == "__main__":

@@ -11,21 +11,21 @@ that lane.
 
 Writes LANEOFF_r13.json: per-query wall seconds (warm, best-of-N,
 noop sink, caches released between runs — the bench.py protocol) plus
-the distributed plan's shuffle-exchange count. Run the matching
-lane-off ORACLE check with the same env:
+the distributed plan's shuffle-exchange count. The lanes are switched
+in-process by patching ``lanes.CAPS``, so no restart or env is needed.
 
-  SPARK_GRAFT_GRAPH_BLOCK_EDGES=-1 SPARK_GRAFT_EMB_BLOCK_CAP=-1 \
-  SPARK_GRAFT_DOREMI_BLOCK_CAP=-1 SPARK_GRAFT_UNI_BLOCK_CAP=-1 \
-  SPARK_GRAFT_TOK_BLOCK_CAP=-1 SPARK_GRAFT_ND_BLOCK_CAP=-1 \
-  python scripts/full_oracle_sweep.py <sf_dir> "<names>" <out.json>
+Usage:
+  python scripts/laneoff_bench.py [sf_dir] [out.json] [runs]
+  python scripts/laneoff_bench.py --oracle [sf_dir] [out.json]
 
-Usage: python scripts/laneoff_bench.py [sf_dir] [out.json] [runs]
-(The script forces the caps on its own module attributes too, so it
-works without the env.)
+``--oracle`` runs full_oracle_sweep's per-query DuckDB check over
+LANE_QUERIES instead, lanes forced off, and exits non-zero on any BAD
+query.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
@@ -33,6 +33,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from demo_segmenter_spark.functions import lanes
 from demo_segmenter_spark.functions.cache import release_persisted
 from demo_segmenter_spark.plans.inspect import count_exchanges
 from demo_segmenter_spark.registry import REGISTRY, load_all_operators
@@ -41,7 +42,7 @@ from demo_segmenter_spark.session import get_spark
 # Every lane-gated query path (headline + the non-headline members of
 # each gated family).
 LANE_QUERIES = [
-    # graph block lane (GRAPH_BLOCK_EDGES)
+    # graph block lane
     "b_graph_pagerank",
     "b_graph_components",
     "b_graph_bfs",
@@ -49,7 +50,7 @@ LANE_QUERIES = [
     "b_graph_kcore",
     "b_graph_triangles",
     "b_graph_community",
-    # embedding block lane (EMB_BLOCK_CAP)
+    # embedding block lane
     "c_embed_pca",
     "c_embed_pca_deflate",
     "c_embed_pca_project",
@@ -64,48 +65,61 @@ LANE_QUERIES = [
     "c_sim_dedup_kmeans",
     "c_sim_dedup_kmeans_hybrid",
     "c_sim_lsh_native",
-    # tokenizer block lanes (TOK_BLOCK_CAP / UNI_BLOCK_CAP)
+    # tokenizer block lanes (tok / uni)
     "c_token_bpe",
     "c_token_bpe_encode",
+    "c_token_bpe_decode",
     "c_token_windows",
     "c_token_wordpiece_encode",
     "c_token_oov_encode",
     "c_token_byte_fallback",
+    "c_token_byte_fallback_decode",
     "c_token_unigram_encode",
-    # mixture lane (DOREMI_BLOCK_CAP)
+    # mixture lane
     "c_mix_doremi",
-    # graph-ANN lane (ND_BLOCK_CAP)
+    # graph-ANN lane
     "c_sim_nndescent",
     "c_sim_graph_search",
     "c_sim_graph_layers",
 ]
 
 
-def force_lanes_off() -> None:
-    import demo_segmenter_spark.operators.layer_b as lb
-    import demo_segmenter_spark.operators.layer_c as lc
-
-    lb.GRAPH_BLOCK_EDGES = -1
-    lc.EMB_BLOCK_CAP = -1
-    lc.DOREMI_BLOCK_CAP = -1
-    lc.UNI_BLOCK_CAP = -1
-    lc.TOK_BLOCK_CAP = -1
-    lc.ND_BLOCK_CAP = -1
+@contextlib.contextmanager
+def lanes_off():
+    """Force every block lane off (the distributed chains run) for the
+    duration of the block, then restore the caps."""
+    saved = dict(lanes.CAPS)
+    lanes.CAPS.update(dict.fromkeys(saved, -1))
+    try:
+        yield
+    finally:
+        lanes.CAPS.update(saved)
 
 
 def main() -> None:
+    oracle = sys.argv[1:2] == ["--oracle"]
+    if oracle:
+        del sys.argv[1]
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     out_path = sys.argv[2] if len(sys.argv) > 2 else "LANEOFF_r13.json"
     runs = int(sys.argv[3]) if len(sys.argv) > 3 else 2
 
     load_all_operators()
-    force_lanes_off()
     spark = get_spark(
         app_name="laneoff_bench",
         cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"),
         driver_memory=os.environ.get("SPARK_GRAFT_MEM", "48g"),
     )
+    with lanes_off():
+        if oracle:
+            from full_oracle_sweep import sweep
 
+            out_json = sys.argv[2] if len(sys.argv) > 2 else None
+            sys.exit(1 if sweep(spark, sf_dir, LANE_QUERIES, out_json) else 0)
+        timings(spark, sf_dir, out_path, runs)
+
+
+def timings(spark, sf_dir: str, out_path: str, runs: int) -> None:
     def stamp():
         return {"loadavg": list(os.getloadavg())}
 

@@ -10,6 +10,8 @@ import os
 import subprocess
 import sys
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_bench_runs_and_emits_contract_json():
     env = dict(os.environ)
@@ -24,7 +26,7 @@ def test_bench_runs_and_emits_contract_json():
     )
     out = subprocess.run(
         [sys.executable, "bench.py"],
-        cwd="/root/repo",
+        cwd=REPO,
         env=env,
         capture_output=True,
         text=True,
@@ -67,7 +69,7 @@ def test_secondary_anchor_drift_gate(tmp_path):
     must not mint secondary minima (an anchor minted on a 1.4x-drift day
     is inflated and hides a later real regression). Headline rows stay
     unconditional; legacy artifacts without a drift block still count."""
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import bench
 
     def art(name, doc):
@@ -100,6 +102,11 @@ def test_secondary_anchor_drift_gate(tmp_path):
         "queries": {"q_other_sf": 9.0},
         "drift": {"median_ratio": 1.0},
     })
+    # the latest run's uncommitted sidecar -> never an anchor
+    art("BENCH_detail.json", {
+        "sf": 0.1,
+        "queries": {"q_head": 0.1, "q_sidecar": 0.5},
+    })
 
     minima = bench._committed_minima(0.1, here=str(tmp_path))
     assert minima == {
@@ -111,3 +118,4 @@ def test_secondary_anchor_drift_gate(tmp_path):
     }
     assert "q_sec_drifted" not in minima
     assert "q_other_sf" not in minima
+    assert "q_sidecar" not in minima

@@ -1,5 +1,5 @@
 """Graph block lane (round-12 optimization): pin the one-task numpy
-kernels used below GRAPH_BLOCK_EDGES row-identical to the distributed
+kernels used below CAPS["graph"] row-identical to the distributed
 round semantics, via Spark-built references on crafted graphs chosen
 to hit the tie/tiebreak paths, plus the live queries' lane dispatch on
 the sf0.001 fixture (where their oracles independently hash-certify
@@ -120,27 +120,16 @@ def test_kcore_kernel_matches_spark_reference(spark):
 
 
 def test_pagerank_block_lane_fires_below_cap(spark):
-    """At sf0.001 the pairs count is far below GRAPH_BLOCK_EDGES, so
-    the registered query must return the block plan (a mapInPandas
-    with zero exchanges past the gather) — and its oracle hash-match
-    at sf0.001/0.01/0.1 certifies the kernel's values; here pin the
-    plan shape and the exact HALF_UP kernel on knife-edge input."""
+    """At sf0.001 the pairs count is far below CAPS["graph"], so the
+    registered query must return the block plan (a mapInPandas with
+    zero exchanges past the gather) — and its oracle hash-match at
+    sf0.001/0.01/0.1 certifies the kernel's values; here pin the plan
+    shape (the rnd(·, 6) twin is pinned in tests/test_lanes.py)."""
     from demo_segmenter_spark.plans.inspect import explain_str
 
     df = lb.b_graph_pagerank(spark, SF_DIR)
     plan = explain_str(df)
     assert "ArrowEvalPython" in plan or "MapInPandas" in plan
-
-    import numpy as np
-
-    r6 = lb._np_half_up6()
-    # exact representable values on/near the .5e-6 boundary: HALF_UP
-    # (away from zero) must round .0000005 up, and the EPS nudge must
-    # not flip values clearly below the boundary
-    out = r6(np.array([0.1234565, 0.123456049, 1.0, 0.15]))
-    assert out[2] == 1.0 and out[3] == 0.15
-    assert abs(out[0] - 0.123457) < 1e-12
-    assert abs(out[1] - 0.123456) < 1e-12
 
 
 def test_live_queries_use_block_lane_and_match_committed_shapes(spark):
@@ -154,38 +143,3 @@ def test_live_queries_use_block_lane_and_match_committed_shapes(spark):
         assert "MapInPandas" in plan or "ArrowEvalPython" in plan, q
         n = df.count()
         assert 0 < n <= 100, (q, n)
-
-
-def test_new_block_lanes_match_distributed_lane_on_fixture(
-    spark, monkeypatch
-):
-    """Round-12 continuation lanes (components, bfs, sssp, triangles):
-    run each registered query at sf0.001 twice — block lane live
-    (plan must carry the mapInPandas kernel) and with the lane gated
-    OFF (GRAPH_BLOCK_EDGES = -1 forces the distributed rounds) — and
-    pin row-identity between the two. This is the same-fixture A/B
-    the community/kcore crafted references approximate, end to end."""
-    from demo_segmenter_spark.functions.cache import release_persisted
-    from demo_segmenter_spark.plans.inspect import explain_str
-
-    for q in (
-        "b_graph_components",
-        "b_graph_bfs",
-        "b_graph_sssp",
-        "b_graph_triangles",
-    ):
-        df = lb.__dict__[q](spark, SF_DIR)
-        plan = explain_str(df)
-        assert "MapInPandas" in plan or "ArrowEvalPython" in plan, q
-        got = sorted(tuple(r) for r in df.collect())
-        release_persisted(spark, owner=True)
-        monkeypatch.setattr(lb, "GRAPH_BLOCK_EDGES", -1)
-        try:
-            ref_df = lb.__dict__[q](spark, SF_DIR)
-            ref_plan = explain_str(ref_df)
-            assert "MapInPandas" not in ref_plan, q
-            ref = sorted(tuple(r) for r in ref_df.collect())
-        finally:
-            monkeypatch.undo()
-            release_persisted(spark, owner=True)
-        assert got == ref, q

@@ -505,7 +505,7 @@ def test_shuffle_budgets_table(spark):
         # codebooks/LUTs/probes broadcast
         # r12 emb block lane at fixture scale: zero exchanges (one
         # coalesced corpus scan; train+LUT+ADC replay in-task);
-        # distributed chain above EMB_BLOCK_CAP measured 5
+        # distributed chain above CAPS["emb"] measured 5
         "c_sim_ivfpq_adc": 0,
         # hybrid SemDeDup: the kmeans-train chain + assignment window
         # + the within-cluster pair join + the RHP banding join (both
@@ -657,13 +657,13 @@ def test_shuffle_budgets_table(spark):
         # node-sized so AQE broadcasts the per-iteration join
         # r12 block lane at fixture scale: the pairs distinct is the
         # only exchange (iterations replay in one task); above
-        # GRAPH_BLOCK_EDGES the distributed rounds run (~12)
+        # CAPS["graph"] the distributed rounds run (~12)
         "b_graph_pagerank": 1,
         # linear unrolled min-label rounds (self-loop edge list keeps
         # the label table referenced once per round); the persisted
         # half/edges subtrees repeat in the static plan like pagerank's
         # r12 block lane at fixture scale: pairs distinct only (the
-        # min-label rounds replay in one task); above GRAPH_BLOCK_EDGES
+        # min-label rounds replay in one task); above CAPS["graph"]
         # the distributed rounds run (~15)
         "b_graph_components": 1,
         # frequency-vote LPA: 3 unrolled rounds, each a groupBy(node,lbl)
@@ -811,7 +811,7 @@ def test_shuffle_budgets_table(spark):
         # the distributed steps left are op distinct + the co-purchase
         # wedge join + e distinct (the kcore trio); orientation, wedge
         # enumeration and the close replay in one task (the distributed
-        # lane above GRAPH_BLOCK_EDGES measured 44 static exchanges)
+        # lane above CAPS["graph"] measured 44 static exchanges)
         "b_graph_triangles": 3,
         # min-plus BFS: r12 block lane — pairs distinct only (the
         # relaxation rounds replay in one task; distributed lane ~16)
@@ -1119,7 +1119,7 @@ def test_shuffle_budgets_table(spark):
         # rank window, the exact-sample probe's rank window (broadcast
         # query block), the sample score rollup and the hit join
         "c_sim_nndescent": 4,
-        # graph search: below ND_BLOCK_CAP the whole walk (entry beam,
+        # graph search: below CAPS["nd"] the whole walk (entry beam,
         # hops, exact-sample probe) runs inside ONE mapInPandas task
         # against the broadcast block matrix + edge list (r12 block
         # lane) — zero exchanges; the join-path serve (4 exchanges,

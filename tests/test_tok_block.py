@@ -62,7 +62,7 @@ def test_block_train_matches_distributed(spark, rule, corpus):
     )
     rounds = lc.BPE_ROUNDS if rule == "bpe" else lc.WP_ROUNDS
     art = lc._tok_train_block(docs, rule, rounds)
-    assert art is not None, "fixture must be below TOK_BLOCK_CAP"
+    assert art is not None, 'fixture must be below CAPS["tok"]'
     bests_b, units_b, fvocab_b = art
     bests_d, toks_d = _distributed_bests(docs, rule, rounds)
     for bb, bd in zip(bests_b, bests_d):
@@ -121,27 +121,3 @@ def test_capped_vocab_py_total_order(spark):
     _, t0, _, bests, _ = lc._wp_train_docs(train)
     vocab_df = lc._wp_capped_vocab(t0, bests)
     assert vocab_py == vocab_df
-
-
-def test_unigram_train_block_lane_matches_distributed(spark, monkeypatch):
-    """Round-12 continuation: the unigram train block lane (seed rank +
-    hard-EM rounds replayed in one task) vs the distributed chain —
-    exact row equality for the train table and the heaviest encode
-    consumer on the live fixture. The per-word DP is the shared
-    _uni_viterbi_word either way; the ilogp quantization rides
-    _np_rnd(0)'s audited HALF_UP."""
-    from demo_segmenter_spark.functions.cache import release_persisted
-
-    for q in ("c_token_unigram", "c_token_unigram_encode"):
-        got = sorted(tuple(r) for r in lc.__dict__[q](spark, SF_DIR).collect())
-        assert got, q
-        release_persisted(spark, owner=True)
-        monkeypatch.setattr(lc, "UNI_BLOCK_CAP", -1)
-        try:
-            ref = sorted(
-                tuple(r) for r in lc.__dict__[q](spark, SF_DIR).collect()
-            )
-        finally:
-            monkeypatch.undo()
-            release_persisted(spark, owner=True)
-        assert got == ref, q
