@@ -13,6 +13,10 @@ Layout:
   functions/    — reusable column expressions (vector math, text, hashing)
   streaming/    — Structured Streaming twins (session_window, watermark)
   plans/        — plan-inspection helpers (pushdown/broadcast assertions)
-"""
+  workerd.py    — the Python worker daemon get_spark selects
 
-from demo_segmenter_spark.registry import REGISTRY, query  # noqa: F401
+Imports nothing: ``python -m demo_segmenter_spark.workerd`` runs this
+file before it has taken the JVM-added archives off ``sys.path``, and
+pyspark imported here would come from pyspark.zip. Import the registry
+from ``demo_segmenter_spark.registry``.
+"""

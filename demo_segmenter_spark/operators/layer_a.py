@@ -38,6 +38,7 @@ from demo_segmenter_spark.functions.compat import (
     sql_rnd,
 )
 from demo_segmenter_spark.functions.cache import persist
+from demo_segmenter_spark.functions.scratch import scratch_dir
 from demo_segmenter_spark.registry import query
 from demo_segmenter_spark.sources import load_table
 
@@ -1269,8 +1270,6 @@ def a_gapfill_locf_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (user, day); the fill is one user_id exchange over the rollup
     (grid cross-join broadcasts the calendar), never over raw
     events."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     daily = (
@@ -1278,7 +1277,7 @@ def a_gapfill_locf_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", F.to_date("ts").alias("d"))
         .agg(F.sum(cents(F.col("value"))).alias("cents"))
     )
-    out = f"/tmp/dss_locf/{uuid.uuid4().hex[:8]}"
+    out = scratch_dir("locf")
     from demo_segmenter_spark.streaming.sources import memsink_state_parts
 
     with memsink_state_parts(spark):
@@ -1901,11 +1900,9 @@ def a_retention_cohorts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the distinct sets the exact metric requires; in production
     both stores evict by watermark on the week column once the matrix
     horizon passes."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
-    base = f"/tmp/dss_retention/{uuid.uuid4().hex[:8]}"
+    base = scratch_dir("retention")
     ev = stream_events(spark, sf_dir)
     from demo_segmenter_spark.streaming.sources import memsink_state_parts
 
@@ -6277,9 +6274,8 @@ def a_ktable_fk_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_fkjoin_stream.py; StateStore budget is 0 by design
     (all state lives in the versioned manifests)."""
     import shutil
-    import uuid
 
-    base = f"/tmp/dss_fkjoin_stream/{uuid.uuid4().hex[:8]}"
+    base = scratch_dir("fkjoin_stream")
     shutil.rmtree(base, ignore_errors=True)
     orders = load_table(spark, sf_dir, "orders")
     src = _fkjoin_chunked_src(spark, sf_dir, base)
@@ -6376,22 +6372,21 @@ def run_psi_stream(spark: SparkSession, src: str, mid: int, base: str):
         q.start().awaitTermination()
 
 
-def _psi_stream_cnts(spark: SparkSession, sf_dir: str, prefix: str) -> DataFrame:
+def _psi_stream_cnts(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
     """Run the shared complete-mode histogram stream in a throwaway
-    /tmp dir and return the FINAL snapshot as a driver-local DataFrame
+    scratch dir and return the FINAL snapshot as a driver-local DataFrame
     — grid-bounded by construction (≤ types × 2 × PSI_BINS rows, the
     StateStore's own size bound), so the collect is a constant-sized
     monitoring readout, not a corpus materialization. The dir (source
     chunks, checkpoint, snapshots) is removed BEFORE returning: the
     returned DataFrame is a LocalTableScan with no file dependency, so
-    repeated bench/correctness invocations leave zero /tmp state
+    repeated bench/correctness invocations leave zero scratch state
     behind (ADVICE r11 — the twins used to leak one uuid dir each)."""
     import shutil
-    import uuid
 
     from demo_segmenter_spark.sources.python_source import manifest_files
 
-    base = f"/tmp/{prefix}/{uuid.uuid4().hex[:8]}"
+    base = scratch_dir(kind)
     shutil.rmtree(base, ignore_errors=True)
     try:
         # 3 event-time chunks (round-13, measured): the per-batch floor
@@ -6574,7 +6569,7 @@ def a_drift_psi_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     same query runs with a processing-time trigger and the boundary
     as config."""
     psi_rows, _, _ = _drift_local_fns()
-    rows = _psi_stream_cnts(spark, sf_dir, "dss_psi_stream").collect()
+    rows = _psi_stream_cnts(spark, sf_dir, "psi_stream").collect()
     return spark.createDataFrame(psi_rows(rows), _PSI_OUT_SCHEMA)
 
 
@@ -6881,7 +6876,7 @@ def a_drift_chi2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_psi_stream.py. Scale: identical to
     a_drift_psi_stream — grid-sized state, constant-sized scoring."""
     _, chi2_rows, _ = _drift_local_fns()
-    rows = _psi_stream_cnts(spark, sf_dir, "dss_chi2_stream").collect()
+    rows = _psi_stream_cnts(spark, sf_dir, "chi2_stream").collect()
     return spark.createDataFrame(chi2_rows(rows), _CHI2_OUT_SCHEMA)
 
 
@@ -7040,7 +7035,7 @@ def a_drift_ks_binned_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ks_binned_from_cnts tail. State bounded at the grid, multibatch
     accumulation pinned by the PSI snapshot-history tests."""
     _, _, ksb_rows = _drift_local_fns()
-    rows = _psi_stream_cnts(spark, sf_dir, "dss_ksb_stream").collect()
+    rows = _psi_stream_cnts(spark, sf_dir, "ksb_stream").collect()
     return spark.createDataFrame(ksb_rows(rows), _KSB_OUT_SCHEMA)
 
 
@@ -7205,7 +7200,7 @@ def a_drift_report_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     form: the batch a_drift_report is the offline audit (it adds the
     exact KS); this is what pages the on-call."""
     psi_rows, chi2_rows, ksb_rows = _drift_local_fns()
-    rows = _psi_stream_cnts(spark, sf_dir, "dss_report_stream").collect()
+    rows = _psi_stream_cnts(spark, sf_dir, "report_stream").collect()
     # assemble the long table driver-side in _drift_report_from_legs'
     # exact column order (psi leg, ksb leg, chi2 leg; degenerate =
     # one-sided-window flag) — ONE LocalTableScan instead of three

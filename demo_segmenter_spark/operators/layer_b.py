@@ -35,6 +35,7 @@ from demo_segmenter_spark.functions.compat import (
     sql_rnd,
 )
 from demo_segmenter_spark.functions.lanes import block_lane, np_gather, np_rnd
+from demo_segmenter_spark.functions.scratch import scratch_dir
 from demo_segmenter_spark.registry import query
 from demo_segmenter_spark.sources import load_table
 
@@ -1372,19 +1373,17 @@ def b_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted in tests/test_plans.py). At 100 TB you pay one write-side
     shuffle when landing the table, then amortize it over every
     downstream join/agg on that key."""
-    import hashlib
+    import os
     import shutil
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    db = f"bucketed_{tag}"
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '/tmp/dss_bucketed/{tag}'"
-    )
+    loc = scratch_dir("bucketed", sf_dir)
+    db = f"bucketed_{os.path.basename(loc)}"
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
     for name, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
         if not spark.catalog.tableExists(f"{db}.{name}"):
             # bucketing metadata lives in the session catalog; a stale
             # location from an earlier session must go before re-landing
-            shutil.rmtree(f"/tmp/dss_bucketed/{tag}/{name}", ignore_errors=True)
+            shutil.rmtree(f"{loc}/{name}", ignore_errors=True)
             (
                 load_table(spark, sf_dir, name)
                 .write.bucketBy(8, key)
@@ -1476,10 +1475,7 @@ def b_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _roundtrip_dir(sf_dir: str, fmt: str) -> str:
-    import hashlib
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return f"/tmp/dss_roundtrip/{tag}/{fmt}"
+    return f"{scratch_dir('roundtrip', sf_dir)}/{fmt}"
 
 
 @query(
@@ -1854,12 +1850,12 @@ def b_ivm_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the retract-stream path end-to-end: a CDC feed keyed by
     nothing but group columns and signed deltas, state bounded at the
     group count (≤15 — status × priority), stream-length-independent.
-    The /tmp feed dir is removed before returning (the no-leak
+    The scratch feed dir is removed before returning (the no-leak
     convention); state budget pinned in test_stream_state_budgets."""
     import shutil
     import uuid
 
-    base = f"/tmp/dss_ivm_stream/{uuid.uuid4().hex[:8]}"
+    base = scratch_dir("ivm_stream")
     shutil.rmtree(base, ignore_errors=True)
     ch = _ivm_changelog(spark, sf_dir)
     try:
@@ -5970,11 +5966,10 @@ def b_sample_reservoir_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator for unbounded streams. The final k-row snapshot gets its
     rank column batch-side, like the batch twin."""
     import shutil
-    import uuid
 
     from demo_segmenter_spark.sources.python_source import manifest_files
 
-    base = f"/tmp/dss_res_stream/{uuid.uuid4().hex[:8]}"
+    base = scratch_dir("res_stream")
     shutil.rmtree(base, ignore_errors=True)
     src = _events_chunked_src(spark, sf_dir, base)
     run_reservoir_stream(spark, src, base)
@@ -6596,7 +6591,6 @@ def b_time_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     separate operators by design (b_snapshot_expire is the one that
     makes removed files unreadable)."""
     import shutil
-    import uuid
 
     from demo_segmenter_spark.sources.python_source import (
         manifest_diff,
@@ -6604,7 +6598,7 @@ def b_time_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_sink(spark)
-    base = f"/tmp/dss_ttd/{uuid.uuid4().hex[:8]}"
+    base = scratch_dir("ttd")
     shutil.rmtree(base, ignore_errors=True)
     tbl = f"{base}/t"
     o = load_table(spark, sf_dir, "orders").select(
@@ -6691,7 +6685,6 @@ def b_snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-assembled like the stream twins' snapshots."""
     import json
     import shutil
-    import uuid
 
     from demo_segmenter_spark.sources.python_source import (
         expire_snapshots,
@@ -6700,7 +6693,7 @@ def b_snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_sink(spark)
-    base = f"/tmp/dss_expire/{uuid.uuid4().hex[:8]}"
+    base = scratch_dir("expire")
     shutil.rmtree(base, ignore_errors=True)
     tbl = f"{base}/t"
     o = load_table(spark, sf_dir, "orders").select(

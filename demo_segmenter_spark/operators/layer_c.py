@@ -45,6 +45,7 @@ from demo_segmenter_spark.functions.lanes import (
     emb_gather,
     np_rnd,
 )
+from demo_segmenter_spark.functions.scratch import scratch_dir
 from demo_segmenter_spark.functions.vectors import as_double, dot
 from demo_segmenter_spark.registry import query
 from demo_segmenter_spark.sources import load_table, spread
@@ -2446,10 +2447,9 @@ def c_lang_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition pruning makes downstream lang filters free), then read
     the written dataset back and summarize it. The oracle checks the
     round trip preserved every row."""
-    import hashlib
     import shutil
 
-    out = f"/tmp/dss_sink/{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}/docs_by_lang"
+    out = f"{scratch_dir('sink', sf_dir)}/docs_by_lang"
     shutil.rmtree(out, ignore_errors=True)
     docs = load_table(spark, sf_dir, "documents")
     docs.write.mode("overwrite").partitionBy("lang").parquet(out)
@@ -4434,10 +4434,7 @@ def c_multimodal_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _blob_dir(sf_dir: str) -> str:
-    import hashlib
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return f"/tmp/dss_blobs/{tag}"
+    return scratch_dir("blobs", sf_dir)
 
 
 @query(
@@ -9667,7 +9664,6 @@ def c_pipeline_pretrain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch rn=1 rule, because arrival order is doc_id order (the
     production contract for append-only corpus ingestion)."""
     import shutil
-    import uuid
 
     from demo_segmenter_spark.streaming.sources import (
         chunked_parquet_src,
@@ -9675,7 +9671,7 @@ def c_pipeline_pretrain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base = f"/tmp/dss_pretrain_stream/{uuid.uuid4().hex[:8]}"
+    base = scratch_dir("pretrain_stream")
     shutil.rmtree(base, ignore_errors=True)
     hi = docs.agg(F.max("doc_id")).first()[0] + 1
     cuts = [0, hi // 3, (2 * hi) // 3, hi]
@@ -11773,9 +11769,8 @@ def c_dedup_incremental_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     multibatch state accumulation and crash-replay idempotence are
     pinned in tests/test_incdedup_stream.py."""
     import shutil
-    import uuid
 
-    base = f"/tmp/dss_incdedup_stream/{uuid.uuid4().hex[:8]}"
+    base = scratch_dir("incdedup_stream")
     shutil.rmtree(base, ignore_errors=True)
     run_incdedup_stream(spark, sf_dir, base)
     from demo_segmenter_spark.sources.python_source import manifest_files
@@ -15132,15 +15127,14 @@ def c_quality_nb_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     one scan-local label/tokenize/bucket pass + the bounded-key
     aggregation update — the 100 TB/day quality-model refresh loop."""
     import shutil
-    import uuid
 
     from demo_segmenter_spark.sources.python_source import manifest_files
 
-    base = f"/tmp/dss_nb_stream/{uuid.uuid4().hex[:8]}"
+    base = scratch_dir("nb_stream")
     shutil.rmtree(base, ignore_errors=True)
     docs = load_table(spark, sf_dir, "documents")
     # model-bounded snapshot (≤ NB_BUCKETS+1 rows) materialized
-    # driver-side so the /tmp stream dir can be removed before
+    # driver-side so the scratch stream dir can be removed before
     # returning — the no-leak convention from the drift twins (r12)
     try:
         src = _incdedup_chunked_src(spark, docs, f"{base}/feed", n_chunks=3)
@@ -15259,11 +15253,10 @@ def c_dedup_bloom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash table is lake-side; probe work is per-arriving-doc
     constant."""
     import shutil
-    import uuid
 
     from demo_segmenter_spark.sources.python_source import manifest_files
 
-    base = f"/tmp/dss_bloom_stream/{uuid.uuid4().hex[:8]}"
+    base = scratch_dir("bloom_stream")
     shutil.rmtree(base, ignore_errors=True)
     docs = load_table(spark, sf_dir, "documents")
     src = _incdedup_chunked_src(spark, docs, f"{base}/feed", n_chunks=3)
@@ -15965,15 +15958,14 @@ def c_select_dsir_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     whenever a training snapshot is cut. Multibatch sufficient-
     statistic accumulation pinned in tests/test_dsir.py."""
     import shutil
-    import uuid
 
     from demo_segmenter_spark.sources.python_source import manifest_files
 
-    base = f"/tmp/dss_dsir_stream/{uuid.uuid4().hex[:8]}"
+    base = scratch_dir("dsir_stream")
     shutil.rmtree(base, ignore_errors=True)
     docs = load_table(spark, sf_dir, "documents")
     # model-bounded snapshot (≤ DSIR_BUCKETS rows) materialized
-    # driver-side so the /tmp stream dir can be removed before
+    # driver-side so the scratch stream dir can be removed before
     # returning — the no-leak convention from the drift twins (r12)
     try:
         src = _incdedup_chunked_src(spark, docs, f"{base}/feed", n_chunks=3)
@@ -17870,7 +17862,7 @@ def c_quality_logreg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     final snapshot (_lr_gd_profiles, bit-identical to the batch loop)
     and the shared static scoring tail. The snapshot is materialized
     driver-side (profile-bounded — the margin grid, 143 realized
-    profiles at sf0.01) and the /tmp stream dir is removed before
+    profiles at sf0.01) and the scratch stream dir is removed before
     returning (the no-leak convention from the drift twins).
     Multibatch accumulation is pinned in tests/test_logreg_stream.py;
     state budget pinned in tests/test_stream_state_budgets.py.
@@ -17884,11 +17876,10 @@ def c_quality_logreg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     GD replay and scoring are snapshot- and corpus-scan-sized — the
     100 TB/day learned-gate refresh loop."""
     import shutil
-    import uuid
 
     from demo_segmenter_spark.sources.python_source import manifest_files
 
-    base = f"/tmp/dss_logreg_stream/{uuid.uuid4().hex[:8]}"
+    base = scratch_dir("logreg_stream")
     shutil.rmtree(base, ignore_errors=True)
     docs = load_table(spark, sf_dir, "documents")
     try:

@@ -6,6 +6,19 @@ session. Settings are chosen for local[N] testing but are the same ones
 we would ship on a 1000-executor cluster (AQE on, Arrow on, UTC):
 only `shuffle.partitions` is environment-sized — on a real cluster it
 would be ~2-3× total cores or left to AQE's coalescing.
+
+Python workers run under ``demo_segmenter_spark.workerd``
+(``spark.python.daemon.module``), which starts ``pyspark.daemon`` with
+the JVM-added archives (pyspark.zip, the py4j zip, the spark-core jar)
+off ``sys.path``. Every Python task's ``setup_spark_files`` calls
+``importlib.invalidate_caches()``, and on Python 3.11 each zipimporter
+then re-reads its whole archive directory: measured on a 4-core box,
+125-284 ms per task alone and 300-450 ms with four tasks at once,
+against 0.1-0.2 ms with the archives off the path. The workers import
+the installed pyspark the driver uses instead. The daemon module must
+be importable by the workers, as the package already is for the UDFs
+it pickles by reference. Driver-owned sessions are left as they are;
+they opt in with the same conf.
 """
 
 from __future__ import annotations
@@ -46,6 +59,7 @@ def get_spark(
         # tests/test_plans.py pins that the rewrite actually fires.
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "demo_segmenter_spark.workerd")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

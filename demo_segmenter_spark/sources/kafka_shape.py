@@ -84,11 +84,9 @@ def _file_partition_counts(fpath: str, n_parts: int) -> list[int]:
     import numpy as np
     import pyarrow.parquet as pq
 
-    uid = (
-        pq.read_table(fpath, columns=["user_id"])
-        .column("user_id")
-        .to_numpy(zero_copy_only=False)
-    )
+    with pq.ParquetFile(fpath) as pf:
+        t = pf.read(columns=["user_id"])
+    uid = t.column("user_id").to_numpy(zero_copy_only=False)
     return np.bincount(uid % n_parts, minlength=n_parts).tolist()
 
 
@@ -122,11 +120,9 @@ def _partition_rows(
             if bases[i] >= end:
                 break
             off = bases[i]
-        names = pq.read_schema(fpath).names
-        ts_col = "ts_us" if "ts_us" in names else "ts"
-        t = pq.read_table(
-            fpath, columns=["event_id", ts_col, "user_id", "event_type", "value"]
-        )
+        with pq.ParquetFile(fpath) as pf:
+            ts_col = "ts_us" if "ts_us" in pf.schema_arrow.names else "ts"
+            t = pf.read(columns=["event_id", ts_col, "user_id", "event_type", "value"])
         ev = t.column("event_id").to_pylist()
         if ts_col == "ts_us":  # sink-written log: already µs longs
             ts = t.column("ts_us").to_pylist()
@@ -180,11 +176,9 @@ def _slice_record_batches(
             continue  # wholly before the range: never opened
         if lo_off >= end:
             break
-        names = pq.read_schema(fpath).names
-        ts_col = "ts_us" if "ts_us" in names else "ts"
-        t = pq.read_table(
-            fpath, columns=["event_id", ts_col, "user_id", "event_type", "value"]
-        )
+        with pq.ParquetFile(fpath) as pf:
+            ts_col = "ts_us" if "ts_us" in pf.schema_arrow.names else "ts"
+            t = pf.read(columns=["event_id", ts_col, "user_id", "event_type", "value"])
         uid = t.column("user_id").to_numpy(zero_copy_only=False)
         ft = t.filter(pa.array(uid % n_parts == part_id))
         # partition-local offset range inside this file

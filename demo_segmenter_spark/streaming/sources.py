@@ -54,13 +54,13 @@ def _events_raw_schema(sf_dir: str) -> tuple[T.StructType, bool]:
 
 def _stream_dir(sf_dir: str, name: str) -> str:
     """Spark's file-stream source requires a *directory*; the fixture is
-    one file per table. Build a /tmp symlink dir per (sf_dir, table) —
-    read-only on the fixture, idempotent, race-safe."""
-    import hashlib
+    one file per table. Build a scratch symlink dir per (sf_dir, table)
+    — read-only on the fixture, idempotent, race-safe."""
     import os
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    d = f"/tmp/dss_stream/{tag}/{name}"
+    from demo_segmenter_spark.functions.scratch import scratch_dir
+
+    d = f"{scratch_dir('stream', sf_dir)}/{name}"
     os.makedirs(d, exist_ok=True)
     link = f"{d}/{name}.parquet"
     if not os.path.lexists(link):

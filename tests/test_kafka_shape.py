@@ -212,14 +212,10 @@ def test_seek_skips_unneeded_files_and_caches_counts(spark, monkeypatch, tmp_pat
     ends = reader.latestOffset()
 
     opened: list[str] = []
-    real_read_table, real_read_schema = pqm.read_table, pqm.read_schema
+    real_parquet_file = pqm.ParquetFile
     monkeypatch.setattr(
-        pqm, "read_table",
-        lambda f, **kw: opened.append(str(f)) or real_read_table(f, **kw),
-    )
-    monkeypatch.setattr(
-        pqm, "read_schema",
-        lambda f, **kw: opened.append(str(f)) or real_read_schema(f, **kw),
+        pqm, "ParquetFile",
+        lambda f, **kw: opened.append(str(f)) or real_parquet_file(f, **kw),
     )
 
     # poll again: every file already counted, nothing re-opened

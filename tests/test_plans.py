@@ -101,13 +101,12 @@ def test_unpivot_is_single_scan_expand(spark):
 def test_partitioned_sink_prunes_partitions(spark):
     # lang-partitioned layout must make a lang filter a partition-pruning
     # scan (PartitionFilters), not a full read — the 100 TB routing story.
-    import hashlib
-
     from pyspark.sql import functions as F
 
+    from demo_segmenter_spark.functions.scratch import scratch_dir
     from demo_segmenter_spark.sources import load_table
 
-    out = f"/tmp/dss_sink/{hashlib.md5(SF_SMOKE.encode()).hexdigest()[:8]}/docs_by_lang"
+    out = f"{scratch_dir('sink', SF_SMOKE)}/docs_by_lang"
     docs = load_table(spark, SF_SMOKE, "documents")
     docs.write.mode("overwrite").partitionBy("lang").parquet(out)
     back = spark.read.parquet(out).filter(F.col("lang") == "en")
@@ -126,13 +125,12 @@ def test_dynamic_partition_pruning_fires(spark):
     # (With the filter ON the join column, constraint propagation
     # already yields the static PartitionFilters pinned above — DPP
     # is specifically the runtime version of that.)
-    import hashlib
-
     from pyspark.sql import functions as F
 
+    from demo_segmenter_spark.functions.scratch import scratch_dir
     from demo_segmenter_spark.sources import load_table
 
-    out = f"/tmp/dss_sink/{hashlib.md5(SF_SMOKE.encode()).hexdigest()[:8]}/docs_by_lang"
+    out = f"{scratch_dir('sink', SF_SMOKE)}/docs_by_lang"
     docs = load_table(spark, SF_SMOKE, "documents")
     docs.write.mode("overwrite").partitionBy("lang").parquet(out)
     fact = spark.read.parquet(out)
