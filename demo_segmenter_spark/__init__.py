@@ -13,10 +13,7 @@ Layout:
   functions/    — reusable column expressions (vector math, text, hashing)
   streaming/    — Structured Streaming twins (session_window, watermark)
   plans/        — plan-inspection helpers (pushdown/broadcast assertions)
-  workerd.py    — the Python worker daemon get_spark selects
+  launcher.sh   — the Python launcher get_spark sets as pythonExec
 
-Imports nothing: ``python -m demo_segmenter_spark.workerd`` runs this
-file before it has taken the JVM-added archives off ``sys.path``, and
-pyspark imported here would come from pyspark.zip. Import the registry
-from ``demo_segmenter_spark.registry``.
+Import the registry from ``demo_segmenter_spark.registry``.
 """

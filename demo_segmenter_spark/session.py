@@ -7,25 +7,44 @@ we would ship on a 1000-executor cluster (AQE on, Arrow on, UTC):
 only `shuffle.partitions` is environment-sized — on a real cluster it
 would be ~2-3× total cores or left to AQE's coalescing.
 
-Python workers run under ``demo_segmenter_spark.workerd``
-(``spark.python.daemon.module``), which starts ``pyspark.daemon`` with
-the JVM-added archives (pyspark.zip, the py4j zip, the spark-core jar)
-off ``sys.path``. Every Python task's ``setup_spark_files`` calls
-``importlib.invalidate_caches()``, and on Python 3.11 each zipimporter
-then re-reads its whole archive directory: measured on a 4-core box,
-125-284 ms per task alone and 300-450 ms with four tasks at once,
-against 0.1-0.2 ms with the archives off the path. The workers import
-the installed pyspark the driver uses instead. The daemon module must
-be importable by the workers, as the package already is for the UDFs
-it pickles by reference. Driver-owned sessions are left as they are;
-they opt in with the same conf.
+Every Python process a get_spark session starts (the worker daemon,
+the Python data-source planners, the streaming source runner) runs
+through ``launcher.sh``, set as ``sparkContext.pythonExec``, which
+pyspark reads whenever it wraps a function or DataSource. The launcher
+puts the package root first on ``PYTHONPATH``, so workers import the
+package from any cwd, and drops the archives the JVM puts first
+(pyspark.zip, the py4j zip, the spark-core jar). With them on the path,
+each task's ``importlib.invalidate_caches()`` makes every zipimporter
+re-read its archive (125-450 ms per task on a 4-core box, against
+0.1-0.2 ms), and each stream start imports pyspark from the zip
+(1.4-1.6 s, against 0.27-0.36 s from site-packages). If the driver
+cannot find pyspark and py4j without the archives, pythonExec is left
+as it is. Driver-owned sessions opt in with
+``spark.sparkContext.pythonExec = LAUNCHER``.
 """
 
 from __future__ import annotations
 
 import os
+import sys
+from importlib.machinery import PathFinder
 
 from pyspark.sql import SparkSession
+
+LAUNCHER = os.path.join(os.path.dirname(os.path.abspath(__file__)), "launcher.sh")
+
+
+def resolves_without_archives() -> bool:
+    """Whether pyspark and py4j resolve on ``sys.path`` with every jar
+    and the zips under ``$SPARK_HOME/python/lib`` taken off, as
+    ``launcher.sh`` takes them off the workers' path."""
+    home = os.environ.get("SPARK_HOME")
+    lib = os.path.join(home, "python", "lib") if home else None
+    kept = [
+        p for p in sys.path
+        if not (p.endswith(".jar") or (lib and p.endswith(".zip") and os.path.dirname(p) == lib))
+    ]
+    return all(PathFinder.find_spec(m, kept) for m in ("pyspark", "py4j"))
 
 
 def get_spark(
@@ -59,8 +78,9 @@ def get_spark(
         # tests/test_plans.py pins that the rewrite actually fires.
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.python.daemon.module", "demo_segmenter_spark.workerd")
     )
     spark = builder.getOrCreate()
+    if resolves_without_archives():
+        spark.sparkContext.pythonExec = LAUNCHER
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -71,16 +71,15 @@ def run_to_session_table(spark: SparkSession, out: DataFrame) -> DataFrame:
     wall); 4 partitions read 1.00 s with an identical session table
     (1 partition is WORSE — 1.29 s — the one big store commits
     single-threaded, so this is a right-sizing, not a minimize).
-    Env-overridable for production session cardinalities; the scan
-    side's parallelism is unaffected (file source + map-side partial
-    aggregation run at scan parallelism, guide §2.2)."""
-    import os
-
-    from demo_segmenter_spark.streaming.sources import stream_state_parts
+    The scan side's parallelism is unaffected (file source + map-side
+    partial aggregation run at scan parallelism, guide §2.2)."""
+    from demo_segmenter_spark.streaming.sources import (
+        SESSION_STATE_PARTS,
+        stream_state_parts,
+    )
 
     name = f"sessions_{uuid.uuid4().hex[:8]}"
-    parts = int(os.environ.get("SPARK_GRAFT_SESSION_STATE_PARTS", "4"))
-    with stream_state_parts(spark, parts=parts):
+    with stream_state_parts(spark, parts=SESSION_STATE_PARTS):
         q = (
             out.writeStream.format("memory")
             .queryName(name)

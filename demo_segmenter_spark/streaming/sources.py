@@ -209,15 +209,18 @@ def memsink_state_parts(spark: SparkSession) -> "stream_state_parts":
     identical); sessionize-class state (~48 k rows) measured BEST at 4
     (1 part is worse: one big store commits single-threaded). 4 is the
     robust right-size across both grid-bounded and session-scale
-    fixture state; production cardinalities override via env. Scan
-    parallelism is unaffected (file source + map-side partial
-    aggregation, guide §2.2); AQE cannot coalesce stateful streaming
-    exchanges, which is why this needs a knob at all."""
-    import os
+    fixture state. Scan parallelism is unaffected (file source +
+    map-side partial aggregation, guide §2.2); AQE cannot coalesce
+    stateful streaming exchanges, which is why this needs a count at
+    all."""
+    return stream_state_parts(spark, parts=MEMSINK_STATE_PARTS)
 
-    return stream_state_parts(
-        spark, parts=int(os.environ.get("SPARK_GRAFT_MEMSINK_STATE_PARTS", "4"))
-    )
+
+# State-partition counts, measured in the docstrings of their users:
+# run_to_session_table, memsink_state_parts and stream_state_parts.
+SESSION_STATE_PARTS = 4
+MEMSINK_STATE_PARTS = 4
+STREAM_STATE_PARTS = 1
 
 
 class stream_state_parts:
@@ -229,8 +232,7 @@ class stream_state_parts:
     scale — the scan side's parallelism is governed by the file
     source, and the map-side partial aggregation still runs at scan
     parallelism; only the bounded reduce/state layer narrows (guide
-    §2.2: fewer, larger reduce partitions). Override via
-    SPARK_GRAFT_STREAM_STATE_PARTS for stress runs.
+    §2.2: fewer, larger reduce partitions).
 
     Default 1 (round-12 pass 2, measured): for a ≤ few-hundred-row
     complete-mode state, every extra state partition is a per-batch
@@ -242,12 +244,8 @@ class stream_state_parts:
     their own partitioning)."""
 
     def __init__(self, spark: SparkSession, parts: int | None = None):
-        import os
-
         self.spark = spark
-        self.parts = parts or int(
-            os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS", "1")
-        )
+        self.parts = parts or STREAM_STATE_PARTS
 
     def __enter__(self):
         self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
