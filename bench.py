@@ -20,10 +20,10 @@ Measurement protocol (BASELINE.md):
 - Machine-contention stamps (loadavg + uptime before/after) ride in the
   JSON, so a bench captured on a loaded box is identifiable as such
   from the artifact itself instead of by re-execution.
-- The approximate-ANN queries are timed with
-  SPARK_GRAFT_ANN_INVARIANTS=0, i.e. the LSH-only subplan — their
-  correctness-mode exact-twin invariant pass is deliberately excluded
-  so the ANN timing reflects the approximate 100 TB story.
+- Every query is timed with the one plan its correctness check runs:
+  the approximate ANN and sketch queries return only their
+  approximate columns (their error bounds are checked against DuckDB,
+  registry.Bound), so there is no exact pass to exclude.
 """
 
 from __future__ import annotations
@@ -42,9 +42,8 @@ from demo_segmenter_spark.session import get_spark
 # Representative, scale-sensitive slice of SURVEY.md §2 across layers.
 # Round 2 widened the set from 20 to 26 (interval join, fuzzy dedup,
 # retrieval + rerank pipelines, KPI pipeline, BM25); round 4 adds the
-# two approximate-ANN queries (timed LSH-only, see ANN_LSH_ONLY);
-# round 5 adds c_sim_lsh_native (full plan — its exact verify IS the
-# pipeline, not an invariant pass, so there is nothing to exclude).
+# two approximate-ANN queries; round 5 adds c_sim_lsh_native (its
+# exact verify IS the pipeline).
 HEADLINE = [
     "a_flagship_segments",
     "a_session_agg",
@@ -173,11 +172,6 @@ HEADLINE = [
     "b_join_bloom_pushdown",
     "b_ivm_agg_stream",
 ]
-
-# Queries whose correctness mode embeds an exact-twin invariant pass;
-# bench times the approximate-only subplan (schema unchanged).
-ANN_LSH_ONLY = {"c_dedup_minhash", "c_sim_lsh"}
-
 
 # A run's SECONDARY timings are anchor-eligible only when that run's
 # HEADLINE median drift vs the then-committed minima was below this
@@ -338,19 +332,10 @@ def _machine_stamp() -> dict:
 def _run_once(name: str, spark, sf_dir: str) -> None:
     """One end-to-end execution through the noop sink (full computation,
     no driver-side collection cost), caches released afterwards."""
-    saved = os.environ.get("SPARK_GRAFT_ANN_INVARIANTS")
-    if name in ANN_LSH_ONLY:
-        os.environ["SPARK_GRAFT_ANN_INVARIANTS"] = "0"
     try:
         df = REGISTRY[name].fn(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
     finally:
-        # restore, don't pop: an operator-set value (e.g. forcing
-        # invariants ON for a full-plan bench) must survive this run
-        if saved is None:
-            os.environ.pop("SPARK_GRAFT_ANN_INVARIANTS", None)
-        else:
-            os.environ["SPARK_GRAFT_ANN_INVARIANTS"] = saved
         # queries that persist() intermediates must not leak cache
         # into later measurements (GC pressure skews the tail); the
         # spark arg also sweeps stray localCheckpoint RDD blocks

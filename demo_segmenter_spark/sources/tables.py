@@ -39,6 +39,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+def ensure_nanos_as_long(spark: SparkSession) -> None:
+    """Turn on ``spark.sql.legacy.parquet.nanosAsLong`` (TIMESTAMP(NANOS)
+    columns read as raw LongType nanos) unless it is already on. Sessions
+    built by session.py set it at build time, so the set here only fires
+    for DRIVER-OWNED sessions passed into __spark_entry__, and a
+    co-resident query in OUR sessions never sees a mid-job conf flip.
+    The one place a query path sets this flag (batch and stream events
+    loaders)."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    if spark.conf.get(key, "false") != "true":
+        spark.conf.set(key, "true")
+
+
 def _load_events(spark: SparkSession, path: str) -> DataFrame:
     """Normalize `events.ts` to a µs TimestampType whatever the fixture
     drop encoded: early drops wrote parquet TIMESTAMP(NANOS) (Spark 4
@@ -51,14 +64,7 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    # Sessions built by session.py already carry this conf (set once
-    # at build — see the builder comment); the guarded set below only
-    # fires for DRIVER-OWNED sessions passed into __spark_entry__, so
-    # a co-resident query in OUR sessions can never observe a mid-job
-    # conf flip.
-    key = "spark.sql.legacy.parquet.nanosAsLong"
-    if spark.conf.get(key, "false") != "true":
-        spark.conf.set(key, "true")
+    ensure_nanos_as_long(spark)
     raw = spark.read.parquet(path)
     ts_type = dict(raw.dtypes).get("ts")
     if ts_type == "timestamp":

@@ -13,6 +13,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from demo_segmenter_spark.sources.tables import ensure_nanos_as_long
+
+
 def _events_raw_schema(sf_dir: str) -> tuple[T.StructType, bool]:
     """File streams need an explicit schema, and the fixture's `ts`
     encoding has changed across drops (TIMESTAMP(NANOS) early, plain µs
@@ -99,7 +102,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events as an unbounded stream; same ts normalization as the batch
     loader (sources/tables.py): raw nanos → truncate to µs, µs NTZ →
     cast to session-TZ (UTC) TimestampType."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ensure_nanos_as_long(spark)
     schema, nanos = _events_raw_schema(sf_dir)
     raw = spark.readStream.schema(schema).parquet(_stream_dir(sf_dir, "events"))
     ts = (

@@ -8,9 +8,12 @@ tie ordering, fixed-round under-iteration) that sf0.001 cannot.
 Besides the prose summary, the sweep can write a machine-readable
 per-query JSON mirroring the driver's CORRECTNESS_r{N}.json schema
 (rows_match / schema_match / hash_match / spark_rows / oracle_rows /
-err). The driver's own file truncates at 50 alphabetical entries; the
-committed CORRECTNESS_self_r{N}_<sf>.json is the compensating control
-covering ALL registered queries.
+err). An approximate query (registry.Bound) is checked against its
+exact DuckDB answer instead of hashed; its entry records the bound
+checked and the measured recall and errors (``within_bound``). The
+driver's own file truncates at 50 alphabetical entries; the committed
+CORRECTNESS_self_r{N}_<sf>.json is the compensating control covering
+ALL registered queries.
 
 Usage: python scripts/full_oracle_sweep.py [sf_dir] [name-substrings] [out.json]
   name-substrings: comma-separated filter, or '' / '-' for all queries.
@@ -27,13 +30,9 @@ sys.path.insert(0, __file__.rsplit("/", 2)[0])
 import duckdb
 
 from demo_segmenter_spark.functions.cache import release_persisted
-from demo_segmenter_spark.registry import REGISTRY, load_all_operators
+from demo_segmenter_spark.registry import REGISTRY, check_bound, load_all_operators
 from demo_segmenter_spark.session import get_spark
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from demo_segmenter_spark.sources.tables import TABLES
 
 
 def main() -> None:
@@ -43,7 +42,7 @@ def main() -> None:
         only = sys.argv[2].split(",")
     out_json = sys.argv[3] if len(sys.argv) > 3 else None
     load_all_operators()
-    spark = get_spark(app_name="full_sweep", cpus="16", driver_memory="24g")
+    spark = get_spark(app_name="full_sweep")
     spark.sparkContext.setLogLevel("ERROR")
     names = [
         n for n in sorted(REGISTRY) if not only or any(s in n for s in only)
@@ -52,9 +51,9 @@ def main() -> None:
 
 
 def sweep(spark, sf_dir: str, names, out_json: str | None = None) -> int:
-    """Run each named query on Spark and its DuckDB oracle, print the
-    summary and BAD lines, optionally write the per-query JSON, and
-    return the BAD count."""
+    """Run each named query on Spark and its DuckDB oracle (or its
+    bound's exact SQL), print the summary and BAD lines, optionally
+    write the per-query JSON, and return the BAD count."""
     from tests.test_oracle import _normalize
 
     ddb = duckdb.connect()
@@ -62,7 +61,7 @@ def sweep(spark, sf_dir: str, names, out_json: str | None = None) -> int:
         ddb.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
-    bad, ok, rows_only = [], 0, 0
+    bad, ok, within = [], 0, 0
     report: dict[str, dict] = {}
     t_start = time.time()
     for name in names:
@@ -77,9 +76,19 @@ def sweep(spark, sf_dir: str, names, out_json: str | None = None) -> int:
             srows = sdf.collect()
             rec["spark_rows"] = len(srows)
             release_persisted(spark, owner=True)
-            if spec.oracle is None:
-                rec["err"] = "no_oracle"
-                rows_only += 1
+            if spec.bound is not None:
+                rel = ddb.execute(spec.bound.sql)
+                drows = rel.fetchall()
+                rec["oracle_rows"] = len(drows)
+                res = check_bound(
+                    spec.bound, srows, sdf.columns, drows, [d[0] for d in rel.description]
+                )
+                rec["schema_match"] = res.pop("schema_match")
+                rec["within_bound"] = res
+                if res["ok"]:
+                    within += 1
+                else:
+                    bad.append((name, "BOUND", res))
                 continue
             rel = ddb.execute(spec.oracle)
             dcols = [d[0] for d in rel.description]
@@ -99,7 +108,7 @@ def sweep(spark, sf_dir: str, names, out_json: str | None = None) -> int:
             bad.append((name, "ERROR", str(e)[:160]))
     print(
         f"sweep {sf_dir} done in {time.time() - t_start:.0f}s: "
-        f"{ok} hash-match, {rows_only} rows-only, {len(bad)} BAD"
+        f"{ok} hash-match, {within} within bound, {len(bad)} BAD"
     )
     for entry in bad:
         print("BAD:", entry)

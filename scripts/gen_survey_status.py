@@ -93,15 +93,14 @@ def main() -> None:
     ]
     for name, spec in sorted(REGISTRY.items()):
         first = (spec.doc.splitlines() or [""])[0].strip()
-        kind = "DuckDB hash" if spec.oracle else "rows-only"
+        kind = "DuckDB hash" if spec.oracle else "DuckDB bound"
         lines.append(f"| `{name}` | {kind} | {first} |")
     n_hash = sum(1 for s in REGISTRY.values() if s.oracle)
-    lines += [
-        "",
-        f"{len(REGISTRY)} queries registered; {n_hash} hash-checked. " + FOOTER,
-    ]
+    n_bound = sum(1 for s in REGISTRY.values() if s.bound)
+    counts = f"{len(REGISTRY)} queries registered; {n_hash} hash-checked, {n_bound} bound-checked."
+    lines += ["", counts + " " + FOOTER]
     open(survey, "w").write(head + "\n".join(lines) + "\n")
-    print(f"SURVEY.md §2.1 regenerated: {len(REGISTRY)} queries, {n_hash} hash-checked")
+    print(f"SURVEY.md §2.1 regenerated: {counts}")
 
 
 if __name__ == "__main__":

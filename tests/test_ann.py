@@ -1,6 +1,7 @@
 """Approximate-NN quality gates: the IVF and LSH variants must find a
-meaningful share of the exact brute-force top-k neighborhood (the
-rows-only driver check alone would accept garbage)."""
+meaningful share of the exact brute-force top-k neighborhood. (The
+registered recall bounds of c_sim_lsh and c_dedup_minhash are checked
+against DuckDB in tests/test_oracle.py::test_bound_holds.)"""
 
 from __future__ import annotations
 
@@ -66,36 +67,6 @@ def test_lsh_bounded_k(spark):
     df = REGISTRY["c_sim_lsh"].fn(spark, SF_SMOKE)
     per_q = df.groupBy("query_id").count().collect()
     assert all(r["count"] <= 3 for r in per_q)
-
-
-def test_lsh_recall_column_visible_and_high(spark):
-    # The SQL-visible invariant: one global recall@3 value on every row,
-    # deterministic under the fixed seed, >= 0.98 at fixture scale.
-    df = REGISTRY["c_sim_lsh"].fn(spark, SF_SMOKE)
-    vals = [r["recall_at3_vs_exact"] for r in df.select("recall_at3_vs_exact").distinct().collect()]
-    assert len(vals) == 1, vals
-    assert vals[0] >= 0.98, vals
-
-
-def test_ann_invariants_flag_preserves_schema(spark, monkeypatch):
-    # SPARK_GRAFT_ANN_INVARIANTS=0 must skip the exact-twin subplan
-    # (bench mode: time the LSH-only story) WITHOUT changing the
-    # result schema — invariant columns become NULL, nothing else moves.
-    for name in ("c_dedup_minhash", "c_sim_lsh"):
-        on = REGISTRY[name].fn(spark, SF_SMOKE)
-        monkeypatch.setenv("SPARK_GRAFT_ANN_INVARIANTS", "0")
-        off = REGISTRY[name].fn(spark, SF_SMOKE)
-        monkeypatch.delenv("SPARK_GRAFT_ANN_INVARIANTS")
-        assert off.schema.fieldNames() == on.schema.fieldNames(), name
-        assert [f.dataType for f in off.schema.fields] == [
-            f.dataType for f in on.schema.fields
-        ], name
-        inv = {"exact_dist", "recall_vs_exact", "recall_at3_vs_exact"}
-        rows = off.collect()
-        assert rows, name
-        for r in rows:
-            for c in inv & set(off.columns):
-                assert r[c] is None, (name, r)
 
 
 def test_lsh_native_recall_and_exactness(spark):
@@ -184,26 +155,6 @@ def test_kmeans_is_a_partition_and_refines(spark):
     iter0 = float((u @ seeds.T).max(axis=1).mean())
     final = sum(r["cos_sim"] for r in rows) / n
     assert final > iter0, (final, iter0)
-
-
-def test_minhash_invariant_columns(spark):
-    # Exact-path pairs (shingle Jaccard sim >= 0.4) must largely be
-    # found by MinHashLSH, and the per-pair exact_dist must agree with
-    # the LSH-reported vector distance. NOTE: the two sides use
-    # different shingle universes (HashingTF 2^18 binary buckets vs raw
-    # xxhash64 sets), so the bounds below are fixture-scale empirical —
-    # the CURRENT fixture measures recall exactly 1.0 and max gap
-    # ~0.0 — and must be re-measured if the fixture is regenerated
-    # (a pair near the 0.6 threshold or a bucket collision can move
-    # them without anything being wrong).
-    rows = REGISTRY["c_dedup_minhash"].fn(spark, SF_SMOKE).collect()
-    assert rows
-    recalls = {r["recall_vs_exact"] for r in rows}
-    assert len(recalls) == 1, recalls  # one global value on every row
-    assert recalls.pop() >= 0.95, rows
-    for r in rows:
-        if r["exact_dist"] is not None:
-            assert abs(r["exact_dist"] - r["jaccard_dist"]) <= 0.05, r
 
 
 def test_semdedup_kmeans_matches_numpy_reference(spark):

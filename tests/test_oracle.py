@@ -2,6 +2,8 @@
 (__spark_entry__.py docstring): for every registered query with an
 oracle, run the Spark DataFrame and the DuckDB SQL on sf0.001 and
 compare row count, column names, and values order-insensitively.
+Approximate queries are checked against their exact DuckDB answer
+within their registered bound (registry.Bound / check_bound).
 
 Floats are compared exactly after the queries' own rounding, with a
 tiny absolute tolerance only to flag genuine logic errors rather than
@@ -14,13 +16,18 @@ import math
 
 import pytest
 
-from demo_segmenter_spark.registry import REGISTRY, load_all_operators
+from demo_segmenter_spark.registry import (
+    REGISTRY,
+    Bound,
+    check_bound,
+    load_all_operators,
+)
 from tests.conftest import SF_SMOKE
 
 load_all_operators()
 
 ORACLE_QUERIES = sorted(n for n, s in REGISTRY.items() if s.oracle is not None)
-ROWS_ONLY_QUERIES = sorted(n for n, s in REGISTRY.items() if s.oracle is None)
+BOUND_QUERIES = sorted(n for n, s in REGISTRY.items() if s.bound is not None)
 
 
 def _normalize(rows, columns):
@@ -66,8 +73,40 @@ def test_oracle_match(name, spark, ddb):
     assert not mismatches, f"{name}: first mismatches {mismatches[:5]}"
 
 
-@pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)
-def test_rows_only_runs(name, spark):
+def test_every_query_has_one_check():
+    # a hash oracle or an error bound, never both, never neither
+    unchecked = [
+        n for n, s in REGISTRY.items() if (s.oracle is None) == (s.bound is None)
+    ]
+    assert not unchecked, unchecked
+
+
+@pytest.mark.parametrize("name", BOUND_QUERIES)
+def test_bound_holds(name, spark, ddb):
     spec = REGISTRY[name]
     sdf = spec.fn(spark, SF_SMOKE)
-    assert sdf.count() >= 0
+    rows = [tuple(r) for r in sdf.collect()]
+    cur = ddb.execute(spec.bound.sql)
+    e_rows = cur.fetchall()
+    assert rows and e_rows, f"{name}: empty result"
+    # schema_match: the query returns its approximate columns only —
+    # no exact twin, no error column
+    res = check_bound(spec.bound, rows, sdf.columns, e_rows, [c[0] for c in cur.description])
+    assert res["ok"], f"{name}: {res}"
+
+
+def test_check_bound_rules():
+    b = Bound(sql="", keys=("k",), recall=0.5, tol={"v": ("rel", 0.1), "w": ("abs", 1)})
+    exact = [(1, 10.0, 0), (2, 0.0, 5), (3, 7.0, 7)]
+    cols = ["k", "v", "w"]
+    res = check_bound(b, [(1, 10.5, 0.5), (2, 0.0, 5)], cols, exact, cols)
+    assert res["ok"] and res["recall"] == 2 / 3, res
+    assert res["err"] == {"v": 0.05, "w": 0.5}, res
+    # recall floor: one of three exact keys is below 0.5
+    assert not check_bound(b, [(1, 10.0, 0), (9, 1.0, 1)], cols, exact, cols)["ok"]
+    # rel tolerance is strict; a nonzero estimate of an exact 0 is inf
+    assert not check_bound(b, [(1, 11.0, 0), (2, 0.0, 5)], cols, exact, cols)["ok"]
+    assert not check_bound(b, [(1, 10.0, 0), (2, 0.1, 5)], cols, exact, cols)["ok"]
+    # abs tolerance, and a result that renames a column
+    assert not check_bound(b, [(1, 10.0, 1), (2, 0.0, 5)], cols, exact, cols)["ok"]
+    assert not check_bound(b, exact, ["k", "v", "x"], exact, cols)["ok"]

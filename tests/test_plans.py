@@ -839,12 +839,10 @@ def test_shuffle_budgets_table(spark):
         "b_source_xml": 1,
         "a_anomaly_zscore": 1,
         "c_sample_weighted": 1,
+        # per-nation sketch build + the per-region sketch union
         "b_agg_sketch_merge": 2,
-        # single aggregate since round 4: approx + exact twins +
-        # rel_err in one pass (was approx-agg JOIN exact-agg). Two
-        # exchanges because the exact COUNT(DISTINCT) twin needs the
-        # expand + regroup pair; the sketches alone would need one.
-        "b_agg_approx": 2,
+        # the HLL++ and percentile sketches share one priority aggregate
+        "b_agg_approx": 1,
         "c_multimodal_binaryfile": 0,
         "b_agg_top_k": 1,
         # 0 at fixture scale (broadcast); at 100 TB the blocking join
@@ -948,9 +946,12 @@ def test_shuffle_budgets_table(spark):
         # Layer C: the scalar/text surfaces are scan-local by design;
         # dedup/sim families carry their blocking-bounded exchanges
         "c_dedup_exact": 1,  # one hash groupBy — THE map-side-combine dedup
-        "c_dedup_minhash": 11,  # ml MinHashLSH internals (approxSimilarityJoin
-        # explodes + self-joins hash buckets); the certified native twin
-        # c_dedup_minhash_native does the same job in 2 — kept as the API row
+        # ml MinHashLSH approxSimilarityJoin: the bucket self-join
+        # broadcasts the persisted features at fixture sf, leaving the
+        # (datasetA, datasetB) pair distinct; above the broadcast
+        # threshold the bucket join shuffles both sides too. Kept as the
+        # API row next to the hash-certified c_dedup_minhash_native
+        "c_dedup_minhash": 1,
         "c_dedup_simhash": 2,  # band-key exchange + pair rollup (blocked)
         "c_dedup_cluster": 2,  # grouped-pairs form (r13): one (block,
         # shingle) exchange + the pair-count rollup; the old budget-1
@@ -959,7 +960,9 @@ def test_shuffle_budgets_table(spark):
         # stays bounded-driver.
         "c_sim_knn": 1,  # per-query rank window; query block broadcasts
         "c_sim_ivf": 3,  # cell assignment + probe rollup + rank window
-        "c_sim_lsh": 2,  # ml BucketedRandomProjectionLSH bucket join pair
+        # ml BucketedRandomProjectionLSH: the (datasetA, datasetB) pair
+        # distinct after the broadcast bucket join + the top-3 rank window
+        "c_sim_lsh": 2,
         "c_embed_centroids": 1,  # one label rollup (K×dim partials map-side)
         "c_embed_quantize": 0,  # pure map-side rewrite
         "c_chunking": 0,  # pinned shuffle-free in test_chunking_is_shuffle_free

@@ -246,6 +246,6 @@ def test_bpe_decode_round_trips_whole_corpus(spark):
     n_underscore = duckdb.sql(
         f"SELECT count(*) FROM (SELECT unnest(string_split(text, ' ')) t "
         f"FROM read_parquet('{SF_SMOKE}/documents.parquet')) "
-        "WHERE t LIKE '%\_%' ESCAPE '\\'"
+        "WHERE t LIKE '%\\_%' ESCAPE '\\'"
     ).fetchone()[0]
     assert n_underscore == 0
