@@ -29,3 +29,30 @@ def ddb():
         )
     yield con
     con.close()
+
+
+@pytest.fixture(scope="session")
+def bound_result(spark, ddb):
+    """``bound_result(name)`` -> (rows, cols, exact_rows, exact_cols) of a
+    bound-checked query at sf0.001: its Spark rows and the exact DuckDB
+    rows of its ``Bound.sql``. Memoized, so the checks of one query in
+    several modules run it and its reference once."""
+    from demo_segmenter_spark.registry import REGISTRY, load_all_operators
+
+    load_all_operators()
+    cache = {}
+
+    def get(name):
+        if name not in cache:
+            sdf = REGISTRY[name].fn(spark, SF_SMOKE)
+            cur = ddb.execute(REGISTRY[name].bound.sql)
+            exact = cur.fetchall()
+            cache[name] = (
+                [tuple(r) for r in sdf.collect()],
+                sdf.columns,
+                exact,
+                [c[0] for c in cur.description],
+            )
+        return cache[name]
+
+    return get

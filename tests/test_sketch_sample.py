@@ -2,7 +2,8 @@
 can't pin every property (probabilistic sampling, sketch internals):
 assert the invariants the docstrings promise. The error bounds of
 b_agg_approx and b_agg_sketch_merge are checked against DuckDB in
-tests/test_oracle.py::test_bound_holds."""
+tests/test_oracle.py::test_bound_holds; the two rel_err tests here
+recompute the same errors by hand, as a second reading of it."""
 
 from __future__ import annotations
 
@@ -10,6 +11,42 @@ from demo_segmenter_spark.registry import REGISTRY, load_all_operators
 from tests.conftest import SF_SMOKE
 
 load_all_operators()
+
+
+def _by_key(rows, cols, key):
+    return {r[cols.index(key)]: dict(zip(cols, r)) for r in rows}
+
+
+def test_sketch_merge_rel_err_bounded(bound_result):
+    # per region, the merged HLL estimate against DuckDB's exact count
+    rows, cols, e_rows, e_cols = bound_result("b_agg_sketch_merge")
+    approx = _by_key(rows, cols, "n_regionkey")
+    exact = _by_key(e_rows, e_cols, "n_regionkey")
+    assert approx, "no regions"
+    assert approx.keys() == exact.keys()
+    for k, r in approx.items():
+        n = exact[k]["approx_customers"]
+        assert n > 0
+        rel_err = abs(r["approx_customers"] - n) / n
+        assert rel_err < 0.05, (k, rel_err)
+
+
+def test_agg_approx_rel_err_bounded(bound_result):
+    # rsd=0.02 HLL and accuracy-10000 percentile on the fixture: both
+    # errors against DuckDB's count(DISTINCT) and quantile_cont(0.5)
+    # must stay well inside the sketch guarantees.
+    rows, cols, e_rows, e_cols = bound_result("b_agg_approx")
+    approx = _by_key(rows, cols, "o_orderpriority")
+    exact = _by_key(e_rows, e_cols, "o_orderpriority")
+    assert approx, "no priorities"
+    assert approx.keys() == exact.keys()
+    for k, r in approx.items():
+        n, med = exact[k]["approx_customers"], exact[k]["approx_median_price"]
+        assert n > 0
+        rel_err = abs(r["approx_customers"] - n) / n
+        median_rel_err = abs(r["approx_median_price"] - med) / med
+        assert rel_err <= 0.05, (k, rel_err)
+        assert median_rel_err <= 0.05, (k, median_rel_err)
 
 
 def test_weighted_sample_invariants(spark):
