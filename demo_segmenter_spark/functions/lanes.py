@@ -1,7 +1,8 @@
 """Block lanes — the small-input tier of the iterative operators.
 
 Several operator families (graph rounds, the embedding chains,
-tokenizer training, unigram EM, DoReMi weights, NN-descent) run an
+tokenizer training, unigram EM, DoReMi weights, NN-descent, the
+shingle-pair chain of the near-dup and n-gram eval queries) run an
 unrolled distributed chain of exchanges whose per-round data fits one
 task by orders of magnitude at fixture scale. Below a per-family row
 cap, ``block_lane`` coalesces the input into ONE partition and a
@@ -31,6 +32,13 @@ from demo_segmenter_spark.functions.compat import EPS
 # - emb, nd: corpus vectors (sf0.1 = 2 000 × 64 doubles ≈ 1 MB).
 # - tok: documents; uni: distinct words (the unigram DP's work unit).
 # - doremi: (domain, token) count rows — vocabulary × domains sized.
+# - shingle: documents. c_dedup_ngram on sf0.1 docs replicated into
+#   disjoint (lang, source) blocks, 4 cores, lane vs chain (best of 2
+#   warm runs): 5 k 0.84 vs 1.83 s, 20 k 1.77 vs 2.69 s, 50 k 3.72 vs
+#   5.59 s, 100 k 6.81 vs 8.64 s, 200 k 14.69 vs 22.62 s. The lane won
+#   at every size, so there is no crossover on 4 cores; the cap stops
+#   at 100 k because the lane is one core's work and the chain's share
+#   grows with the core count.
 CAPS: dict[str, int] = {
     "graph": 1_000_000,
     "emb": 20_000,
@@ -38,6 +46,7 @@ CAPS: dict[str, int] = {
     "uni": 200_000,
     "doremi": 500_000,
     "nd": 20_000,
+    "shingle": 100_000,
 }
 
 

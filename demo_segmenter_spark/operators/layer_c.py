@@ -101,12 +101,43 @@ def _shingles(text_col: str = "text", k: int = 3) -> F.Column:
     ).otherwise(F.slice(toks, 1, 0))
 
 
+def _shingle_hash_batch(texts, k: int = 3):
+    """(hashes, offsets) for a batch of texts: doc i's distinct k-token
+    shingles hashed to int64 are ``hashes[offsets[i]:offsets[i + 1]]``.
+    All shingle sets of the batch go through ONE pd.util.hash_array
+    call (fixed-key siphash, elementwise, so identical to hashing per
+    doc; sf0.1's 5 000 docs, 260 k shingles: 1.33 -> 0.28 s on one
+    core of a 4-core Xeon). Docs with fewer
+    than k tokens get an empty set. The one shingle hasher of the
+    chain UDF (_hashed_shingles) and the shingle block lane
+    (_doc_shingle_pairs), so both routes hash alike by construction."""
+    import numpy as np
+
+    flat: list[str] = []
+    sizes = np.zeros(len(texts), dtype=np.int64)
+    for i, t in enumerate(texts):
+        toks = t.split(" ")
+        n = len(toks)
+        if n < k:
+            continue
+        ss = {" ".join(toks[j : j + k]) for j in range(n - k + 1)}
+        flat.extend(ss)
+        sizes[i] = len(ss)
+    offsets = np.zeros(len(texts) + 1, dtype=np.int64)
+    np.cumsum(sizes, out=offsets[1:])
+    if not flat:
+        return np.empty(0, dtype=np.int64), offsets
+    hashes = pd.util.hash_array(np.array(flat, dtype=object)).view("int64")
+    return hashes, offsets
+
+
 def _hashed_shingles(text_col: str = "text", k: int = 3) -> F.Column:
     """Distinct k-token shingles as 64-bit hashes, computed per Arrow
-    batch in a pandas_udf (python set-build + pd.util.hash_array's
-    fixed-key siphash — deterministic across processes; array ORDER
-    varies with the worker's str-hash seed, which is fine because
-    every consumer explodes or min-reduces the array). Chosen over
+    batch in a pandas_udf (python set-build + one pd.util.hash_array
+    call per batch through _shingle_hash_batch — fixed-key siphash,
+    deterministic across processes; array ORDER varies with the
+    worker's str-hash seed, which is fine because every consumer
+    explodes or min-reduces the array). Chosen over
     the declarative transform(_shingles(), xxhash64) form on an
     interleaved full-query A/B: 2.1–2.5 s vs 2.8–3.1 s for
     c_dedup_ngram at sf0.1 — the per-shingle concat_ws/slice lambdas
@@ -118,22 +149,13 @@ def _hashed_shingles(text_col: str = "text", k: int = 3) -> F.Column:
     shingles, so engine parity is untouched (same argument as
     c_dedup_ngram's xxhash64 note), and set-of-hashes equals
     set-of-strings modulo 2⁻⁶⁴ collisions."""
-    import numpy as np
 
     @F.pandas_udf("array<long>")
     def _sh(text: pd.Series) -> pd.Series:
-        out = []
-        for t in text:
-            toks = t.split(" ")
-            n = len(toks)
-            if n < k:
-                out.append(np.array([], dtype="int64"))
-                continue
-            ss = {" ".join(toks[i : i + k]) for i in range(n - k + 1)}
-            out.append(
-                pd.util.hash_array(np.array(list(ss), dtype=object)).view("int64")
-            )
-        return pd.Series(out)
+        hashes, off = _shingle_hash_batch(text, k)
+        return pd.Series(
+            [hashes[off[i] : off[i + 1]] for i in range(len(text))]
+        )
 
     return _sh(text_col)
 
@@ -222,7 +244,9 @@ def _shingle_doc_table(docs: DataFrame, arr: F.Column) -> DataFrame:
 def _shingle_pairs(sh: DataFrame) -> DataFrame:
     """(doc_a, sza, doc_b, szb, inter) candidate pairs from a
     (doc_id, lang, source, sz, s) shingle table — the grouped-pairs
-    formulation that survives 100 TB, in TWO shuffles and one pass:
+    formulation that survives 100 TB, in TWO shuffles and one pass.
+    It is the distributed chain of _doc_shingle_pairs: below
+    CAPS["shingle"] docs the shingle block lane replays it in one task.
 
     1. ONE exchange keys the table by (block, shingle); document
        frequency comes from a window count over that partitioning and
@@ -280,6 +304,85 @@ def _shingle_pairs(sh: DataFrame) -> DataFrame:
     )
 
 
+_SHINGLE_PAIRS_SCHEMA = "doc_a long, doc_b long, inter long, sza int, szb int"
+
+
+def _shingle_pairs_kernel(batches):
+    """The shingle block lane: _shingle_pairs over (doc_id, lang,
+    source, text) docs replayed in numpy in one task. Each doc's
+    distinct 3-token shingles are hashed in one _shingle_hash_batch
+    call; the (block, hash) groups are found by one lexsort; groups
+    with df > SHINGLE_DF_CAP or fewer than 2 docs are dropped; each
+    kept group's i<j pairs come from triu_indices (docs sorted by id,
+    so doc_a < doc_b); one np.unique counts the pairs. sza/szb are the
+    FULL shingle-set sizes, as in _shingle_doc_table."""
+    import numpy as np
+
+    frames = [b for b in batches if len(b)]
+    if not frames:
+        return
+    pdf = pd.concat(frames, ignore_index=True).sort_values(
+        "doc_id", kind="stable"
+    )
+    ids = pdf["doc_id"].to_numpy(dtype=np.int64)
+    blocks = (
+        pdf.groupby(["lang", "source"], dropna=False, sort=False)
+        .ngroup()
+        .to_numpy(dtype=np.int64)
+    )
+    hashes, off = _shingle_hash_batch(pdf["text"].to_numpy(dtype=object))
+    sz = np.diff(off)
+    n = len(ids)
+    d = np.repeat(np.arange(n, dtype=np.int64), sz)
+    b = np.repeat(blocks, sz)
+    o = np.lexsort((d, hashes, b))
+    d, h, b = d[o], hashes[o], b[o]
+    first = np.ones(len(h), dtype=bool)
+    first[1:] = (h[1:] != h[:-1]) | (b[1:] != b[:-1])
+    starts = np.flatnonzero(first)
+    gsz = np.diff(np.append(starts, len(h)))
+    keep = (gsz >= 2) & (gsz <= SHINGLE_DF_CAP)
+    keys = [np.empty(0, dtype=np.int64)]
+    for g in np.unique(gsz[keep]):
+        st = starts[keep & (gsz == g)][:, None]
+        iu, ju = np.triu_indices(g, 1)
+        keys.append((d[st + iu] * n + d[st + ju]).ravel())
+    key, inter = np.unique(np.concatenate(keys), return_counts=True)
+    ia, ib = key // n, key % n
+    yield pd.DataFrame(
+        {
+            "doc_a": ids[ia],
+            "doc_b": ids[ib],
+            "inter": inter.astype(np.int64),
+            "sza": sz[ia].astype(np.int32),
+            "szb": sz[ib].astype(np.int32),
+        }
+    )
+
+
+def _doc_shingle_pairs(docs: DataFrame, spread_chain: bool = True) -> DataFrame:
+    """(doc_a, doc_b, inter, sza, szb) capped shingle pairs of a
+    (doc_id, lang, source, text) doc table, blocked by (lang, source).
+    Below CAPS["shingle"] docs the block lane (_shingle_pairs_kernel)
+    runs on the UNSPREAD docs in one task; above it the distributed
+    chain runs: spread, the hashed-shingle UDF, then _shingle_pairs'
+    two exchanges. Both return the same rows; every Jaccard and
+    containment stays in the callers' Spark expressions.
+    ``spread_chain=False`` keeps an already-partitioned (persisted)
+    input as it is, since spread's partition probe would execute it."""
+    blk = block_lane(
+        docs.select("doc_id", "lang", "source", "text"),
+        "shingle",
+        _shingle_pairs_kernel,
+        _SHINGLE_PAIRS_SCHEMA,
+    )
+    if blk is not None:
+        return blk
+    if spread_chain:
+        docs = spread(docs)
+    return _shingle_pairs(_shingle_doc_table(docs, _hashed_shingles()))
+
+
 # Candidate sets produced by blocking/banding are "few by construction"
 # per bucket (<= C(SHINGLE_DF_CAP, 2) each), but the number of BUCKETS
 # is corpus-sized, so a corpus with very many near-dup clusters can
@@ -333,12 +436,11 @@ def c_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Planted pair at j≈0.97; background soup pairs below 0.03.)
     Shingles travel as 64-bit siphash longs (_hashed_shingles): same
     exact Jaccard (collisions vanishingly rare at 2^64), ~5x narrower
-    shuffle rows."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    sh = _shingle_doc_table(
-        docs, _hashed_shingles()
-    )
-    pairs = _shingle_pairs(sh)
+    shuffle rows. Below CAPS["shingle"] docs the pairs come from the
+    shingle block lane (_doc_shingle_pairs): the same rows from one
+    mapInPandas task and zero exchanges; the Jaccard filter and
+    rounding stay here either way."""
+    pairs = _doc_shingle_pairs(load_table(spark, sf_dir, "documents"))
     jac = F.col("inter") * 1.0 / (F.col("sza") + F.col("szb") - F.col("inter"))
     return (
         pairs.filter(jac >= 0.5)
@@ -2599,10 +2701,7 @@ def c_pipeline_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
-    sh = _shingle_doc_table(
-        ex, _hashed_shingles()
-    )
-    pairs = _shingle_pairs(sh)
+    pairs = _doc_shingle_pairs(ex, spread_chain=False)
     jac = F.col("inter") * 1.0 / (F.col("sza") + F.col("szb") - F.col("inter"))
     neardup = pairs.filter(jac >= 0.5).select("doc_b").distinct()
     kept = ex.join(
@@ -7988,14 +8087,13 @@ def c_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     arbitrarily low, so symmetric near-dup passes keep both copies.
     This is the quote/excerpt/boilerplate-wrapper case every web
     corpus hits. Candidates come from the SAME capped (block,
-    shingle) machinery as c_dedup_ngram (_shingle_pairs — two
-    shuffles, pair space bounded by C(cap,2) per shingle); emitting
+    shingle) machinery as c_dedup_ngram (_doc_shingle_pairs — the
+    shingle block lane, or two shuffles above its cap; pair space
+    bounded by C(cap,2) per shingle either way); emitting
     both ratios lets downstream policy distinguish subset (high C,
     low J) from mirror (high both). The containment gate divides
     exact integers — identical IEEE on both engines."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    sh = _shingle_doc_table(docs, _hashed_shingles())
-    pairs = _shingle_pairs(sh)
+    pairs = _doc_shingle_pairs(load_table(spark, sf_dir, "documents"))
     cont = F.col("inter") * 1.0 / F.least(F.col("sza"), F.col("szb"))
     jac = F.col("inter") * 1.0 / (F.col("sza") + F.col("szb") - F.col("inter"))
     return (
@@ -12344,9 +12442,9 @@ def c_eval_rouge(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-partial rollup per n; the overlap join shuffles on the
     gram within candidate pairs only — pair-bounded, not
     corpus-quadratic."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    sh = _shingle_doc_table(docs, _hashed_shingles())
-    pairs = persist(_shingle_pairs(sh).select("doc_a", "doc_b"))
+    raw = load_table(spark, sf_dir, "documents")
+    docs = spread(raw)
+    pairs = persist(_doc_shingle_pairs(raw).select("doc_a", "doc_b"))
     toks = F.split("text", " ")
     g1 = docs.select("doc_id", F.explode(toks).alias("g"))
     g2 = docs.select(
@@ -12727,9 +12825,9 @@ def c_eval_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines round the (always-negative) exponent identically.
     Scale: identical to c_eval_rouge — gram rollups map-side, the
     overlap join bounded by the capped-shingle candidate pairs."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    sh = _shingle_doc_table(docs, _hashed_shingles())
-    pairs = persist(_shingle_pairs(sh).select("doc_a", "doc_b"))
+    raw = load_table(spark, sf_dir, "documents")
+    docs = spread(raw)
+    pairs = persist(_doc_shingle_pairs(raw).select("doc_a", "doc_b"))
     toks = F.split("text", " ")
     g1 = docs.select("doc_id", F.explode(toks).alias("g"))
     g2 = docs.select(
@@ -13658,7 +13756,8 @@ def c_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: three hash-keyed aggregates + the capped pair join — the
     standalone families' plans, composed; the report itself is 3
     rows."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
+    raw = load_table(spark, sf_dir, "documents")
+    docs = spread(raw)
     sw = ("the", "a", "of", "and", "to", "in")
     n_docs = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
 
@@ -13683,8 +13782,7 @@ def c_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "normalized",
     )
-    sh = _shingle_doc_table(docs, _hashed_shingles())
-    pairs = _shingle_pairs(sh)
+    pairs = _doc_shingle_pairs(raw)
     j = F.col("inter") * 1.0 / (
         F.col("sza") + F.col("szb") - F.col("inter")
     )

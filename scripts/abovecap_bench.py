@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Above-cap fixture bench (round-13, verdict r12 ask #1): build a
 fixture that sits ABOVE the block-lane caps — embeddings replicated to
-26 k vectors (> lanes.CAPS emb / nd = 20 k) and lineitem replicated
+26 k vectors (> lanes.CAPS emb / nd = 20 k), lineitem replicated
 so the graph queries see > lanes.CAPS graph = 1 M distinct
-edges — and run the gated families on it with NO cap overrides, so the
+edges, and documents replicated to 125 k docs (> lanes.CAPS shingle =
+100 k) in disjoint (lang, source) blocks — and run the gated families on it with NO cap overrides, so the
 lane gates route to the distributed chains naturally and those chains
 get timed (not just row-identity-tested) every round.
 
@@ -49,6 +50,14 @@ EMB_QUERIES = [
     "c_sim_graph_search",
     "c_sim_graph_layers",
 ]
+SHINGLE_QUERIES = [
+    "c_dedup_ngram",
+    "c_pipeline_corpus",
+    "c_dedup_containment",
+    "c_eval_rouge",
+    "c_eval_bleu",
+    "c_dedup_report",
+]
 GRAPH_QUERIES = [
     "b_graph_pagerank",
     "b_graph_components",
@@ -93,6 +102,26 @@ def build_fixture() -> dict:
     li2 = pa.concat_tables(parts)
     pq.write_table(li2, f"{FIX}/lineitem.parquet")
     counts["lineitem"] = li2.num_rows
+    # documents x25 = 125k docs: offset doc_id, and a per-copy source
+    # suffix puts each copy in its own (lang, source) blocks, so the
+    # shingle pairs grow linearly with the copies
+    t = pq.read_table(f"{SRC}/documents.parquet")
+    stride = pc.max(t.column("doc_id")).as_py() + 1
+    di = t.schema.get_field_index("doc_id")
+    si = t.schema.get_field_index("source")
+    parts = [
+        t.set_column(
+            di, "doc_id", pc.add(t.column("doc_id"), r * stride)
+        ).set_column(
+            si,
+            "source",
+            pc.binary_join_element_wise(t.column("source"), f"_r{r}", ""),
+        )
+        for r in range(25)
+    ]
+    docs = pa.concat_tables(parts)
+    pq.write_table(docs, f"{FIX}/documents.parquet")
+    counts["documents"] = docs.num_rows
     # everything else links to the sf0.1 originals
     for name in (
         "region",
@@ -102,7 +131,6 @@ def build_fixture() -> dict:
         "part",
         "orders",
         "events",
-        "documents",
     ):
         os.symlink(f"{SRC}/{name}.parquet", f"{FIX}/{name}.parquet")
     return counts
@@ -118,7 +146,7 @@ def main() -> None:
         cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"),
         driver_memory=os.environ.get("SPARK_GRAFT_MEM", "48g"),
     )
-    names = EMB_QUERIES + GRAPH_QUERIES
+    names = EMB_QUERIES + GRAPH_QUERIES + SHINGLE_QUERIES
     doc = {
         "mode": "above_cap_natural_gating",
         "fixture_rows": counts,

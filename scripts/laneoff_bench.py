@@ -81,6 +81,13 @@ LANE_QUERIES = [
     "c_sim_nndescent",
     "c_sim_graph_search",
     "c_sim_graph_layers",
+    # shingle-pair lane
+    "c_dedup_ngram",
+    "c_pipeline_corpus",
+    "c_dedup_containment",
+    "c_eval_rouge",
+    "c_eval_bleu",
+    "c_dedup_report",
 ]
 
 

@@ -49,13 +49,21 @@ LANE_QUERIES = {
     "uni": ["c_token_unigram", "c_token_unigram_encode"],
     "doremi": ["c_mix_doremi"],
     "nd": ["c_sim_nndescent"],
+    "shingle": [
+        "c_dedup_ngram",
+        "c_pipeline_corpus",
+        "c_dedup_containment",
+        "c_eval_rouge",
+        "c_eval_bleu",
+        "c_dedup_report",
+    ],
 }
 
 # Families whose lane shows in the returned plan as a MapInPandas node
 # that the distributed chain lacks. The unigram lane's output is
 # persisted and the NN-descent graph is a local checkpoint, so their
 # plans do not show the route taken.
-ROUTE_IN_PLAN = {"graph", "emb", "tok", "doremi"}
+ROUTE_IN_PLAN = {"graph", "emb", "tok", "doremi", "shingle"}
 
 
 def _run(spark, name):

@@ -427,8 +427,9 @@ def test_shuffle_budgets_table(spark):
         # hard negatives: scored-scan window (its subtree re-read on
         # the pos and neg sides of the final join; AQE reuses)
         "c_mine_hard_negatives": 4,
-        # containment: shares _shingle_pairs' two-shuffle bound
-        "c_dedup_containment": 2,
+        # containment: the shingle block lane, zero exchanges;
+        # distributed chain 2 (_shingle_pairs' two-shuffle bound)
+        "c_dedup_containment": 0,
         # paragraph dedup: block-hash keep window + per-doc rollup —
         # the exact two-shuffle scrub (blocking is map-only slices)
         "c_dedup_paragraph": 2,
@@ -529,9 +530,10 @@ def test_shuffle_budgets_table(spark):
         # stickiness: user-day dedup, x30 expand day-key exchange,
         # two day-sized aggregates
         "a_stickiness": 6,
-        # rouge: pair gen (2) + two gram-count rollups + overlap join
-        # + totals joins — all pair-/gram-bounded
-        "c_eval_rouge": 16,
+        # rouge: two gram-count rollups + overlap join + totals joins —
+        # all pair-/gram-bounded; the pairs come from the shingle block
+        # lane (distributed chain 16)
+        "c_eval_rouge": 12,
         # whitening: the two PCA component chains' static repeats
         # (persisted — runtime once) + the 5-scalar moment aggregate
         "c_embed_whitening": 95,
@@ -547,7 +549,8 @@ def test_shuffle_budgets_table(spark):
         # + the per-user rollups
         "a_bot_score": 8,
         # BLEU: the rouge pair/gram machinery + the wide pivot
-        "c_eval_bleu": 20,
+        # (shingle block lane; distributed chain 20)
+        "c_eval_bleu": 16,
         # blocklist: hit-position join rides the doc key + one rollup
         "c_safety_blocklist": 2,
         # normalized exact dedup: one hash-keyed groupBy (persisted
@@ -586,8 +589,9 @@ def test_shuffle_budgets_table(spark):
         # doc rollup
         "c_chunk_dedup": 2,
         # dedup report: three family plans composed (hash groupBys +
-        # the capped pair join) into a 3-row union
-        "c_dedup_report": 11,
+        # the capped pair join) into a 3-row union; the pairs come
+        # from the shingle block lane (distributed chain 11)
+        "c_dedup_report": 5,
         # cart abandonment: ONE user exchange carries the next-buy
         # carry window; per-day rollup
         "a_cart_abandonment": 3,
@@ -621,11 +625,11 @@ def test_shuffle_budgets_table(spark):
         "c_dataset_interleave": 3,
         "c_text_tfidf": 5,
         "c_quality_unigram_lp": 4,
-        # two shuffles by design: one exchange on (block, shingle)
-        # shared by the df window and the group collect, then the
-        # (doc_a, doc_b) pair count; sizes ride in structs — no
-        # self-join, no doc-level sizes joins
-        "c_dedup_ngram": 2,
+        # shingle block lane: zero exchanges; distributed chain 2 (one
+        # exchange on (block, shingle) shared by the df window and the
+        # group collect, then the (doc_a, doc_b) pair count; sizes ride
+        # in structs — no self-join, no doc-level sizes joins)
+        "c_dedup_ngram": 0,
         # one band-key exchange shared by the df window and the bucket
         # collect, one (doc_a, doc_b) pair count; the exact-verify
         # joins broadcast the candidate set (no corpus shuffle)
@@ -995,8 +999,9 @@ def test_shuffle_budgets_table(spark):
         "c_multimodal_frames": 0,  # frame sampling is per-row explode
         "c_udf_surface": 1,  # the GROUPED_AGG key exchange
         "c_udtf_bigrams": 0,  # UDTF lateral explode is map-side
-        "c_pipeline_corpus": 6,  # gate (0) + dedup rollup + lang windows +
-        # report rollups — each stage's standalone budget, fused
+        "c_pipeline_corpus": 2,  # gate (0) + dedup window + lang rollup;
+        # the near-dup pairs come from the shingle block lane
+        # (distributed chain 6: + the pair exchanges and anti-join)
         "c_pipeline_rerank": 1,  # candidate rank window; features broadcast
         # SemDeDup on trained clusters: the k-means training chain (the
         # c_sim_kmeans subtrees, persisted — runtime pays each once) +

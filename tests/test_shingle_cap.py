@@ -9,6 +9,10 @@ Three contracts:
    bounds the candidate pair count (no k² blowup) while a planted
    high-Jaccard pair still surfaces.
 3. The planted fixture pair (j≈0.97) survives the cap.
+
+The shingle block lane (_doc_shingle_pairs below CAPS["shingle"])
+and the distributed chain return the same pairs on the hot corpus and
+on the cap and short-doc edges.
 """
 
 from __future__ import annotations
@@ -16,8 +20,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from demo_segmenter_spark.functions import lanes
 from demo_segmenter_spark.operators.layer_c import (
     SHINGLE_DF_CAP,
+    _doc_shingle_pairs,
     _shingle_doc_table,
     _shingle_pairs,
     _shingles,
@@ -120,6 +126,70 @@ def test_hot_shingle_bounded_candidates(spark, hot_corpus):
         (F.col("doc_a") == 1000) & (F.col("doc_b") == 1001)
     ).first()
     assert planted is not None and planted.inter == 40
+
+
+def _pairs_both_routes(monkeypatch, docs):
+    """Sorted (doc_a, doc_b, inter, sza, szb) rows of _doc_shingle_pairs
+    with the shingle lane on, checked equal to the chain's."""
+    from demo_segmenter_spark.plans.inspect import explain_str
+
+    lane = _doc_shingle_pairs(docs)
+    assert "MapInPandas" in explain_str(lane)
+    got = sorted(tuple(r) for r in lane.collect())
+    with monkeypatch.context() as m:
+        m.setitem(lanes.CAPS, "shingle", -1)
+        chain = _doc_shingle_pairs(docs)
+        assert "MapInPandas" not in explain_str(chain)
+        ref = sorted(tuple(r) for r in chain.collect())
+    assert got == ref
+    return got
+
+
+def test_hot_shingle_lane_matches_chain(spark, monkeypatch, hot_corpus):
+    rows = _pairs_both_routes(monkeypatch, hot_corpus)
+    assert sum(r[2] for r in rows) < 100
+    assert (1000, 1001, 40, 40, 41) in rows
+
+
+def _shared_shingle_corpus(spark, n_docs):
+    """n_docs docs of one block sharing exactly one shingle ("hot a b"),
+    each followed by unique filler tokens."""
+    rows = [
+        (d, "hot a b " + " ".join(f"u{d}w{j}" for j in range(3)), "en", "web")
+        for d in range(n_docs)
+    ]
+    return spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string"
+    )
+
+
+def test_group_of_exactly_cap_docs_is_kept(spark, monkeypatch):
+    rows = _pairs_both_routes(
+        monkeypatch, _shared_shingle_corpus(spark, SHINGLE_DF_CAP)
+    )
+    assert len(rows) == SHINGLE_DF_CAP * (SHINGLE_DF_CAP - 1) // 2
+    assert {r[2:] for r in rows} == {(1, 4, 4)}
+
+
+def test_group_above_cap_is_dropped(spark, monkeypatch):
+    rows = _pairs_both_routes(
+        monkeypatch, _shared_shingle_corpus(spark, SHINGLE_DF_CAP + 1)
+    )
+    assert rows == []
+
+
+def test_short_doc_adds_no_shingles(spark, monkeypatch):
+    from demo_segmenter_spark.operators.layer_c import _shingle_hash_batch
+
+    texts = ["a b", "a b c", "a b c d", "a b"]
+    hashes, off = _shingle_hash_batch(texts)
+    assert off.tolist() == [0, 0, 1, 3, 3] and len(hashes) == 3
+    docs = spark.createDataFrame(
+        [(i, t, "en", "web") for i, t in enumerate(texts)],
+        "doc_id long, text string, lang string, source string",
+    )
+    # the two identical 2-token docs share no shingle, hence no pair
+    assert _pairs_both_routes(monkeypatch, docs) == [(1, 2, 1, 1, 2)]
 
 
 def test_minhash_signature_rows_are_independent(spark):
