@@ -20,6 +20,27 @@ an append-only directory of parquet files:
   proves continuation across two runs with log growth in between, and
   replay-from-arbitrary-offset via direct partitions()/read() calls).
 
+Triggers: Spark runs ``trigger(availableNow=True)`` to the end only
+for sources implementing ``SupportsTriggerAvailableNow``, which the
+Python DataSource API does not expose. An availableNow query on this
+source therefore runs ONE batch per start, up to the log end seen when
+it plans (Spark warns "this may not guarantee processing new data if
+there is an uncommitted batch"). A restart after a crash between the
+sink write and the checkpoint commit replays the uncommitted batch
+with its planned offsets and stops; rows appended meanwhile wait for
+the next start (pinned in tests/test_kafka_shape.py). Nothing is lost
+or read twice, but such a drain takes two starts.
+
+Driver-side methods (``initialOffset / latestOffset / partitions /
+commit``) run in a fresh ``python_streaming_source_runner`` process per
+stream start, so they must not load pandas (a 0.25-0.35 s import paid
+on every start). Arrow loads it behind the scenes in
+``ChunkedArray.to_numpy``, ``pa.array`` over a numpy array or a Python
+list, and ``pq.read_table`` (through ``pyarrow.dataset``); use
+``pq.ParquetFile`` and ``np.frombuffer`` over the column buffers there.
+The executor read path is exempt: its reused workers pay the import
+once.
+
 Scale note: ``partitions()`` plans one InputPartition per log
 partition per batch — executors read only their slice, nothing
 funnels through the driver (the driver touches metadata only: file
@@ -80,14 +101,26 @@ def _file_partition_counts(fpath: str, n_parts: int) -> list[int]:
     """Rows per log partition inside one committed file (user_id scan
     only, vectorized bincount). Committed files are immutable (atomic
     rename, append-only log), so callers may cache the result
-    forever."""
+    forever. Pandas-free (see the module docstring): each chunk is
+    viewed in place over its int64 data buffer."""
     import numpy as np
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     with pq.ParquetFile(fpath) as pf:
-        t = pf.read(columns=["user_id"])
-    uid = t.column("user_id").to_numpy(zero_copy_only=False)
-    return np.bincount(uid % n_parts, minlength=n_parts).tolist()
+        col = pf.read(columns=["user_id"]).column("user_id")
+    counts = np.zeros(n_parts, dtype=np.int64)
+    for chunk in col.chunks:
+        if chunk.null_count:
+            raise TypeError(f"{fpath}: 'user_id' has {chunk.null_count} nulls")
+        if chunk.type != pa.int64():
+            chunk = chunk.cast(pa.int64())
+        uid = np.frombuffer(
+            chunk.buffers()[1], dtype=np.int64, count=len(chunk),
+            offset=chunk.offset * 8,
+        )
+        counts += np.bincount(uid % n_parts, minlength=n_parts)
+    return counts.tolist()
 
 
 def _partition_rows(

@@ -11,7 +11,10 @@ from pyspark.sql import DataFrame
 
 def write_stream_parquet(df: DataFrame, out_dir: str, checkpoint_dir: str):
     """Append a streaming DataFrame to parquet, exactly-once via the
-    file-sink commit log; runs to completion with AvailableNow."""
+    file-sink commit log, under an AvailableNow trigger. A Python
+    DataSource such as ``events_log`` gets Spark's fallback of one
+    batch per start, so a start that replays an uncommitted batch
+    leaves appended rows to the next start (sources/kafka_shape.py)."""
     return (
         df.writeStream.format("parquet")
         .option("path", out_dir)

@@ -14,6 +14,9 @@ stride lesson). Writes ABOVECAP_r13.json with per-query seconds and
 the fixture row counts.
 
 Usage: python scripts/abovecap_bench.py [out.json] [runs]
+
+The session takes get_spark's defaults (``SPARK_GRAFT_CPUS`` cores,
+else all of them; a 16 g driver).
 """
 
 from __future__ import annotations
@@ -141,11 +144,7 @@ def main() -> None:
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     counts = build_fixture()
     load_all_operators()
-    spark = get_spark(
-        app_name="abovecap_bench",
-        cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"),
-        driver_memory=os.environ.get("SPARK_GRAFT_MEM", "48g"),
-    )
+    spark = get_spark(app_name="abovecap_bench")
     names = EMB_QUERIES + GRAPH_QUERIES + SHINGLE_QUERIES
     doc = {
         "mode": "above_cap_natural_gating",

@@ -20,7 +20,8 @@ Usage:
 
 ``--oracle`` runs full_oracle_sweep's per-query DuckDB check over
 LANE_QUERIES instead, lanes forced off, and exits non-zero on any BAD
-query.
+query. The session takes get_spark's defaults (``SPARK_GRAFT_CPUS``
+cores, else all of them; a 16 g driver).
 """
 
 from __future__ import annotations
@@ -112,11 +113,7 @@ def main() -> None:
     runs = int(sys.argv[3]) if len(sys.argv) > 3 else 2
 
     load_all_operators()
-    spark = get_spark(
-        app_name="laneoff_bench",
-        cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"),
-        driver_memory=os.environ.get("SPARK_GRAFT_MEM", "48g"),
-    )
+    spark = get_spark(app_name="laneoff_bench")
     with lanes_off():
         if oracle:
             from full_oracle_sweep import sweep

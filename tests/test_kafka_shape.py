@@ -9,24 +9,36 @@ The scenarios mirror what you'd demo against a real broker:
 2. a fresh checkpoint replays the whole log from offset 0;
 3. partitions(start, end) + read() slice exactly [start, end) per
    partition in stable append order (seek-to-offset replay);
-4. partitioning is user_id % n — per-user ordering within a partition.
+4. partitioning is user_id % n — per-user ordering within a partition;
+5. an availableNow start runs one batch (Spark's fallback for Python
+   sources): a restart replays an uncommitted batch and the next start
+   picks up what was appended meanwhile;
+6. the reader's driver-side methods never load pandas, since they run
+   in a fresh source-runner process per stream start.
 """
 
 from __future__ import annotations
 
+import json
 import os
-import shutil
-import uuid
+import subprocess
+import sys
 
+import numpy as np
+import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from demo_segmenter_spark.sources.kafka_shape import (
     US_SCALE,
     EventsLogStreamReader,
+    _file_partition_counts,
     _partition_rows,
     register,
 )
 from tests.conftest import SF_SMOKE
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 N_PARTS = 4
 
@@ -67,10 +79,9 @@ def _run_once(spark, log_dir, ckpt, out_dir):
     q.awaitTermination()
 
 
-def test_offset_continuation_and_replay(spark):
-    base = f"/tmp/dss_kafka_shape/{uuid.uuid4().hex[:8]}"
+def test_offset_continuation_and_replay(spark, tmp_path):
+    base = str(tmp_path)
     log_dir, ckpt, out_dir = f"{base}/log", f"{base}/ckpt", f"{base}/out"
-    shutil.rmtree(base, ignore_errors=True)
     n_a, chunk_b = _split_fixture(log_dir)
     register(spark)
 
@@ -94,7 +105,7 @@ def test_offset_continuation_and_replay(spark):
     assert spark.read.parquet(out2).count() == n_a + chunk_b.num_rows
 
 
-def test_mid_stream_kill_restart_exactly_once(spark):
+def test_mid_stream_kill_restart_exactly_once(spark, tmp_path):
     """Kill between micro-batches, not at drain: a LIVE query
     (processingTime trigger) consumes appends as they land; stop() is
     issued right after a third append with no drain barrier — the stop
@@ -104,9 +115,8 @@ def test_mid_stream_kill_restart_exactly_once(spark):
     the kill interrupted is lost."""
     import time
 
-    base = f"/tmp/dss_kafka_shape/{uuid.uuid4().hex[:8]}"
+    base = str(tmp_path)
     log_dir, ckpt, out_dir = f"{base}/log", f"{base}/ckpt", f"{base}/out"
-    shutil.rmtree(base, ignore_errors=True)
 
     t = pq.read_table(f"{SF_SMOKE}/events.parquet")
     third = t.num_rows // 3
@@ -159,12 +169,10 @@ def test_mid_stream_kill_restart_exactly_once(spark):
     assert got.select("event_id").distinct().count() == t.num_rows  # no re-read
 
 
-def test_seek_to_offset_slices(spark):
+def test_seek_to_offset_slices(spark, tmp_path):
     """partitions(start, end)/read() == a consumer seeking to an
     arbitrary offset — replay is exact and stable."""
-    base = f"/tmp/dss_kafka_shape/{uuid.uuid4().hex[:8]}"
-    log_dir = f"{base}/log"
-    shutil.rmtree(base, ignore_errors=True)
+    log_dir = str(tmp_path / "log")
     _split_fixture(log_dir)
 
     reader = EventsLogStreamReader(
@@ -235,13 +243,11 @@ def test_seek_skips_unneeded_files_and_caches_counts(spark, monkeypatch, tmp_pat
     assert opened and all("chunk_2" in f for f in opened)
 
 
-def test_arrow_read_matches_scalar_reference(spark):
+def test_arrow_read_matches_scalar_reference(spark, tmp_path):
     """The vectorized Arrow read path must yield EXACTLY the rows and
     offsets of the scalar _partition_rows reference — full replay and
     arbitrary offset windows."""
-    base = f"/tmp/dss_kafka_shape/{uuid.uuid4().hex[:8]}"
-    log_dir = f"{base}/log"
-    shutil.rmtree(base, ignore_errors=True)
+    log_dir = str(tmp_path / "log")
     n_a, chunk_b = _split_fixture(log_dir)
     pq.write_table(chunk_b, f"{log_dir}/chunk_b.parquet")
 
@@ -264,10 +270,8 @@ def test_arrow_read_matches_scalar_reference(spark):
             assert got, "window unexpectedly empty"
 
 
-def test_empty_range_plans_no_partitions(spark):
-    base = f"/tmp/dss_kafka_shape/{uuid.uuid4().hex[:8]}"
-    log_dir = f"{base}/log"
-    shutil.rmtree(base, ignore_errors=True)
+def test_empty_range_plans_no_partitions(spark, tmp_path):
+    log_dir = str(tmp_path / "log")
     _split_fixture(log_dir)
     reader = EventsLogStreamReader(
         {"path": log_dir, "partitions": str(N_PARTS)}
@@ -276,16 +280,15 @@ def test_empty_range_plans_no_partitions(spark):
     assert reader.partitions(ends, ends) == []
 
 
-def test_sink_round_trip_atomic_append(spark):
+def test_sink_round_trip_atomic_append(spark, tmp_path):
     """Producer twin: stream the fixture THROUGH the events_log sink
     (atomic per-batch rename commit), then consume the produced log
     with the events_log source — the full wire-path emulation. The
     produced log must contain exactly the fixture rows, no in-flight
     temp files may survive the run, and committed file names must
     carry the batch-order prefix the reader's append order relies on."""
-    base = f"/tmp/dss_kafka_shape/{uuid.uuid4().hex[:8]}"
+    base = str(tmp_path)
     src_log, out_log = f"{base}/src", f"{base}/out"
-    shutil.rmtree(base, ignore_errors=True)
     n_a, chunk_b = _split_fixture(src_log)
     pq.write_table(chunk_b, f"{src_log}/chunk_b.parquet")
     register(spark)
@@ -330,3 +333,132 @@ def test_sink_round_trip_atomic_append(spark):
         )
     }
     assert got == want
+
+
+def test_restart_replays_uncommitted_batch_then_next_start_appends(spark, tmp_path):
+    """Spark runs a Python source under availableNow as one batch per
+    start. Drop the drain's commit (a crash after the sink wrote, before
+    the checkpoint commit) and append a file: the first restart replays
+    only the planned batch, the second start reads the appended rows,
+    and every (log_partition, log_offset) lands exactly once."""
+    base = str(tmp_path)
+    log_dir, ckpt, out_dir = f"{base}/log", f"{base}/ckpt", f"{base}/out"
+    n_a, chunk_b = _split_fixture(log_dir)
+    register(spark)
+
+    _run_once(spark, log_dir, ckpt, out_dir)
+    last = max(int(f) for f in os.listdir(f"{ckpt}/commits") if f.isdigit())
+    for f in (str(last), f".{last}.crc"):
+        if os.path.exists(f"{ckpt}/commits/{f}"):
+            os.remove(f"{ckpt}/commits/{f}")
+    pq.write_table(chunk_b, f"{log_dir}/chunk_b.parquet")
+
+    _run_once(spark, log_dir, ckpt, out_dir)
+    assert os.path.exists(f"{ckpt}/commits/{last}")  # the replay committed
+    assert spark.read.parquet(out_dir).count() == n_a  # appended rows not yet read
+
+    _run_once(spark, log_dir, ckpt, out_dir)
+    got = spark.read.parquet(out_dir)
+    total = n_a + chunk_b.num_rows
+    assert got.count() == total
+    assert got.select("log_partition", "log_offset").distinct().count() == total
+
+
+def _write_log(log_dir, name, user_id, row_group_size=None):
+    os.makedirs(log_dir, exist_ok=True)
+    n = len(user_id)
+    t = pa.table(
+        {
+            "event_id": pa.array(np.arange(n, dtype=np.int64)),
+            "ts_us": pa.array(np.arange(n, dtype=np.int64) * 1000),
+            "user_id": user_id,
+            "event_type": pa.array(["view"] * n),
+            "value": pa.array(np.ones(n)),
+        }
+    )
+    pq.write_table(t, f"{log_dir}/{name}.parquet", row_group_size=row_group_size)
+
+
+def _reference_counts(fpath, n_parts):
+    uid = pq.read_table(fpath, columns=["user_id"]).column("user_id")
+    return np.bincount(
+        uid.to_numpy(zero_copy_only=False) % n_parts, minlength=n_parts
+    ).tolist()
+
+
+def test_runner_methods_import_no_pandas(tmp_path):
+    """initialOffset, latestOffset, partitions and commit run in a fresh
+    python_streaming_source_runner process per stream start; none of
+    them may import pandas there (its import cost 0.25-0.35 s a start)."""
+    rng = np.random.default_rng(7)
+    log_dir = str(tmp_path / "log")
+    _write_log(log_dir, "a", pa.array(rng.integers(0, 500, 5000)), row_group_size=700)
+    _write_log(log_dir, "b", pa.array(rng.integers(0, 500, 900)))
+    probe = f"""
+import json, sys
+import pyspark.sql.streaming.python_streaming_source_runner
+from demo_segmenter_spark.sources.kafka_shape import EventsLogStreamReader
+r = EventsLogStreamReader({{"path": {log_dir!r}, "partitions": "{N_PARTS}"}})
+start = r.initialOffset()
+end = r.latestOffset()
+slices = r.partitions(start, end)
+r.commit(end)
+print(json.dumps({{"pandas": "pandas" in sys.modules, "end": end,
+                   "bases": {{s.part_id: s.bases for s in slices}}}}))
+"""
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, env.get("PYTHONPATH")) if p
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], env=env, capture_output=True,
+        text=True, timeout=120, check=True,
+    )
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["pandas"] is False
+
+    files = [f"{log_dir}/a.parquet", f"{log_dir}/b.parquet"]
+    ref = [_reference_counts(f, N_PARTS) for f in files]
+    assert got["end"] == {
+        str(p): ref[0][p] + ref[1][p] for p in range(N_PARTS)
+    }
+    assert got["bases"] == {
+        str(p): [0, ref[0][p], ref[0][p] + ref[1][p]] for p in range(N_PARTS)
+    }
+
+
+def test_partition_counts_match_reference(tmp_path, monkeypatch):
+    """The buffer-view bincount equals a plain bincount over Arrow's
+    numpy conversion: many row groups, chunks with a non-zero offset,
+    an int32 user_id, an empty file; a null user_id raises TypeError."""
+    rng = np.random.default_rng(11)
+    log_dir = str(tmp_path / "log")
+    _write_log(log_dir, "groups", pa.array(rng.integers(0, 10**9, 7000)), row_group_size=500)
+    _write_log(
+        log_dir, "int32", pa.array(rng.integers(0, 1000, 3000), type=pa.int32())
+    )
+    _write_log(log_dir, "empty", pa.array([], type=pa.int64()))
+    for name in ("groups", "int32", "empty"):
+        f = f"{log_dir}/{name}.parquet"
+        for n in (1, N_PARTS, 7):
+            assert _file_partition_counts(f, n) == _reference_counts(f, n), (name, n)
+
+    class _Sliced(pq.ParquetFile):
+        """Hands the user_id column back as slices of one array, so
+        each chunk after the first starts at a non-zero offset."""
+
+        def read(self, *args, **kwargs):
+            col = super().read(*args, **kwargs).column("user_id").combine_chunks()
+            return pa.table(
+                {"user_id": pa.chunked_array([col[:7], col[7:300], col[300:]])}
+            )
+
+    f = f"{log_dir}/groups.parquet"
+    want = _reference_counts(f, N_PARTS)
+    monkeypatch.setattr(pq, "ParquetFile", _Sliced)
+    assert _file_partition_counts(f, N_PARTS) == want
+    monkeypatch.undo()
+
+    _write_log(log_dir, "nulls", pa.array([3, None, 5], type=pa.int64()))
+    with pytest.raises(TypeError, match="user_id"):
+        _file_partition_counts(f"{log_dir}/nulls.parquet", N_PARTS)
