@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Benchmark harness (driver contract): runs the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+get_spark's default session (local[$SPARK_GRAFT_CPUS], every core when
+unset) and prints ONE JSON line:
 {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Measurement protocol (BASELINE.md):
@@ -361,9 +362,10 @@ def _streaming_throughput(spark, sf_dir: str, target_records: int = 1_000_000) -
 
     import pyarrow.parquet as pq
 
+    from demo_segmenter_spark.functions.scratch import scratch_dir
     from demo_segmenter_spark.sources.kafka_shape import register
 
-    base = "/tmp/dss_bench_wire"
+    base = scratch_dir("bench_wire")
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(f"{base}/log")
     t = pq.read_table(f"{sf_dir}/events.parquet")
@@ -405,16 +407,11 @@ def _streaming_throughput(spark, sf_dir: str, target_records: int = 1_000_000) -
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
     load_all_operators()
-    spark = get_spark(
-        app_name="bench",
-        cpus=cpus,
-        shuffle_partitions=max(4, int(cpus)),
-        driver_memory=os.environ.get("SPARK_GRAFT_MEM", "48g"),
-    )
+    spark = get_spark(app_name="bench")
+    cpus = spark.sparkContext.defaultParallelism
 
     stamp_before = _machine_stamp()
 
@@ -480,7 +477,7 @@ def main() -> None:
         "streaming": streaming,
         "secondary": secondary,
         "sf": sf,
-        "cpus": int(cpus),
+        "cpus": cpus,
         "warmed": warm,
         "runs": runs,
         "machine_before": stamp_before,
@@ -512,7 +509,7 @@ def main() -> None:
         "drift": {"median_ratio": headline_drift.get("median_ratio")},
         "streaming": streaming,
         "sf": sf,
-        "cpus": int(cpus),
+        "cpus": cpus,
         "warmed": warm,
         "runs": runs,
         "detail": detail_path,

@@ -41,6 +41,8 @@ from demo_segmenter_spark.functions.cache import persist
 from demo_segmenter_spark.functions.scratch import scratch_dir
 from demo_segmenter_spark.registry import query
 from demo_segmenter_spark.sources import load_table
+from demo_segmenter_spark.streaming.sinks import run_to_memory
+from demo_segmenter_spark.streaming.sources import SESSION_STATE_PARTS
 
 GAP_HOURS = 8  # SURVEY.md §1.2: 8h gap → ~2.1 events/session on fixture
 GAP_US = GAP_HOURS * 3600 * 1_000_000
@@ -529,8 +531,6 @@ def a_stream_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     what makes the oracle deterministic (streaming dedup keeps an
     arrival-order-dependent row for true duplicates). State is evicted
     past the watermark — the 100 TB knob that bounds dedup state."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     ev = (
@@ -544,21 +544,7 @@ def a_stream_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_micros("ts").alias("ts_us"),
         )
     )
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            ev.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(ev, "append", SESSION_STATE_PARTS)
 
 
 @query(
@@ -600,8 +586,6 @@ def a_tumbling_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-day rollup a Kafka-sourced deployment materializes
     continuously; watermark+append mode would bound state — complete
     mode here because the fixture replay ends (final results only)."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     agg = (
@@ -618,21 +602,7 @@ def a_tumbling_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = f"tumbling_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "complete", SESSION_STATE_PARTS)
 
 
 @query(
@@ -660,8 +630,6 @@ def a_sliding_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each event lands in 4 windows — in streaming that is 4 state rows
     per event per key, which is why hop ratio (size/slide) is the state
     knob at 100 TB."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     agg = (
@@ -677,21 +645,7 @@ def a_sliding_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = f"sliding_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "complete", SESSION_STATE_PARTS)
 
 
 # ---------------------------------------------------------------------------
@@ -763,8 +717,6 @@ def a_stream_stream_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffers both sides in windowed state stores and emits on match;
     Spark's state store plays the same role with watermark-driven
     cleanup. Checked against the SAME DuckDB oracle as the batch twin."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     ev = stream_events(spark, sf_dir)
@@ -798,21 +750,7 @@ def a_stream_stream_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("p_ts").alias("purchase_ts_us"),
         F.unix_micros("c_ts").alias("click_ts_us"),
     )
-    name = f"ssjoin_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(joined, "append", SESSION_STATE_PARTS)
 
 
 @query(
@@ -901,8 +839,6 @@ def a_stream_table_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is exactly the GlobalKTable enrichment pattern. Same oracle
     as the batch twin. At 100 TB the static side is a slowly-changing
     dim table; per-batch re-resolution is what picks up dim updates."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     ev = stream_events(spark, sf_dir)
@@ -910,21 +846,7 @@ def a_stream_table_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = ev.join(
         F.broadcast(cust), ev.user_id == cust.c_custkey, "left"
     ).select("event_id", "user_id", "event_type", "c_name", "c_mktsegment", "c_acctbal")
-    name = f"stjoin_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(joined, "append", SESSION_STATE_PARTS)
 
 
 @query(
@@ -1278,9 +1200,9 @@ def a_gapfill_locf_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(cents(F.col("value"))).alias("cents"))
     )
     out = scratch_dir("locf")
-    from demo_segmenter_spark.streaming.sources import memsink_state_parts
+    from demo_segmenter_spark.streaming.sources import stream_state_parts
 
-    with memsink_state_parts(spark):
+    with stream_state_parts(spark, parts=SESSION_STATE_PARTS):
         q = (
             daily.writeStream.outputMode("complete")
             .foreachBatch(
@@ -1530,8 +1452,6 @@ def a_anomaly_zscore_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark and emits in append mode. Same oracle as the batch twin:
     on this fixture the scoring history IS the replayed stream, so the
     outputs coincide row-for-row."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     hist = load_table(spark, sf_dir, "events").select(
@@ -1553,21 +1473,7 @@ def a_anomaly_zscore_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = j.where(z > 3.0).select(
         "event_id", "event_type", "value", rnd(z, 4).alias("z")
     )
-    name = f"anom_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            scored.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(scored, "append", SESSION_STATE_PARTS)
 
 
 @query("a_funnel_stream", oracle=FUNNEL_ORACLE)
@@ -1685,8 +1591,6 @@ def a_window_dau_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch-merge twin trades the dedup store for 7 daily HLLs when <1%
     error is acceptable). The union is map-side; the one shuffle key
     is w_start."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     ex = (
@@ -1726,21 +1630,7 @@ def a_window_dau_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    name = f"dau_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "complete", SESSION_STATE_PARTS)
 
 
 _PEAK_CONCURRENCY_ORACLE = (
@@ -1904,9 +1794,9 @@ def a_retention_cohorts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = scratch_dir("retention")
     ev = stream_events(spark, sf_dir)
-    from demo_segmenter_spark.streaming.sources import memsink_state_parts
+    from demo_segmenter_spark.streaming.sources import stream_state_parts
 
-    with memsink_state_parts(spark):
+    with stream_state_parts(spark, parts=SESSION_STATE_PARTS):
         coh_q = (
             ev.groupBy("user_id")
             .agg(F.min("ts").alias("first_ts"))
@@ -2122,8 +2012,6 @@ def a_trending_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup. Rank windows aren't stateful-streaming-expressible
     (results retract as counts grow), which is precisely why the
     topology splits here."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     agg = (
@@ -2136,25 +2024,11 @@ def a_trending_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    name = f"trending_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     w = Window.partitionBy("window_start_us").orderBy(
         F.col("n_events").desc(), "event_type"
     )
     return (
-        spark.table(name)
+        run_to_memory(agg, "complete", SESSION_STATE_PARTS)
         .withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= 3)
     )
@@ -2340,8 +2214,6 @@ def a_suppress_emit_final_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch twin's and both hash-match the same oracle. State is evicted
     at flush — the 100 TB contract that keeps windowed state bounded
     by (open windows x keys), not history."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     agg = (
@@ -2359,21 +2231,7 @@ def a_suppress_emit_final_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = f"suppress_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "append", SESSION_STATE_PARTS)
 
 
 @query(
@@ -2690,8 +2548,6 @@ def a_cogroup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_cogroup. One shuffle total on the shared key; per-key state is a
     fixed-width row of counters regardless of stream count — exactly
     why cogroup beats N self-joins at 100 TB."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events, stream_orders
 
     ev_s = stream_events(spark, sf_dir).select(
@@ -2719,21 +2575,7 @@ def a_cogroup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("od_value"),
         )
     )
-    name = f"cogroup_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "complete", SESSION_STATE_PARTS)
 
 
 # ---------------------------------------------------------------------------
@@ -2843,26 +2685,10 @@ def a_stream_stream_join_outer_stream(
     nulls included — the eviction boundary is modeled, not fudged.
     At 100 TB this is the attribution job emitting 'no-click purchase'
     rows with bounded state, the semantics KStream.leftJoin promises."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     out = _outer_join_parts(stream_events(spark, sf_dir), streaming=True)
-    name = f"ssouter_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(out, "append", SESSION_STATE_PARTS)
 
 
 # ---------------------------------------------------------------------------
@@ -2926,8 +2752,6 @@ def a_session_suppress_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     evicted at flush — at 100 TB, state is bounded by sessions still
     inside gap+grace of stream time, the same bound the reference's
     RocksDB session store lives under."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     agg = (
@@ -2946,21 +2770,7 @@ def a_session_suppress_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = f"sesssup_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "append", SESSION_STATE_PARTS)
 
 
 # Full-outer variant: BOTH sides' null boundaries verified empirically
@@ -3075,8 +2885,6 @@ def a_stream_stream_join_outer_full_stream(
     flush when the state store proves no future match can arrive (the
     two asymmetric boundaries in the batch twin's docstring).
     Hash-matches the same oracle, nulls from both sides included."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     ev = stream_events(spark, sf_dir)
@@ -3117,21 +2925,7 @@ def a_stream_stream_join_outer_full_stream(
             F.unix_micros("c_ts").alias("click_ts_us"),
         )
     )
-    name = f"ssfull_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(out, "append", SESSION_STATE_PARTS)
 
 
 # OHLC chronological tiebreak key: zero-padded (epoch_us, event_id)
@@ -3236,8 +3030,6 @@ def a_ohlc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     must survive later batches appending to H. At 100 TB this is the
     continuously-materialized candle rollup: state bounded by (open
     hours x types), evicted at watermark, one shuffle."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     agg = (
@@ -3262,21 +3054,7 @@ def a_ohlc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    name = f"ohlc_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "append", SESSION_STATE_PARTS)
 
 
 # ---------------------------------------------------------------------------
@@ -4395,8 +4173,6 @@ def a_session_dynamic_gap_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     running MAX of per-event horizons, so the twin aggregates
     max(ts) explicitly instead (the batch twin does the same) — both
     hash-match the SAME running-max interval-union oracle."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     gap = (
@@ -4421,21 +4197,7 @@ def a_session_dynamic_gap_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = f"dynsess_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "complete", SESSION_STATE_PARTS)
 
 
 @query(
@@ -4621,8 +4383,6 @@ def a_new_vs_returning_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per user — identical cardinality to the batch twin's
     (day, user) distinct exchange; production runs the same topology
     with a TTL on the user store."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     per_user = (
@@ -4634,22 +4394,8 @@ def a_new_vs_returning_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("days")
         )
     )
-    name = f"nvr_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            per_user.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
+        run_to_memory(per_user, "complete", SESSION_STATE_PARTS)
         .select(
             F.array_min("days").alias("first_us"),
             F.explode("days").alias("day_us"),
@@ -4837,8 +4583,6 @@ def a_sli_burn_rate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     point of splitting the plan there). In production the same
     topology runs append+watermark with the burn window in a
     foreachBatch, paging within one trigger of an hour closing."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     hourly = (
@@ -4853,21 +4597,7 @@ def a_sli_burn_rate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("tot"),
         )
     )
-    name = f"burn_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            hourly.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    grid = spark.table(name).withColumn(
+    grid = run_to_memory(hourly, "complete", SESSION_STATE_PARTS).withColumn(
         "hour_idx", (F.col("hour_us") / F.lit(3600000000)).cast("long")
     )
     w6 = Window.orderBy("hour_idx").rangeBetween(-5, 0)
@@ -5600,8 +5330,6 @@ def a_stickiness_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode + watermark evicts both stores 30 days past the frontier in
     the production topology (complete-mode replay here, the
     dau-stream precedent)."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     ev = stream_events(spark, sf_dir).select(
@@ -5633,22 +5361,8 @@ def a_stickiness_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("is_mau").cast("long").alias("mau"),
         )
     )
-    name = f"stick_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
+        run_to_memory(agg, "complete", SESSION_STATE_PARTS)
         .filter(F.col("dau") >= 1)
         .select(
             (F.col("d") * 86_400_000_000).alias("day_us"),

@@ -38,6 +38,11 @@ from demo_segmenter_spark.functions.lanes import block_lane, np_gather, np_rnd
 from demo_segmenter_spark.functions.scratch import scratch_dir
 from demo_segmenter_spark.registry import Bound, query
 from demo_segmenter_spark.sources import load_table
+from demo_segmenter_spark.streaming.sinks import run_to_memory
+from demo_segmenter_spark.streaming.sources import (
+    SESSION_STATE_PARTS,
+    STREAM_STATE_PARTS,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -593,8 +598,6 @@ def b_rollup_hierarchy_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintenance of the fine level composes to the same coarse answers
     as a batch rebuild — the correctness contract behind every
     materialized-rollup refresh pipeline."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     hourly = (
@@ -609,22 +612,8 @@ def b_rollup_hierarchy_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("w", "event_type", "n_events", "sum_cents", "n_purchases")
     )
-    name = f"rollup_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            hourly.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
+        run_to_memory(hourly, "complete", SESSION_STATE_PARTS)
         .groupBy(
             "event_type",
             F.to_date(F.date_trunc("day", F.col("w.start"))).alias("day"),
@@ -1844,18 +1833,13 @@ def b_ivm_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     The scratch feed dir is removed before returning (the no-leak
     convention); state budget pinned in test_stream_state_budgets."""
     import shutil
-    import uuid
-
     base = scratch_dir("ivm_stream")
     shutil.rmtree(base, ignore_errors=True)
     ch = _ivm_changelog(spark, sf_dir)
     try:
         # Round-12 (guide §2.4): the seq/parity chunk files are
         # written in ONE job instead of one filtered changelog scan each.
-        from demo_segmenter_spark.streaming.sources import (
-            chunked_parquet_src,
-            stream_state_parts,
-        )
+        from demo_segmenter_spark.streaming.sources import chunked_parquet_src
 
         # 4 seq-ordered chunks (round-13, measured): the per-batch
         # floor is ~0.45 s of WAL/planning/state-commit machinery, so
@@ -1883,18 +1867,9 @@ def b_ivm_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("op") * F.col("c")).cast("long").alias("cents"),
             )
         )
-        name = f"ivm_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-        )
         # ≤15-group state: a handful of state partitions (guide §2.2)
-        with stream_state_parts(spark):
-            q.start().awaitTermination()
-        snap = spark.table(name).collect()
-        m = spark.createDataFrame(snap, spark.table(name).schema)
+        table = run_to_memory(agg, "complete", STREAM_STATE_PARTS)
+        m = spark.createDataFrame(table.collect(), table.schema)
     finally:
         shutil.rmtree(base, ignore_errors=True)
     return _ivm_finish(m, _ivm_direct(spark, sf_dir))
@@ -5578,8 +5553,6 @@ def b_agg_bitmap_distinct_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_trending. Checked against the SAME word-table oracle as the
     batch twin (minus its in-schema countDistinct certification
     column, which is itself not streamable)."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     words = (
@@ -5593,22 +5566,8 @@ def b_agg_bitmap_distinct_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("m")
         )
     )
-    name = f"bmd_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            words.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
+        run_to_memory(words, "complete", SESSION_STATE_PARTS)
         .groupBy("event_type")
         .agg(
             F.sum(F.bit_count("m")).cast("long").alias("n_users_bitmap"),
@@ -5991,8 +5950,6 @@ def b_agg_countmin_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the overestimate invariant) runs batch-side on the final grid —
     exactly the batch query's gated join. Scale: state 192 rows, the
     exchange carries map-side partials only."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     pairs = F.array(
@@ -6013,21 +5970,7 @@ def b_agg_countmin_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("d", "b")
         .agg(F.count("*").alias("c"))
     )
-    name = f"cms_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            grid.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    sketch = spark.table(name)
+    sketch = run_to_memory(grid, "complete", SESSION_STATE_PARTS)
     ev = load_table(spark, sf_dir, "events").select("user_id")
     probes = (
         ev.filter(F.col("user_id") < 20)
@@ -6225,32 +6168,17 @@ def b_agg_hll_native_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams through (THE canonical streaming-sketch contract). The
     estimate tail (+ the exact twin column for certification) runs
     batch-side on the final register emission."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     reg_s = _hll_registers(
         stream_events(spark, sf_dir).select("event_type", "user_id")
     )
-    name = f"hll_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            reg_s.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    reg = run_to_memory(reg_s, "complete", SESSION_STATE_PARTS)
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
     ex = ev.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("n_exact")
     )
-    return _hll_estimate(spark.table(name), ex)
+    return _hll_estimate(reg, ex)
 
 
 # ---------------------------------------------------------------------------
@@ -6962,8 +6890,6 @@ def b_agg_quantile_sketch_stream(
     matter how much data streams through (THE production shape for
     latency percentiles on a live stream). The estimate tail + exact
     certification twin run batch-side on the final grid emission."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     hist_s = _qsk_hist(
@@ -6971,20 +6897,7 @@ def b_agg_quantile_sketch_stream(
             "event_type", cents(F.col("value")).alias("c")
         )
     )
-    name = f"qsk_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            hist_s.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    hist = run_to_memory(hist_s, "complete", SESSION_STATE_PARTS)
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", cents(F.col("value")).alias("c")
     )
@@ -6994,7 +6907,7 @@ def b_agg_quantile_sketch_stream(
     # (tracked, <= types x QSK_BINS rows) re-roots the plan
     from demo_segmenter_spark.functions.cache import local_checkpoint
 
-    return _qsk_tail(local_checkpoint(spark.table(name)), e)
+    return _qsk_tail(local_checkpoint(hist), e)
 
 
 # Two-level refinement (round-11, verdict r10 ask #7): the flat grid's

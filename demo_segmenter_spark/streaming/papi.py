@@ -34,6 +34,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
 from demo_segmenter_spark.operators.layer_a import GAP_US
+from demo_segmenter_spark.streaming.sinks import run_to_memory
 from demo_segmenter_spark.streaming.sources import stream_events
 
 OUTPUT_SCHEMA = StructType(
@@ -93,8 +94,6 @@ def _assign_sessions(
 
 def papi_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the custom processor over the event stream to completion."""
-    import uuid
-
     ev = stream_events(spark, sf_dir).select(
         "user_id", "event_id", F.unix_micros("ts").alias("ts_us")
     )
@@ -105,16 +104,7 @@ def papi_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"papi_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(out, "update")
 
 
 # ---------------------------------------------------------------------------
@@ -186,8 +176,6 @@ def papi_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the funnel processor to completion; one (user_id, t1, t2,
     t3) row per user per micro-batch (update mode) — aggregate with
     max() downstream to resolve re-emissions."""
-    import uuid
-
     ev = stream_events(spark, sf_dir).select(
         "user_id",
         "event_id",
@@ -201,16 +189,7 @@ def papi_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"funnel_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(out, "update")
 
 
 # ---------------------------------------------------------------------------
@@ -313,8 +292,6 @@ def _holt_smooth(
 
 def papi_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the Holt processor over the event stream to completion."""
-    import uuid
-
     ev = stream_events(spark, sf_dir).select(
         "user_id", "event_id", F.unix_micros("ts").alias("ts_us"), "value"
     )
@@ -325,22 +302,11 @@ def papi_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"holt_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(out, "update")
 
 
 def papi_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the EWMA processor over the event stream to completion."""
-    import uuid
-
     ev = stream_events(spark, sf_dir).select(
         "user_id", "event_id", F.unix_micros("ts").alias("ts_us"), "value"
     )
@@ -351,16 +317,7 @@ def papi_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"ewma_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(out, "update")
 
 
 # ---------------------------------------------------------------------------
@@ -466,8 +423,6 @@ def _session_final(
 
 def papi_session_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the emit-final session processor to completion."""
-    import uuid
-
     from demo_segmenter_spark.functions.compat import cents as cents_expr
     from demo_segmenter_spark.operators.layer_a import SESSION_GRACE_US
 
@@ -490,16 +445,7 @@ def papi_session_final(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    name = f"sessfinal_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(out, "append")
 
 
 # ---------------------------------------------------------------------------
@@ -591,8 +537,6 @@ def papi_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
     so every hour that ENDS at or before the stream's last event is
     emitted; the trailing partial hour stays pending by design — the
     oracle encodes the same rule)."""
-    import uuid
-
     ev = (
         stream_events(spark, sf_dir)
         .withWatermark("ts", "0 seconds")
@@ -605,16 +549,7 @@ def papi_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    name = f"throttle_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(out, "append")
 
 
 # ---------------------------------------------------------------------------
@@ -727,8 +662,6 @@ def _absence_gaps(
 
 
 def _run_update_processor(spark, sf_dir, fn, out_schema, st_schema, cols, prefix):
-    import uuid
-
     ev = stream_events(spark, sf_dir).select(*cols)
     out = ev.groupBy("user_id").applyInPandasWithState(
         fn,
@@ -737,16 +670,7 @@ def _run_update_processor(spark, sf_dir, fn, out_schema, st_schema, cols, prefix
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(out, "update")
 
 
 def papi_alert_hysteresis(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -829,8 +753,6 @@ def _attribution(
 
 
 def papi_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     ev = stream_events(spark, sf_dir).filter(
         F.col("event_type").isin("view", "purchase")
     )
@@ -847,16 +769,7 @@ def papi_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"attr_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(out, "update")
 
 
 # ---------------------------------------------------------------------------
@@ -929,8 +842,6 @@ def _cep_pattern(
 
 
 def papi_cep_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     ev = stream_events(spark, sf_dir).filter(
         F.col("event_type").isin("view", "error", "purchase")
     )
@@ -950,16 +861,7 @@ def papi_cep_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"cep_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(out, "update")
 
 
 # ---------------------------------------------------------------------------
@@ -1046,8 +948,6 @@ def _capped_sessions(
 
 
 def papi_session_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     ev = stream_events(spark, sf_dir).select(
         "user_id", "event_id", F.unix_micros("ts").alias("ts_us")
     )
@@ -1058,13 +958,4 @@ def papi_session_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"capped_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(out, "update")

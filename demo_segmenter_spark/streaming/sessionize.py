@@ -1,7 +1,8 @@
 """Streaming sessionization — the reference's core semantics
 (Kafka Streams SessionWindows [REF?, SURVEY.md §2 Layer A]) on Spark's
 native `session_window` + watermark, run to completion over the fixture
-via Trigger.AvailableNow into a memory sink.
+via Trigger.AvailableNow into a memory sink by `streaming/sinks.run_to_memory`
+(complete mode, SESSION_STATE_PARTS state partitions).
 
 Twin-equivalence contract (SURVEY.md §5.4): with the whole fixture in
 one micro-batch and a zero watermark delay, update-mode output equals
@@ -27,14 +28,13 @@ what a Kafka-sourced deployment would run.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from demo_segmenter_spark.functions.compat import cents, rnd
 from demo_segmenter_spark.operators.layer_a import GAP_HOURS, GAP_US
-from demo_segmenter_spark.streaming.sources import stream_events
+from demo_segmenter_spark.streaming.sinks import run_to_memory
+from demo_segmenter_spark.streaming.sources import SESSION_STATE_PARTS, stream_events
 
 
 def sessionize_topology(ev: DataFrame, gap_hours: int = GAP_HOURS) -> DataFrame:
@@ -59,38 +59,6 @@ def sessionize_topology(ev: DataFrame, gap_hours: int = GAP_HOURS) -> DataFrame:
     )
 
 
-def run_to_session_table(spark: SparkSession, out: DataFrame) -> DataFrame:
-    """Run a complete-mode session aggregation to completion
-    (AvailableNow) into a memory sink; return the final table.
-
-    State partitions (round-13, measured): session state is
-    session-count-bounded (~48 k rows at sf0.1), and each state
-    partition is a per-batch HDFSBackedStateStore instance + commit —
-    at the session default of 32 the single fixture batch paid ~12 s
-    of SUMMED state-commit time across near-empty stores (1.76 s
-    wall); 4 partitions read 1.00 s with an identical session table
-    (1 partition is WORSE — 1.29 s — the one big store commits
-    single-threaded, so this is a right-sizing, not a minimize).
-    The scan side's parallelism is unaffected (file source + map-side
-    partial aggregation run at scan parallelism, guide §2.2)."""
-    from demo_segmenter_spark.streaming.sources import (
-        SESSION_STATE_PARTS,
-        stream_state_parts,
-    )
-
-    name = f"sessions_{uuid.uuid4().hex[:8]}"
-    with stream_state_parts(spark, parts=SESSION_STATE_PARTS):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
-
-
 def sessionize_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -100,7 +68,9 @@ def sessionize_stream(
     """Run the session_window aggregation over the events stream to
     completion (AvailableNow) and return the final session table."""
     ev = stream_events(spark, sf_dir).withWatermark("ts", watermark)
-    return run_to_session_table(spark, sessionize_topology(ev, gap_hours))
+    return run_to_memory(
+        sessionize_topology(ev, gap_hours), "complete", SESSION_STATE_PARTS
+    )
 
 
 def sessionize_kafka_shape(
@@ -127,4 +97,4 @@ def sessionize_kafka_shape(
         )
         .withWatermark("ts", "0 seconds")
     )
-    return run_to_session_table(spark, sessionize_topology(ev))
+    return run_to_memory(sessionize_topology(ev), "complete", SESSION_STATE_PARTS)

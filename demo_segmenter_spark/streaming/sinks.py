@@ -6,7 +6,39 @@ dedup on replay)."""
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame
+
+from demo_segmenter_spark.streaming.sources import stream_state_parts
+
+
+def run_to_memory(
+    df: DataFrame, mode: str, state_parts: int | None = None
+) -> DataFrame:
+    """Drain a streaming DataFrame to completion (AvailableNow) into a
+    memory sink under ``outputMode(mode)``; return the sink's table.
+
+    ``state_parts`` pins the stream's state-partition count
+    (``stream_state_parts``); None runs at the caller's
+    ``spark.sql.shuffle.partitions``. The pin is held only across
+    ``start()``: the query clones the session conf when it starts, so
+    the caller's conf is back before the first batch runs."""
+    spark = df.sparkSession
+    name = f"mem_{uuid.uuid4().hex[:8]}"
+    w = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+    )
+    if state_parts is None:
+        q = w.start()
+    else:
+        with stream_state_parts(spark, parts=state_parts):
+            q = w.start()
+    q.awaitTermination()
+    return spark.table(name)
 
 
 def write_stream_parquet(df: DataFrame, out_dir: str, checkpoint_dir: str):

@@ -203,48 +203,44 @@ def range_chunk_col(col: str, cuts: list[int]) -> "F.Column":
     return c.otherwise(n - 1)
 
 
-def memsink_state_parts(spark: SparkSession) -> "stream_state_parts":
-    """State-partition context for the availableNow memory-sink twins
-    (round-13, measured): their stateful aggregations ran at the
-    session shuffle-partition count (32), paying one near-empty
-    HDFSBackedStateStore instance + per-batch commit per partition —
-    a_ohlc_stream read 6.6 s at 32 parts vs 1.9 s at 4 (rows
-    identical); sessionize-class state (~48 k rows) measured BEST at 4
-    (1 part is worse: one big store commits single-threaded). 4 is the
-    robust right-size across both grid-bounded and session-scale
-    fixture state. Scan parallelism is unaffected (file source +
-    map-side partial aggregation, guide §2.2); AQE cannot coalesce
-    stateful streaming exchanges, which is why this needs a count at
-    all."""
-    return stream_state_parts(spark, parts=MEMSINK_STATE_PARTS)
-
-
-# State-partition counts, measured in the docstrings of their users:
-# run_to_session_table, memsink_state_parts and stream_state_parts.
+# State-partition counts (round-13, measured). SESSION_STATE_PARTS is
+# the memory-sink twins' pin, passed to run_to_memory (streaming/
+# sinks.py) and held by the locf/retention foreachBatch twins: at the
+# session default of 32 each near-empty partition paid one
+# HDFSBackedStateStore instance + commit per batch (a_ohlc_stream 6.6 s
+# at 32 vs 1.9 s at 4, rows identical); session-scale state (~48 k rows
+# at sf0.1) measured best at 4, and 1 is worse (one big store commits
+# single-threaded). STREAM_STATE_PARTS is for grid-bounded state
+# (stream_state_parts below).
 SESSION_STATE_PARTS = 4
-MEMSINK_STATE_PARTS = 4
 STREAM_STATE_PARTS = 1
 
 
 class stream_state_parts:
-    """Context manager pinning ``spark.sql.shuffle.partitions`` for
-    the duration of a bounded-state stream run (state-store partition
-    count is fixed at query start from this conf). The twins' state is
-    grid-/profile-bounded (≤ a few hundred rows) by construction, so
-    a handful of state partitions is the right number at ANY corpus
-    scale — the scan side's parallelism is governed by the file
-    source, and the map-side partial aggregation still runs at scan
-    parallelism; only the bounded reduce/state layer narrows (guide
-    §2.2: fewer, larger reduce partitions).
+    """Context manager pinning ``spark.sql.shuffle.partitions``, which
+    fixes a stream's state-partition count when the query starts; AQE
+    cannot coalesce stateful streaming exchanges, so the count has to
+    be chosen. Scan parallelism is unaffected: the file source and the
+    map-side partial aggregation run at scan parallelism; only the
+    reduce/state layer narrows (guide §2.2).
 
-    Default 1 (round-12 pass 2, measured): for a ≤ few-hundred-row
-    complete-mode state, every extra state partition is a per-batch
-    HDFSBackedStateStore instance + delta file + task for rows that
-    fit one partition a thousand times over — a_drift_psi_stream solo
-    warm best-of-3 read 4.7 s at 1 part vs 6.5 s at the previous 4.
-    A stream whose state is NOT grid-bounded must not use this
-    manager (none of the callers qualify; the fk-join/cdc twins run
-    their own partitioning)."""
+    Who applies it, and when:
+    - ``run_to_memory`` (streaming/sinks.py) holds it across
+      ``start()`` only, when its caller passes ``state_parts``:
+      SESSION_STATE_PARTS for the memory-sink twins,
+      STREAM_STATE_PARTS for ``b_ivm_agg_stream``. The query clones the
+      conf at start, so the caller's conf is restored before any batch.
+    - The foreachBatch twins hold it for the whole run, because their
+      sink functions run jobs on the caller's session: the locf and
+      retention twins at SESSION_STATE_PARTS, the grid-bounded
+      histogram/model streams (psi, nb, bloom, dsir, logreg) at the
+      default.
+
+    Default STREAM_STATE_PARTS = 1 (round-12, measured): for a
+    ≤ few-hundred-row complete-mode state every extra partition is a
+    per-batch store instance + delta file + task — a_drift_psi_stream
+    solo warm best-of-3 read 4.7 s at 1 part vs 6.5 s at 4. State that
+    is not grid-bounded takes SESSION_STATE_PARTS instead."""
 
     def __init__(self, spark: SparkSession, parts: int | None = None):
         self.spark = spark

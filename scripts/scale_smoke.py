@@ -36,7 +36,7 @@ from demo_segmenter_spark.sources import load_table
 
 def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 100
-    spark = get_spark(app_name="scale_smoke", shuffle_partitions=64, driver_memory="48g")
+    spark = get_spark(app_name="scale_smoke", shuffle_partitions=64)
     ev = load_table(spark, "/root/testdata/sf0.1", "events")
 
     out = f"/tmp/dss_scale/events_x{reps}"

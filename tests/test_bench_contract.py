@@ -19,7 +19,6 @@ def test_bench_runs_and_emits_contract_json():
         {
             "SPARK_GRAFT_SF_DIR": "/root/testdata/sf0.001",
             "SPARK_GRAFT_CPUS": "4",
-            "SPARK_GRAFT_MEM": "4g",
             "SPARK_GRAFT_BENCH_RUNS": "1",
             "SPARK_GRAFT_BENCH_WARM": "0",
         }

@@ -135,6 +135,56 @@ STATE_BUDGETS = {
 }
 
 
+# State-partition count every query routed through
+# streaming/sinks.run_to_memory reports (numShufflePartitions of its
+# stateful operators), read with the caller's session at 7 shuffle
+# partitions so a pin that leaks or goes missing shows. 4: the
+# SESSION_STATE_PARTS pin; 1: STREAM_STATE_PARTS; 7: the PAPI
+# processors, which run at the caller's count; None: no stateful
+# operator (stateless filter / stream-static join).
+CALLER_PARTS = 7
+STATE_PARTS = {
+    "a_absence_stream": 7,
+    "a_alert_hysteresis_stream": 7,
+    "a_anomaly_zscore_stream": None,
+    "a_attribution_stream": 7,
+    "a_cep_pattern_stream": 7,
+    "a_cogroup_stream": 4,
+    "a_ewma_stream": 7,
+    "a_forecast_holt_stream": 7,
+    "a_funnel_stream": 7,
+    "a_new_vs_returning_stream": 4,
+    "a_ohlc_stream": 4,
+    "a_papi_session_suppress": 7,
+    "a_papi_sessionize": 7,
+    "a_peak_concurrency_stream": 4,
+    "a_session_capped_stream": 7,
+    "a_session_dynamic_gap_stream": 4,
+    "a_session_suppress_stream": 4,
+    "a_sessionize_kafka_shape": 4,
+    "a_sessionize_stream": 4,
+    "a_sli_burn_rate_stream": 4,
+    "a_sliding_window_stream": 4,
+    "a_stickiness_stream": 4,
+    "a_stream_dedup_stream": 4,
+    "a_stream_stream_join_outer_full_stream": 4,
+    "a_stream_stream_join_outer_stream": 4,
+    "a_stream_stream_join_stream": 4,
+    "a_stream_table_join_stream": None,
+    "a_suppress_emit_final_stream": 4,
+    "a_throttle_stream": 7,
+    "a_trending_stream": 4,
+    "a_tumbling_window_stream": 4,
+    "a_window_dau_stream": 4,
+    "b_agg_bitmap_distinct_stream": 4,
+    "b_agg_countmin_stream": 4,
+    "b_agg_hll_native_stream": 4,
+    "b_agg_quantile_sketch_stream": 4,
+    "b_ivm_agg_stream": 1,
+    "b_rollup_hierarchy_stream": 4,
+}
+
+
 def test_budget_table_matches_streaming_registry():
     streaming = {n for n in REGISTRY if n.endswith("_stream")}
     missing = streaming - STATE_BUDGETS.keys()
@@ -143,16 +193,22 @@ def test_budget_table_matches_streaming_registry():
     assert not stale, f"state budgets for unregistered queries: {sorted(stale)}"
 
 
-def test_state_rows_within_budget(spark):
-    events: list[int] = []
+def _observe(spark, names):
+    """Run each query at sf0.001 and yield ``(name, events)``, one
+    ``(state rows, {state partition counts})`` pair per progress event."""
+    events: list[tuple[int, set[int]]] = []
 
     class _L(StreamingQueryListener):
         def onQueryStarted(self, e):
             pass
 
         def onQueryProgress(self, e):
+            ops = e.progress.stateOperators
             events.append(
-                sum(op.numRowsTotal for op in e.progress.stateOperators)
+                (
+                    sum(op.numRowsTotal for op in ops),
+                    {op.numShufflePartitions for op in ops},
+                )
             )
 
         def onQueryIdle(self, e):
@@ -163,13 +219,12 @@ def test_state_rows_within_budget(spark):
 
     listener = _L()
     spark.streams.addListener(listener)
-    over = {}
     try:
-        for name in sorted(STATE_BUDGETS):
+        for name in names:
             events.clear()
             REGISTRY[name].fn(spark, SF_SMOKE).count()
             # the listener is async: wait for the event stream to go
-            # quiet before reading the max
+            # quiet before reading it
             stable, quiet = len(events), 0
             while quiet < 15:
                 time.sleep(0.1)
@@ -177,9 +232,32 @@ def test_state_rows_within_budget(spark):
                     quiet += 1
                 else:
                     stable, quiet = len(events), 0
-            got = max(events, default=0)
-            if got > STATE_BUDGETS[name]:
-                over[name] = (got, STATE_BUDGETS[name])
+            yield name, list(events)
     finally:
         spark.streams.removeListener(listener)
+
+
+def test_state_rows_within_budget(spark):
+    over = {}
+    for name, events in _observe(spark, sorted(STATE_BUDGETS)):
+        got = max((rows for rows, _ in events), default=0)
+        if got > STATE_BUDGETS[name]:
+            over[name] = (got, STATE_BUDGETS[name])
     assert not over, f"state budget exceeded (rows, budget): {over}"
+
+
+def test_state_partitions_pinned(spark):
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(CALLER_PARTS))
+    wrong = {}
+    try:
+        for name, events in _observe(spark, sorted(STATE_PARTS)):
+            got = set().union(*(parts for _, parts in events))
+            want = set() if STATE_PARTS[name] is None else {STATE_PARTS[name]}
+            if not events or got != want:
+                wrong[name] = (sorted(got), STATE_PARTS[name])
+            if spark.conf.get("spark.sql.shuffle.partitions") != str(CALLER_PARTS):
+                wrong[name] = "caller's shuffle.partitions not restored"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert not wrong, f"state partitions (got, want): {wrong}"
