@@ -35,16 +35,63 @@ _PERSISTED: list[DataFrame] = []
 
 def exceeds_cap(df: DataFrame, cap: int) -> bool:
     """True when ``df`` holds more than ``cap`` rows — WITHOUT a full
-    scan above the cap. ``count(limit(cap+1)) == min(total, cap+1)``,
-    so the lane decision is identical to ``df.count() > cap``, but
-    LocalLimit stops each partition's iteration at cap+1 rows and the
-    optimizer prunes every column below the aggregate, so an above-cap
-    table (the 100 TB case) pays a bounded probe instead of one full
-    pass whose result is thrown away (guide §1.2). ``cap < 0`` (the
-    forced-distributed A/B knob) short-circuits without any job."""
+    scan above the cap. The decision always equals ``df.count() > cap``.
+
+    - ``cap < 0`` (the forced-distributed A/B knob) short-circuits.
+    - A bare parquet scan (``df``'s optimized plan is only Project
+      nodes over one local-file parquet relation, e.g.
+      ``load_table(...).select(...)``) is answered from the files'
+      footers: their ``num_rows`` are summed until the sum passes
+      ``cap``. No Spark job runs.
+    - Any other plan (filters, joins, aggregates, persisted or
+      streaming inputs, non-local files) runs the bounded probe
+      ``count(limit(cap+1)) == min(total, cap+1)``: LocalLimit stops
+      each partition at cap+1 rows and the optimizer prunes every
+      column below the aggregate, so an above-cap table (the 100 TB
+      case) pays a bounded probe instead of one full pass whose result
+      is thrown away (guide §1.2)."""
     if cap < 0:
         return True
+    files = _bare_parquet_files(df)
+    if files is not None:
+        import pyarrow.parquet as pq
+
+        n = 0
+        for f in files:
+            n += pq.read_metadata(f).num_rows
+            if n > cap:
+                return True
+        return False
     return df.limit(cap + 1).count() > cap
+
+
+def _bare_parquet_files(df: DataFrame) -> list[str] | None:
+    """The local paths of the parquet files ``df`` reads when its
+    optimized plan is Project nodes over one parquet ``LogicalRelation``
+    (so ``df`` has exactly the files' rows); None for any other plan."""
+    from urllib.parse import unquote, urlparse
+
+    node = df._jdf.queryExecution().optimizedPlan()
+    while node.nodeName() == "Project":
+        node = node.child()
+    if not node.getClass().getName().endswith(".LogicalRelation"):
+        return None
+    rel = node.relation()
+    if (
+        node.isStreaming()
+        or not rel.getClass().getName().endswith(".HadoopFsRelation")
+        or not rel.fileFormat().getClass().getName().endswith(
+            ".ParquetFileFormat"
+        )
+    ):
+        return None
+    paths = []
+    for uri in df.inputFiles():
+        u = urlparse(uri)
+        if u.scheme != "file":
+            return None
+        paths.append(unquote(u.path))
+    return paths
 
 
 def persist(df: DataFrame) -> DataFrame:

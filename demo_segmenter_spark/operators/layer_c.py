@@ -5446,28 +5446,34 @@ def bpe_encode_tokens(
 
 
 # ---------------------------------------------------------------------------
-# Tokenizer-train BLOCK LANE (round-12 optimization; guide §1.2 "fix the
-# distributed algorithm first", §4.2 "hand whole batches to native code
-# inside the task"): below CAPS["tok"] documents, the merge-training
-# replay (BPE count rule / WordPiece likelihood rule) runs inside ONE
-# mapInPandas task over the corpus block, emitting only the BOUNDED
-# artifacts (per-round argmax rows, t0 unit counts, final vocabulary) —
-# zero window chains, zero per-round exchanges. The distributed lanes
-# above the cap are unchanged and remain the certified 100 TB dataflow
-# for corpus-scale ENCODE; tokenizer TRAINING at 100 TB runs on a
-# bounded sample/shard (the SentencePiece/HuggingFace reality), which is
-# exactly the shape this lane realizes below the cap. All arithmetic is
-# integer/string (counts, BIGINT floor division, lexicographic (a, b)
-# tiebreaks on the pure-ASCII corpus — Python code-point order equals
-# the engines' binary collation there), so the replay is bit-exact vs
-# the window chain; tests/test_tok_block.py and tests/test_lanes.py pin
-# the two lanes row-identical and the oracles certify the block lane
-# at all three scale factors.
+# Tokenizer BLOCK LANE (guide §1.2 "fix the distributed algorithm first",
+# §4.2 "hand whole batches to native code inside the task"): below
+# CAPS["tok"] documents, merge training (BPE count rule / WordPiece
+# likelihood rule) replays inside ONE mapInPandas task over the corpus
+# block as a numpy kernel over integer token codes — zero window chains,
+# zero per-round exchanges. ``_bpe_encode_lane`` emits the corpus's final
+# tokenization from that same task (training's last pass IS the encode
+# of the training corpus); ``_tok_train_block`` emits only the bounded
+# artifacts (per-round argmax rows, t0 unit counts, final vocabulary).
+# The distributed lanes above the cap are unchanged and remain the
+# certified 100 TB dataflow for corpus-scale ENCODE; tokenizer TRAINING
+# at 100 TB runs on a bounded sample/shard (the SentencePiece/HuggingFace
+# reality), which is exactly the shape this lane realizes below the cap.
+# All arithmetic is integer: tokens are coded once in sorted order, so the
+# lexicographic (a, b) tiebreaks become integer order (Python code-point
+# order equals the engines' binary collation of UTF-8), counts are ints
+# and scores BIGINT floor divisions — bit-exact vs the window chain;
+# tests/test_tok_block.py and tests/test_lanes.py pin the lanes
+# row-identical and the oracles certify the block lane at all three
+# scale factors.
 # ---------------------------------------------------------------------------
 
 _TOK_ART_SCHEMA = (
     "kind string, rnd long, a string, b string, c long, ca long,"
     " cb long, sq long, n_merges long, tok string, cnt long"
+)
+_BPE_ENC_SCHEMA = (
+    "doc_id long, pos long, token_id long, tok string, n_tokens long"
 )
 
 
@@ -5477,7 +5483,8 @@ def _bpe_apply_py(words: list, a: str, b: str) -> tuple[list, int]:
     Equivalent to the SQL odd-indexed-run rule: occurrences at
     consecutive positions form a run (rungrp = pos - cum is constant
     exactly there), and taking every other member of a run IS what a
-    left-to-right walk that skips the consumed right token does."""
+    left-to-right walk that skips the consumed right token does. The
+    reference walk the numpy pass (_tok_np_merge) is tested against."""
     out: list = []
     m = 0
     ab = f"{a}_{b}"
@@ -5493,71 +5500,142 @@ def _bpe_apply_py(words: list, a: str, b: str) -> tuple[list, int]:
     return out, m
 
 
-def _tok_replay_py(doc_toks: list, rule: str, rounds: int):
-    """Replay `rounds` greedy merge-training rounds over the tokenized
-    block (list of per-doc word lists, MUTATED in place to the final
-    tokenization). rule='bpe': argmax pair count, (c DESC, a, b)
-    total order. rule='wp': argmax integer likelihood
-    (c*WP_SCALE) // (ca*cb), (sq DESC, a, b) total order. Returns
-    (bests, t0_units): per-round argmax dicts and the pre-merge unit
-    counts (the _wp_vocab_set / _wp_capped_vocab input). Counts are
-    ints, scores BIGINT floor divisions — bit-exact vs the engines."""
-    from collections import Counter
+def _tok_np_codes(texts):
+    """Whitespace tokens of a block of texts as (codes, doc, vocab):
+    int64 codes into the sorted token array ``vocab``
+    (``pd.factorize(sort=True)``, so code order is string order) and
+    each token's 0-based document index, documents contiguous."""
+    import numpy as np
 
-    units = Counter()
-    for ws in doc_toks:
-        units.update(ws)
-    t0_units = dict(units)
+    words = [t.split(" ") for t in texts]
+    lens = np.fromiter(map(len, words), dtype=np.int64, count=len(words))
+    flat = np.array([w for ws in words for w in ws], dtype=object)
+    codes, vocab = pd.factorize(flat, sort=True)
+    doc = np.repeat(np.arange(len(words), dtype=np.int64), lens)
+    return codes.astype(np.int64), doc, np.asarray(vocab, dtype=object)
+
+
+def _tok_np_merge(codes, doc, vocab, a: int, b: int):
+    """One greedy non-overlapping merge pass of the code pair (a, b)
+    within each document: occurrences at consecutive positions form a
+    run and its even-indexed members merge (the SQL odd-run rule of
+    _bpe_apply; the walk of _bpe_apply_py). The merged token
+    ``vocab[a] + "_" + vocab[b]`` is inserted into the sorted
+    vocabulary when new (codes at or above its slot shift up by one).
+    Returns (codes, doc, vocab, n_merges); the inputs are not
+    modified."""
+    import numpy as np
+
+    occ = np.flatnonzero(
+        (codes[:-1] == a) & (codes[1:] == b) & (doc[:-1] == doc[1:])
+    )
+    if not len(occ):
+        return codes, doc, vocab, 0
+    i = np.arange(len(occ))
+    run_start = np.ones(len(occ), dtype=bool)
+    run_start[1:] = occ[1:] != occ[:-1] + 1
+    first = np.maximum.accumulate(np.where(run_start, i, 0))
+    hit = occ[(i - first) % 2 == 0]
+    ab = f"{vocab[a]}_{vocab[b]}"
+    k = int(np.searchsorted(vocab, ab))
+    if k < len(vocab) and vocab[k] == ab:
+        codes = codes.copy()
+    else:
+        vocab = np.insert(vocab, k, ab)
+        codes = codes + (codes >= k)
+    codes[hit] = k
+    keep = np.ones(len(codes), dtype=bool)
+    keep[hit + 1] = False
+    return codes[keep], doc[keep], vocab, len(hit)
+
+
+def _tok_np_train(texts, rule: str, rounds: int):
+    """Replay `rounds` greedy merge-training rounds over a block of
+    texts. rule='bpe': argmax pair count, (c DESC, a, b) total order.
+    rule='wp': argmax integer likelihood (c*WP_SCALE) // (ca*cb),
+    (sq DESC, a, b) total order. Adjacent in-document pairs are
+    counted with ``np.unique`` over ``a*V + b`` keys, which sorts them
+    in (a, b) order, so ``np.argmax`` (first maximum) is the total
+    order's winner. Returns (codes, doc, vocab, bests, units): the
+    final tokenization as _tok_np_codes describes it, the per-round
+    argmax dicts and the t0 unit counts."""
+    import numpy as np
+
+    codes, doc, vocab = _tok_np_codes(texts)
+    units = dict(
+        zip(vocab.tolist(), np.bincount(codes, minlength=len(vocab)).tolist())
+    )
     bests = []
     for r in range(1, rounds + 1):
-        pc: Counter = Counter()
-        for ws in doc_toks:
-            pc.update(zip(ws, ws[1:]))
+        v = len(vocab)
+        same = doc[:-1] == doc[1:]
+        keys, c = np.unique(
+            codes[:-1][same] * v + codes[1:][same], return_counts=True
+        )
         if rule == "wp":
-            uc: Counter = Counter()
-            for ws in doc_toks:
-                uc.update(ws)
-            sq = {
-                ab: (c * WP_SCALE) // (uc[ab[0]] * uc[ab[1]])
-                for ab, c in pc.items()
-            }
-            a, b = min(sq, key=lambda ab: (-sq[ab], ab[0], ab[1]))
-            best = {
-                "rnd": r, "a": a, "b": b, "c": pc[(a, b)],
-                "ca": uc[a], "cb": uc[b], "sq": sq[(a, b)],
-            }
+            uc = np.bincount(codes, minlength=v)
+            ca, cb = uc[keys // v], uc[keys % v]
+            sq = (c * WP_SCALE) // (ca * cb)
+            i = int(np.argmax(sq))
+            best = {"ca": int(ca[i]), "cb": int(cb[i]), "sq": int(sq[i])}
         else:
-            a, b = min(pc, key=lambda ab: (-pc[ab], ab[0], ab[1]))
-            best = {"rnd": r, "a": a, "b": b, "c": pc[(a, b)]}
-        nm = 0
-        for k, ws in enumerate(doc_toks):
-            doc_toks[k], m = _bpe_apply_py(ws, a, b)
-            nm += m
-        best["n_merges"] = nm
+            i = int(np.argmax(c))
+            best = {}
+        a, b = int(keys[i] // v), int(keys[i] % v)
+        best.update(rnd=r, a=vocab[a], b=vocab[b], c=int(c[i]))
+        codes, doc, vocab, best["n_merges"] = _tok_np_merge(
+            codes, doc, vocab, a, b
+        )
         bests.append(best)
-    return bests, t0_units
+    return codes, doc, vocab, bests, units
+
+
+def _tok_np_frame(doc_ids, codes, doc, vocab) -> pd.DataFrame:
+    """(doc_id, pos, tok, n_tokens) rows of a coded tokenization:
+    1-based in-document positions from ``repeat``/``arange`` over the
+    per-document token counts."""
+    import numpy as np
+
+    n_tok = np.bincount(doc, minlength=len(doc_ids))
+    pos = np.arange(len(codes)) - np.repeat(np.cumsum(n_tok) - n_tok, n_tok)
+    return pd.DataFrame(
+        {
+            "doc_id": doc_ids[doc],
+            "pos": pos + 1,
+            "tok": vocab[codes],
+            "n_tokens": n_tok[doc],
+        }
+    )
+
+
+def _tok_np_gather(batches):
+    """(doc_ids int64 array, texts list) of a partition's
+    (doc_id, text) pandas batches."""
+    import numpy as np
+
+    ids, texts = [], []
+    for pdf in batches:
+        ids.append(pdf["doc_id"].to_numpy(dtype=np.int64))
+        texts.extend(pdf["text"])
+    ids = np.concatenate(ids) if ids else np.empty(0, dtype=np.int64)
+    return ids, texts
 
 
 def _tok_train_block(docs: DataFrame, rule: str, rounds: int):
     """Block-lane artifact job: ONE single-partition mapInPandas task
-    replays the whole training and emits only the bounded artifacts —
-    per-round argmax rows, t0 unit counts (vocabulary-bounded: the
-    same collect volume _wp_vocab_set already materializes on the
-    distributed lane) and the distinct final tokens. Returns
-    (bests, units, fvocab) or None when the block exceeds
-    CAPS["tok"] documents (the distributed lanes take over).
-    Bounded-probe gate (round-13): above the cap the decision costs
-    a LocalLimit probe, not a full corpus pass (guide §1.2)."""
+    replays the whole training (_tok_np_train) and emits only the
+    bounded artifacts — per-round argmax rows, t0 unit counts
+    (vocabulary-bounded: the same collect volume _wp_vocab_set already
+    materializes on the distributed lane) and the distinct final
+    tokens. Returns (bests, units, fvocab) or None when the block
+    exceeds CAPS["tok"] documents (the distributed lanes take over)."""
 
     def replay(batches):
-        texts: list = []
-        for pdf in batches:
-            texts.extend(pdf["text"])
-        doc_toks = [t.split(" ") for t in texts]
-        bests, t0_units = _tok_replay_py(doc_toks, rule, rounds)
-        fvocab = set()
-        for ws in doc_toks:
-            fvocab.update(ws)
+        import numpy as np
+
+        _, texts = _tok_np_gather(batches)
+        codes, _, vocab, bests, units = _tok_np_train(texts, rule, rounds)
+        fvocab = vocab[np.unique(codes)].tolist()
         rows = {k: [] for k in (
             "kind", "rnd", "a", "b", "c", "ca", "cb", "sq", "n_merges",
             "tok", "cnt",
@@ -5571,7 +5649,7 @@ def _tok_train_block(docs: DataFrame, rule: str, rounds: int):
 
         for bdict in bests:
             emit("best", **bdict)
-        for t, cn in t0_units.items():
+        for t, cn in units.items():
             emit("unit", tok=t, cnt=cn)
         for t in fvocab:
             emit("fvocab", tok=t)
@@ -5600,79 +5678,101 @@ def _tok_train_block(docs: DataFrame, rule: str, rounds: int):
     return bests, units, fvocab
 
 
-def _bpe_encode_block(
-    docs: DataFrame,
-    merges: list,
-    vid: dict | None = None,
-    with_n_tokens: bool = False,
-) -> DataFrame:
-    """Block-lane ENCODE: one Arrow-batched mapInPandas pass that
-    replays the (tiny, broadcast) ranked merge list per document with
-    the shared _bpe_apply_py walk — the production encode shape
-    (tokenizer artifact broadcast, per-doc pointer chase, scan-local).
-    Emits (doc_id, pos, tok) plus token_id / n_tokens when requested;
-    a doc is one input row, so its whole stream stays in-task and both
-    extras are computed without any corpus join or window."""
-    sc = docs.sparkSession.sparkContext
-    bm = sc.broadcast(list(merges))
-    bvid = sc.broadcast(vid or {})
-    schema = "doc_id long, pos long, tok string"
-    if vid is not None:
-        schema += ", token_id long"
-    if with_n_tokens:
-        schema += ", n_tokens long"
+def _bpe_encode_lane(spark: SparkSession, sf_dir: str) -> DataFrame | None:
+    """Block-lane BPE train + encode of the documents table: below
+    CAPS["tok"] docs ONE lazy mapInPandas task trains the BPE_ROUNDS
+    merges (_tok_np_train) and emits the corpus's final tokenization
+    from the same codes — training's last pass is the encode of the
+    training corpus, so there is no collect, no second scan and no
+    per-document merge walk. Rows are (doc_id, pos, token_id, tok,
+    n_tokens), token_id the 1-based rank of tok in the sorted final
+    vocabulary. None above the cap (the caller runs _bpe_chain_toks)."""
+
+    def kern(batches):
+        import numpy as np
+
+        doc_ids, texts = _tok_np_gather(batches)
+        codes, doc, vocab, _, _ = _tok_np_train(texts, "bpe", BPE_ROUNDS)
+        present = np.zeros(len(vocab), dtype=bool)
+        present[codes] = True
+        out = _tok_np_frame(doc_ids, codes, doc, vocab)
+        out.insert(2, "token_id", np.cumsum(present)[codes])
+        yield out
+
+    return block_lane(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
+        "tok",
+        kern,
+        _BPE_ENC_SCHEMA,
+    )
+
+
+def _bpe_encode_block(docs: DataFrame, merges: list) -> DataFrame:
+    """ENCODE with an explicit ranked merge list (a tokenizer artifact,
+    broadcast): one Arrow-batched mapInPandas pass codes each batch's
+    whitespace tokens and replays the merges in rank order with
+    _tok_np_merge; a doc is one input row, so its whole stream stays
+    in-task. Emits (doc_id, pos, tok)."""
+    bm = docs.sparkSession.sparkContext.broadcast(list(merges))
 
     def enc(batches):
-        merges_l = bm.value
-        vid_l = bvid.value
+        import numpy as np
+
         for pdf in batches:
-            out = {k: [] for k in
-                   ("doc_id", "pos", "tok", "token_id", "n_tokens")}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                ws = text.split(" ")
-                for a, b in merges_l:
-                    ws, _ = _bpe_apply_py(ws, a, b)
-                n = len(ws)
-                for p, t in enumerate(ws, start=1):
-                    out["doc_id"].append(doc_id)
-                    out["pos"].append(p)
-                    out["tok"].append(t)
-                    if vid_l:
-                        out["token_id"].append(vid_l[t])
-                    out["n_tokens"].append(n)
-            cols = {"doc_id": out["doc_id"], "pos": out["pos"],
-                    "tok": out["tok"]}
-            if vid_l:
-                cols["token_id"] = out["token_id"]
-            if with_n_tokens:
-                cols["n_tokens"] = out["n_tokens"]
-            yield pd.DataFrame(cols)
+            codes, doc, vocab = _tok_np_codes(pdf["text"])
+            for a, b in bm.value:
+                ia, ib = np.searchsorted(vocab, [a, b])
+                if (ia < len(vocab) and vocab[ia] == a
+                        and ib < len(vocab) and vocab[ib] == b):
+                    codes, doc, vocab, _ = _tok_np_merge(
+                        codes, doc, vocab, int(ia), int(ib)
+                    )
+            doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
+            yield _tok_np_frame(doc_ids, codes, doc, vocab)[
+                ["doc_id", "pos", "tok"]
+            ]
 
-    return docs.select("doc_id", "text").mapInPandas(enc, schema)
+    return docs.select("doc_id", "text").mapInPandas(
+        enc, "doc_id long, pos long, tok string"
+    )
 
 
-def _bpe_final_toks(spark: SparkSession, sf_dir: str):
-    """Shared BPE train→final-tokenization entry: below CAPS["tok"]
-    the block lanes run (one artifact task + one encode pass, zero
-    window chains); above it the certified distributed rounds run
-    unchanged. Returns (toks DataFrame of (doc_id, pos, tok), art)
-    where art = (bests, units, fvocab) on the block lane, None on the
-    distributed lane."""
-    art = _tok_train_block(load_table(spark, sf_dir, "documents"),
-                           "bpe", BPE_ROUNDS)
-    if art is not None:
-        bests, _, _ = art
-        merges = [(d["a"], d["b"]) for d in bests]
-        toks = _bpe_encode_block(
-            spread(load_table(spark, sf_dir, "documents")), merges
-        )
-        return toks, art
+def _bpe_chain_toks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distributed BPE_ROUNDS training rounds over the documents
+    table (window chains, above CAPS["tok"]): its final (doc_id, pos,
+    tok) tokenization."""
     toks = _bpe_tokenize0(spread(load_table(spark, sf_dir, "documents")))
     for _ in range(BPE_ROUNDS):
         aug = _bpe_aug(toks)
         best = _bpe_argmax(aug)
         _, toks = _bpe_apply(aug, best)
-    return toks, None
+    return toks
+
+
+def _bpe_chain_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """_bpe_chain_toks with token ids: a row_number over the DISTINCT
+    final vocabulary (a single-partition window bounded by VOCABULARY
+    size, never corpus size) joined back by broadcast. Columns
+    (tok, doc_id, pos, token_id)."""
+    toks = persist(_bpe_chain_toks(spark, sf_dir))
+    wv = Window.orderBy("tok")  # vocab-sized, not corpus-sized
+    vocab = (
+        toks.select("tok")
+        .distinct()
+        .select("tok", F.row_number().over(wv).cast("long").alias("token_id"))
+    )
+    return toks.join(F.broadcast(vocab), "tok")
+
+
+def _bpe_final_toks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shared BPE train→final-tokenization entry: below CAPS["tok"]
+    the block lane runs (one task trains and encodes, zero window
+    chains); above it the certified distributed rounds run unchanged.
+    Returns the (doc_id, pos, tok) DataFrame."""
+    enc = _bpe_encode_lane(spark, sf_dir)
+    if enc is not None:
+        return enc.select("doc_id", "pos", "tok")
+    return _bpe_chain_toks(spark, sf_dir)
 
 
 def _bpe_round_sql(r: int) -> str:
@@ -5851,34 +5951,16 @@ def c_token_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact itself), never corpus size, and the id assignment joins
     back via broadcast. n_tokens rides the existing doc_id
     partitioning (window count, no extra exchange). Below
-    CAPS["tok"] docs the block lane runs: one artifact task trains
-    the merges, then ONE mapInPandas pass replays them per doc with
-    ids and counts attached in-task — zero exchanges end to end."""
-    art = _tok_train_block(load_table(spark, sf_dir, "documents"),
-                           "bpe", BPE_ROUNDS)
-    if art is not None:
-        bests, _, fvocab = art
-        merges = [(d["a"], d["b"]) for d in bests]
-        vid = {t: i for i, t in enumerate(sorted(fvocab), start=1)}
-        return _bpe_encode_block(
-            spread(load_table(spark, sf_dir, "documents")),
-            merges, vid, with_n_tokens=True,
-        ).select("doc_id", "pos", "token_id", "tok", "n_tokens")
-    toks = _bpe_tokenize0(spread(load_table(spark, sf_dir, "documents")))
-    for _ in range(BPE_ROUNDS):
-        aug = _bpe_aug(toks)
-        best = _bpe_argmax(aug)
-        _, toks = _bpe_apply(aug, best)
-    toks = persist(toks)
-    wv = Window.orderBy("tok")  # vocab-sized (see docstring), not corpus-sized
-    vocab = (
-        toks.select("tok")
-        .distinct()
-        .select("tok", F.row_number().over(wv).cast("long").alias("token_id"))
-    )
+    CAPS["tok"] docs the block lane runs (_bpe_encode_lane): ONE lazy
+    mapInPandas task trains the merges and emits the encoded corpus
+    with ids and counts attached in-task — no construction job, zero
+    exchanges end to end."""
+    enc = _bpe_encode_lane(spark, sf_dir)
+    if enc is not None:
+        return enc
     wdoc = Window.partitionBy("doc_id")
     return (
-        toks.join(F.broadcast(vocab), "tok")
+        _bpe_chain_ids(spark, sf_dir)
         .select(
             "doc_id",
             "pos",
@@ -6545,7 +6627,7 @@ def c_pack_sequences_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the counts collapse to one row per doc before the lang-partitioned
     packing window — the window never sees token-level rows."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    toks, _ = _bpe_final_toks(spark, sf_dir)
+    toks = _bpe_final_toks(spark, sf_dir)
     nt = toks.groupBy("doc_id").agg(F.count("*").cast("long").alias("n_tok"))
     sized = docs.select("doc_id", "lang").join(nt, "doc_id")
     binned = sized.withColumn(
@@ -8567,36 +8649,13 @@ def c_token_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters on (doc_id, win_id), which the encode chain's doc_id
     partitioning already satisfies — the window pass itself adds ZERO
     exchanges, so the cost at 100 TB is the encode pass it rides.
-    Below CAPS["tok"] docs the block encode lane feeds the cover
-    (ids attached in-task; the rollup's one exchange remains)."""
-    art = _tok_train_block(load_table(spark, sf_dir, "documents"),
-                           "bpe", BPE_ROUNDS)
-    if art is not None:
-        bests, _, fvocab = art
-        merges = [(d["a"], d["b"]) for d in bests]
-        vid = {t: i for i, t in enumerate(sorted(fvocab), start=1)}
-        enc = _bpe_encode_block(
-            spread(load_table(spark, sf_dir, "documents")), merges, vid
-        ).select("doc_id", (F.col("pos") - 1).alias("idx0"), "token_id")
-    else:
-        toks = _bpe_tokenize0(spread(load_table(spark, sf_dir, "documents")))
-        for _ in range(BPE_ROUNDS):
-            aug = _bpe_aug(toks)
-            best = _bpe_argmax(aug)
-            _, toks = _bpe_apply(aug, best)
-        toks = persist(toks)
-        wv = Window.orderBy("tok")  # vocab-sized, not corpus-sized
-        vocab = (
-            toks.select("tok")
-            .distinct()
-            .select(
-                "tok",
-                F.row_number().over(wv).cast("long").alias("token_id"),
-            )
-        )
-        enc = toks.join(F.broadcast(vocab), "tok").select(
-            "doc_id", (F.col("pos") - 1).alias("idx0"), "token_id"
-        )
+    Below CAPS["tok"] docs the one-task train + encode lane
+    (_bpe_encode_lane) feeds the cover with ids attached in-task; the
+    rollup's one exchange remains."""
+    enc = _bpe_encode_lane(spark, sf_dir)
+    if enc is None:
+        enc = _bpe_chain_ids(spark, sf_dir)
+    enc = enc.select("doc_id", (F.col("pos") - 1).alias("idx0"), "token_id")
     k_min = F.greatest(
         F.lit(0).cast("long"),
         F.expr(f"(idx0 - {TOKWIN_W - TOKWIN_S}) DIV {TOKWIN_S}"),
@@ -9806,7 +9865,7 @@ def c_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤(5 langs x 2) agg."""
     docs = spread(load_table(spark, sf_dir, "documents"))
     t0 = _bpe_tokenize0(docs)
-    toks, _ = _bpe_final_toks(spark, sf_dir)
+    toks = _bpe_final_toks(spark, sf_dir)
     words = t0.groupBy("doc_id").agg(F.count("*").alias("n_words"))
     ntoks = toks.groupBy("doc_id").agg(F.count("*").alias("n_toks"))
     utoks, uwords, _, uvocabs = _unigram_train(spark, sf_dir)
@@ -13105,7 +13164,7 @@ def c_token_bpe_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost + one ordered doc rollup (the array_sort(collect_list)
     rebuild idiom)."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    toks, _ = _bpe_final_toks(spark, sf_dir)
+    toks = _bpe_final_toks(spark, sf_dir)
     dec = toks.groupBy("doc_id").agg(
         F.concat_ws(
             " ",

@@ -23,7 +23,12 @@ def run_to_memory(
     (``stream_state_parts``); None runs at the caller's
     ``spark.sql.shuffle.partitions``. The pin is held only across
     ``start()``: the query clones the session conf when it starts, so
-    the caller's conf is back before the first batch runs."""
+    the caller's conf is back before the first batch runs.
+
+    The sink's ``mem_<uuid8>`` temp view is dropped once the returned
+    DataFrame has resolved it: the DataFrame keeps the sink's rows, and
+    the session no longer pins them (one view per call would otherwise
+    live as long as the session)."""
     spark = df.sparkSession
     name = f"mem_{uuid.uuid4().hex[:8]}"
     w = (
@@ -38,7 +43,9 @@ def run_to_memory(
         with stream_state_parts(spark, parts=state_parts):
             q = w.start()
     q.awaitTermination()
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def write_stream_parquet(df: DataFrame, out_dir: str, checkpoint_dir: str):

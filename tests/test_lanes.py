@@ -45,7 +45,12 @@ LANE_QUERIES = {
         "c_sim_pq_adc",
         "c_sim_lsh_native",
     ],
-    "tok": ["c_token_bpe_encode"],
+    "tok": [
+        "c_token_bpe_encode",
+        "c_token_windows",
+        "c_token_bpe_decode",
+        "c_pack_sequences_bpe",
+    ],
     "uni": ["c_token_unigram", "c_token_unigram_encode"],
     "doremi": ["c_mix_doremi"],
     "nd": ["c_sim_nndescent"],

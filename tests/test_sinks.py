@@ -8,7 +8,10 @@ from __future__ import annotations
 import shutil
 import uuid
 
+from demo_segmenter_spark.registry import REGISTRY, load_all_operators
+from demo_segmenter_spark.sources import load_table
 from demo_segmenter_spark.streaming.sinks import (
+    run_to_memory,
     write_stream_foreach_batch,
     write_stream_parquet,
 )
@@ -100,3 +103,23 @@ def _link_parquet(src_dir, dst_dir, tag):
     for f in os.listdir(src_dir):
         if f.endswith(".parquet"):
             os.symlink(f"{src_dir}/{f}", f"{dst_dir}/{tag}_{f}")
+
+
+def test_run_to_memory_drops_its_view(spark):
+    """The memory sink's temp view is gone once run_to_memory returns,
+    and the returned DataFrame still reads every drained row."""
+    def mem_views():
+        return [t.name for t in spark.catalog.listTables()
+                if t.name.startswith("mem_")]
+
+    out = run_to_memory(stream_events(spark, SF_SMOKE), "append")
+    assert mem_views() == []
+    want = load_table(spark, SF_SMOKE, "events").select("event_id", "user_id")
+    got = out.select("event_id", "user_id")
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert got.count() == N_EVENTS_SMOKE  # reads again after the drop
+
+    load_all_operators()
+    rows = REGISTRY["a_tumbling_window_stream"].fn(spark, SF_SMOKE).collect()
+    assert len(rows) == 150  # tests/test_stream_state_budgets.py
+    assert mem_views() == []
