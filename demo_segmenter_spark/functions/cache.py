@@ -38,41 +38,51 @@ def exceeds_cap(df: DataFrame, cap: int) -> bool:
     scan above the cap. The decision always equals ``df.count() > cap``.
 
     - ``cap < 0`` (the forced-distributed A/B knob) short-circuits.
-    - A bare parquet scan (``df``'s optimized plan is only Project
-      nodes over one local-file parquet relation, e.g.
-      ``load_table(...).select(...)``) is answered from the files'
-      footers: their ``num_rows`` are summed until the sum passes
-      ``cap``. No Spark job runs.
-    - Any other plan (filters, joins, aggregates, persisted or
-      streaming inputs, non-local files) runs the bounded probe
+    - When ``df``'s optimized plan is only Project and Filter nodes
+      over one local-file parquet relation (e.g.
+      ``load_table(...).filter(...).select(...)``), the files' footer
+      ``num_rows`` are summed until the sum passes ``cap``. With no
+      Filter the sum is the exact row count and answers either way;
+      with a Filter it is an upper bound, so a sum <= ``cap`` answers
+      False and a larger one falls through to the probe. Neither
+      footer answer runs a Spark job.
+    - Any other plan (aggregates, joins, generators, unions, persisted
+      or streaming inputs, non-local files) runs the bounded probe
       ``count(limit(cap+1)) == min(total, cap+1)``: LocalLimit stops
       each partition at cap+1 rows and the optimizer prunes every
       column below the aggregate, so an above-cap table (the 100 TB
       case) pays a bounded probe instead of one full pass whose result
-      is thrown away (guide §1.2)."""
+      is thrown away (guide §1.2). A global aggregate is never
+      bounded by its input: over zero rows it still returns one."""
     if cap < 0:
         return True
-    files = _bare_parquet_files(df)
-    if files is not None:
+    scan = _bare_parquet_files(df)
+    if scan is not None:
         import pyarrow.parquet as pq
 
+        files, filtered = scan
         n = 0
         for f in files:
             n += pq.read_metadata(f).num_rows
             if n > cap:
-                return True
-        return False
+                break
+        if n <= cap or not filtered:
+            return n > cap
     return df.limit(cap + 1).count() > cap
 
 
-def _bare_parquet_files(df: DataFrame) -> list[str] | None:
-    """The local paths of the parquet files ``df`` reads when its
-    optimized plan is Project nodes over one parquet ``LogicalRelation``
-    (so ``df`` has exactly the files' rows); None for any other plan."""
+def _bare_parquet_files(df: DataFrame) -> tuple[list[str], bool] | None:
+    """``(paths, filtered)`` when ``df``'s optimized plan is Project and
+    Filter nodes over one parquet ``LogicalRelation``: the local paths
+    of the files it reads, and whether a Filter sits on the way (so
+    the files' rows bound ``df``'s rows instead of equalling them);
+    None for any other plan."""
     from urllib.parse import unquote, urlparse
 
     node = df._jdf.queryExecution().optimizedPlan()
-    while node.nodeName() == "Project":
+    filtered = False
+    while node.nodeName() in ("Project", "Filter"):
+        filtered |= node.nodeName() == "Filter"
         node = node.child()
     if not node.getClass().getName().endswith(".LogicalRelation"):
         return None
@@ -91,7 +101,7 @@ def _bare_parquet_files(df: DataFrame) -> list[str] | None:
         if u.scheme != "file":
             return None
         paths.append(unquote(u.path))
-    return paths
+    return paths, filtered
 
 
 def persist(df: DataFrame) -> DataFrame:

@@ -9,9 +9,11 @@ cap, ``block_lane`` coalesces the input into ONE partition and a
 ``mapInPandas`` kernel replays the whole algorithm in numpy; above
 it, the caller's distributed chain runs unchanged (the 100 TB path).
 The lane is lazy: the kernel runs when the caller's result does, and
-the gate reads a bare parquet scan's row count from its footers
-(``exceeds_cap``), so a gated query over a table builds without a
-Spark job. The tokenizer lane trains and encodes in that one task.
+the gate reads a projected (or filtered) parquet scan's row count, or
+a bound on it, from the footers (``exceeds_cap``), so a gated query
+over a table builds without a Spark job. The tokenizer lane trains and
+encodes in that one task; the lineitem-pair graph lanes dedup their
+edges in it (``np_dedup``).
 The kernels follow the house bit-exactness discipline: integer
 arithmetic where possible, left folds as cumulative sums, and every
 ``rnd()`` replayed through ``np_rnd``'s HALF_UP + Decimal audit.
@@ -29,10 +31,13 @@ from demo_segmenter_spark.functions.compat import EPS
 # when the gated input holds at most this many rows, and -1 forces the
 # distributed chain (tests and scripts patch this table in-process,
 # e.g. ``monkeypatch.setitem(lanes.CAPS, "emb", -1)``).
-# - graph: edge-list rows. 1 M edges (~16 MB) read 1.65 s in the lane
-#   vs 2.91 s distributed for pagerank at sf0.1 (590 k pairs); a box
-#   that charges first-touch page faults to fresh worker memory loses
-#   that race above ~250 k.
+# - graph: edge-list rows. The five lineitem-pair lanes count pair
+#   rows before their kernel dedups them (TPC-H almost never repeats
+#   an (orderkey, partkey) pair: sf0.1 has 600 000 rows for 599 935
+#   pairs); triangles and kcore count their distinct self-join edges.
+#   1 M edges (~16 MB) read 1.65 s in the lane vs 2.91 s distributed
+#   for pagerank at sf0.1; a box that charges first-touch page faults
+#   to fresh worker memory loses that race above ~250 k.
 # - emb, nd: corpus vectors (sf0.1 = 2 000 × 64 doubles ≈ 1 MB).
 # - tok: documents. The BPE lane trains the merges and emits the encoded
 #   corpus from one task (layer_c._bpe_encode_lane); at sf0.1 (5 000
@@ -125,6 +130,22 @@ def np_gather(batches, cols):
     return [
         (np.concatenate(out[c]) if out[c] else empty) for c in cols
     ]
+
+
+def np_dedup(o, p, w=None):
+    """The distinct ``(o, p)`` rows of parallel int64 arrays, sorted by
+    (o, p): the numpy twin of ``distinct()``. With ``w`` given, also
+    the minimum ``w`` per pair, the twin of ``groupBy(o, p).agg(min(w))``
+    (rows sort by (o, p, w), so each pair's first row carries it)."""
+    import numpy as np
+
+    order = np.lexsort((p, o) if w is None else (w, p, o))
+    o, p = o[order], p[order]
+    first = np.ones(len(o), dtype=bool)
+    first[1:] = (o[1:] != o[:-1]) | (p[1:] != p[:-1])
+    if w is None:
+        return o[first], p[first]
+    return o[first], p[first], w[order][first]
 
 
 def emb_gather(batches):

@@ -34,7 +34,12 @@ from demo_segmenter_spark.functions.compat import (
     sql_money_sum,
     sql_rnd,
 )
-from demo_segmenter_spark.functions.lanes import block_lane, np_gather, np_rnd
+from demo_segmenter_spark.functions.lanes import (
+    block_lane,
+    np_dedup,
+    np_gather,
+    np_rnd,
+)
 from demo_segmenter_spark.functions.scratch import scratch_dir
 from demo_segmenter_spark.registry import Bound, query
 from demo_segmenter_spark.sources import load_table
@@ -3017,14 +3022,17 @@ PAGERANK_DAMP = 0.85
 # distributed algorithm first"): the bounded-round graph queries run
 # 2-3 exchanges per unrolled round (join + groupBy + argmax window) on
 # a graph whose EDGE LIST fits one task by orders of magnitude at
-# fixture scale. Below CAPS["graph"] edges, the edge list (built
-# distributed — the wedge/distinct joins stay on the certified path)
-# coalesces into ONE mapInPandas task that replays every round in
-# numpy: integer label votes / peels are bit-exact by construction;
+# fixture scale. Below CAPS["graph"] edges, the edge list coalesces
+# into ONE mapInPandas task that replays every round in numpy. The
+# lineitem-pair lanes read the filtered, projected scan and dedup the
+# pairs in the kernel (lanes.np_dedup), so they build without a Spark
+# job; triangles and kcore build their self-join edges distributed
+# (the wedge/distinct joins stay on the certified path). In the task,
+# integer label votes / peels are bit-exact by construction;
 # pagerank's per-iteration rnd(·, 6) replays through the HALF_UP +
-# Decimal-audit kernel (lanes.np_rnd), with the same
-# noise-floor argument that already certifies Spark-vs-DuckDB float
-# sums under the EPS nudge. At 100 TB these graphs exceed the cap and
+# Decimal-audit kernel (lanes.np_rnd), with the same noise-floor
+# argument that already certifies Spark-vs-DuckDB float sums under
+# the EPS nudge. At 100 TB these graphs exceed the cap and
 # the distributed rounds run unchanged — the lane is the "subgraph
 # fits a task" tier (per-tenant graphs, filtered slices), exactly how
 # a production graph engine local-solves small components.
@@ -3045,6 +3053,25 @@ def _grouped_counts(keys_a, keys_b):
     starts = np.flatnonzero(brk)
     cnt = np.diff(np.r_[starts, len(a2)])
     return a2[starts], b2[starts], cnt
+
+
+def _pair_scan(spark, sf_dir, keep=None, *extra):
+    """The bipartite node pair (o, p) = (2·orderkey, 2·partkey+1) of
+    every lineitem row that ``keep`` passes, plus the ``extra``
+    columns, with NO dedup: the lane input of the pair-graph queries.
+    It stays a filtered, projected parquet scan, so the lane gate reads
+    its row bound from the footers without a Spark job; the kernels
+    dedup with ``np_dedup`` and the distributed chains persist the
+    distinct pairs themselves."""
+    li = load_table(spark, sf_dir, "lineitem")
+    if keep is not None:
+        li = li.filter(keep)
+    return li.select(
+        (F.col("l_orderkey") * 2).alias("o"),
+        (F.col("l_partkey") * 2 + 1).alias("p"),
+        *extra,
+    )
+
 
 _PAGERANK_EDGES_SQL = """
 WITH pairs AS (
@@ -3108,19 +3135,15 @@ def b_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     One groupBy(dst) shuffle per iteration with map-side partial sums;
     never a driver-side loop over collect()ed ranks. The iteration
     count is the driver loop; it is unrolled here so Catalyst sees one
-    plan and the oracle can replay it. Below CAPS["graph"] pairs
-    the block lane replays the iterations in one task (HALF_UP +
-    Decimal-audit kernel; same noise-floor argument the DuckDB oracle
-    already certifies)."""
+    plan and the oracle can replay it. Below CAPS["graph"] lineitem
+    pair rows the block lane reads the projected scan, dedups the pairs
+    and replays the iterations in one task (HALF_UP + Decimal-audit
+    kernel; same noise-floor argument the DuckDB oracle already
+    certifies); the persisted distinct edge list exists only on the
+    distributed chain."""
     from demo_segmenter_spark.functions.cache import persist
 
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = persist(
-        li.select(
-            (F.col("l_orderkey") * 2).alias("o"),
-            (F.col("l_partkey") * 2 + 1).alias("p"),
-        ).distinct()
-    )
+    raw = _pair_scan(spark, sf_dir)
     r6 = np_rnd(6)
     iters, damp = PAGERANK_ITERS, PAGERANK_DAMP
 
@@ -3128,7 +3151,7 @@ def b_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        o, p = np_gather(batches, ["o", "p"])
+        o, p = np_dedup(*np_gather(batches, ["o", "p"]))
         src = np.concatenate([o, p])
         dst = np.concatenate([p, o])
         # unique + searchsorted instead of return_inverse: this numpy's
@@ -3157,9 +3180,10 @@ def b_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    blk = block_lane(pairs, "graph", kern, "node long, pr double, rank long")
+    blk = block_lane(raw, "graph", kern, "node long, pr double, rank long")
     if blk is not None:
         return blk
+    pairs = persist(raw.distinct())
     both = F.array(
         F.struct(F.col("o").alias("src"), F.col("p").alias("dst")),
         F.struct(F.col("p").alias("src"), F.col("o").alias("dst")),
@@ -3377,26 +3401,20 @@ def b_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     pagerank's — labels live in a node-count table that AQE broadcasts
     against the persisted edge list, one groupBy(dst) shuffle per
     round with map-side MIN partials; never a driver-side loop. Below
-    CAPS["graph"] pairs the block lane replays the rounds in one
-    task — integer min-labels, bit-exact by construction."""
+    CAPS["graph"] lineitem pair rows the block lane dedups the pairs
+    and replays the rounds in one task — integer min-labels, bit-exact
+    by construction; the persisted edge list exists only on the
+    distributed chain."""
     from demo_segmenter_spark.functions.cache import persist
 
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = persist(
-        li.filter(F.col("l_quantity") >= LABELPROP_MIN_QTY)
-        .select(
-            (F.col("l_orderkey") * 2).alias("o"),
-            (F.col("l_partkey") * 2 + 1).alias("p"),
-        )
-        .distinct()
-    )
+    raw = _pair_scan(spark, sf_dir, F.col("l_quantity") >= LABELPROP_MIN_QTY)
     iters = LABELPROP_ITERS
 
     def kern(batches):
         import numpy as np
         import pandas as pd
 
-        o, p = np_gather(batches, ["o", "p"])
+        o, p = np_dedup(*np_gather(batches, ["o", "p"]))
         src = np.concatenate([o, p])
         dst = np.concatenate([p, o])
         nodes = np.unique(src)
@@ -3424,10 +3442,11 @@ def b_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     blk = block_lane(
-        pairs, "graph", kern, "component long, n_nodes long, min_node long"
+        raw, "graph", kern, "component long, n_nodes long, min_node long"
     )
     if blk is not None:
         return blk
+    pairs = persist(raw.distinct())
     both = F.array(
         F.struct(F.col("o").alias("src"), F.col("p").alias("dst")),
         F.struct(F.col("p").alias("src"), F.col("o").alias("dst")),
@@ -3536,26 +3555,20 @@ def b_graph_community(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted edge list (broadcast at fixture sf, co-partitioned
     shuffle at 100 TB). Rounds are a constant, not a convergence loop —
     the bounded-round contract that makes the plan static. Below
-    CAPS["graph"] pairs the block lane replays the rounds in one
-    task — all-integer votes, bit-exact by construction."""
+    CAPS["graph"] lineitem pair rows the block lane dedups the pairs
+    and replays the rounds in one task — all-integer votes, bit-exact
+    by construction; the persisted edge list exists only on the
+    distributed chain."""
     from demo_segmenter_spark.functions.cache import persist
 
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = persist(
-        li.filter(F.col("l_quantity") >= COMMUNITY_MIN_QTY)
-        .select(
-            (F.col("l_orderkey") * 2).alias("o"),
-            (F.col("l_partkey") * 2 + 1).alias("p"),
-        )
-        .distinct()
-    )
+    raw = _pair_scan(spark, sf_dir, F.col("l_quantity") >= COMMUNITY_MIN_QTY)
     iters = COMMUNITY_ITERS
 
     def kern(batches):
         import numpy as np
         import pandas as pd
 
-        o, p = np_gather(batches, ["o", "p"])
+        o, p = np_dedup(*np_gather(batches, ["o", "p"]))
         src = np.concatenate([o, p])
         dst = np.concatenate([p, o])
         nodes = np.unique(src)
@@ -3585,10 +3598,11 @@ def b_graph_community(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     blk = block_lane(
-        pairs, "graph", kern, "community long, n_nodes long, min_node long"
+        raw, "graph", kern, "community long, n_nodes long, min_node long"
     )
     if blk is not None:
         return blk
+    pairs = persist(raw.distinct())
     both = F.array(
         F.struct(F.col("o").alias("src"), F.col("p").alias("dst")),
         F.struct(F.col("p").alias("src"), F.col("o").alias("dst")),
@@ -3867,28 +3881,22 @@ def b_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays every round with zero tolerance. Scale story: one
     groupBy(dst) shuffle per round with map-side MIN partials against
     the persisted edge list — textbook distributed frontier expansion
-    (Pregel's BFS) as pure dataflow. Below CAPS["graph"] pairs the
-    block lane replays the rounds in one task — +inf stands for the
-    NULL "unreached" distance (min over all-inf stays inf, exactly
-    NULL-skipping MIN), distances stay exact small integers."""
+    (Pregel's BFS) as pure dataflow. Below CAPS["graph"] lineitem pair
+    rows the block lane dedups the pairs and replays the rounds in one
+    task — +inf stands for the NULL "unreached" distance (min over
+    all-inf stays inf, exactly NULL-skipping MIN), distances stay exact
+    small integers; the persisted edge list exists only on the
+    distributed chain."""
     from demo_segmenter_spark.functions.cache import persist
 
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = persist(
-        li.filter(F.col("l_quantity") >= LABELPROP_MIN_QTY)
-        .select(
-            (F.col("l_orderkey") * 2).alias("o"),
-            (F.col("l_partkey") * 2 + 1).alias("p"),
-        )
-        .distinct()
-    )
+    raw = _pair_scan(spark, sf_dir, F.col("l_quantity") >= LABELPROP_MIN_QTY)
     rounds, src_max = BFS_ROUNDS, 2 * BFS_SOURCE_MAX_PARTKEY + 1
 
     def kern(batches):
         import numpy as np
         import pandas as pd
 
-        o, p = np_gather(batches, ["o", "p"])
+        o, p = np_dedup(*np_gather(batches, ["o", "p"]))
         src = np.concatenate([o, p])
         dst = np.concatenate([p, o])
         nodes = np.unique(src)
@@ -3920,10 +3928,11 @@ def b_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     blk = block_lane(
-        pairs, "graph", kern, "dist long, n_nodes long, min_node long"
+        raw, "graph", kern, "dist long, n_nodes long, min_node long"
     )
     if blk is not None:
         return blk
+    pairs = persist(raw.distinct())
     both = F.array(
         F.struct(F.col("o").alias("src"), F.col("p").alias("dst")),
         F.struct(F.col("p").alias("src"), F.col("o").alias("dst")),
@@ -5190,19 +5199,21 @@ def b_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle per round with map-side MIN partials against the persisted
     weighted edge list — Pregel's SSSP as pure dataflow; rounds at
     100 TB are the driver loop with the same per-round cost. Below
-    CAPS["graph"] pairs the block lane replays the rounds in one
-    task — integer weights, +inf for the NULL "unreached" distance
-    (the b_graph_bfs kernel generalized to w in 1..3)."""
+    CAPS["graph"] lineitem pair rows the block lane keeps each pair's
+    minimum weight and replays the rounds in one task — integer
+    weights, +inf for the NULL "unreached" distance (the b_graph_bfs
+    kernel generalized to w in 1..3); the persisted weighted edge list
+    exists only on the distributed chain."""
     from demo_segmenter_spark.functions.cache import persist
 
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = persist(
-        li.filter(F.col("l_quantity") <= SSSP_MAX_QTY)
-        .groupBy(
-            (F.col("l_orderkey") * 2).alias("o"),
-            (F.col("l_partkey") * 2 + 1).alias("p"),
-        )
-        .agg(F.min("l_quantity").cast("long").alias("w"))
+    # min(l_quantity) then cast equals cast then min: the cast is
+    # monotone, so the lane's per-pair min over cast weights is the
+    # chain's rollup
+    raw = _pair_scan(
+        spark,
+        sf_dir,
+        F.col("l_quantity") <= SSSP_MAX_QTY,
+        F.col("l_quantity").cast("long").alias("w"),
     )
     rounds, src_max = SSSP_ROUNDS, 2 * SSSP_SOURCE_MAX_PARTKEY + 1
 
@@ -5210,7 +5221,7 @@ def b_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        o, p, ew = np_gather(batches, ["o", "p", "w"])
+        o, p, ew = np_dedup(*np_gather(batches, ["o", "p", "w"]))
         src = np.concatenate([o, p])
         dst = np.concatenate([p, o])
         nodes = np.unique(src)
@@ -5242,10 +5253,11 @@ def b_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     blk = block_lane(
-        pairs, "graph", kern, "dist long, n_nodes long, min_node long"
+        raw, "graph", kern, "dist long, n_nodes long, min_node long"
     )
     if blk is not None:
         return blk
+    pairs = persist(raw.groupBy("o", "p").agg(F.min("w").alias("w")))
     both = F.array(
         F.struct(F.col("o").alias("src"), F.col("p").alias("dst"), F.col("w")),
         F.struct(F.col("p").alias("src"), F.col("o").alias("dst"), F.col("w")),

@@ -120,9 +120,10 @@ def test_kcore_kernel_matches_spark_reference(spark):
 
 
 def test_pagerank_block_lane_fires_below_cap(spark):
-    """At sf0.001 the pairs count is far below CAPS["graph"], so the
-    registered query must return the block plan (a mapInPandas with
-    zero exchanges past the gather) — and its oracle hash-match at
+    """At sf0.001 the lineitem pair rows (counted before the kernel
+    dedups them) are far below CAPS["graph"], so the registered query
+    must return the block plan (one mapInPandas over the projected
+    scan, zero exchanges) — and its oracle hash-match at
     sf0.001/0.01/0.1 certifies the kernel's values; here pin the plan
     shape (the rnd(·, 6) twin is pinned in tests/test_lanes.py)."""
     from demo_segmenter_spark.plans.inspect import explain_str

@@ -572,3 +572,52 @@ def test_sssp_matches_python_reference(spark):
             for r in REGISTRY["b_graph_sssp"].fn(spark, sf).collect()
         ]
         assert got == want, (trial, got, want)
+
+
+# ------------------- kernel dedup on repeated pairs ------------------
+
+
+def test_pair_lanes_dedup_repeated_pairs_like_their_chains(spark, monkeypatch):
+    # TPC-H almost never repeats an (orderkey, partkey) pair, so the
+    # fixtures leave the kernels' dedup (lanes.np_dedup) idle. Here
+    # every pair repeats 1-3 times with different quantities, across
+    # every query's filter; the weights 1.2 / 1.7 / 2.5 / 2.9 make the
+    # pair minimum differ from the other repeats in the fractional part
+    # only, so sssp's min-then-cast weight is exercised.
+    from demo_segmenter_spark.functions import lanes
+    from demo_segmenter_spark.functions.cache import release_persisted
+    from demo_segmenter_spark.plans.inspect import explain_str
+
+    qtys = [1.2, 1.7, 2.5, 2.9, 3.0, 40.5, 45.0, 48.0, 49.5, 50.0]
+
+    def rows_of(name, sf):
+        df = REGISTRY[name].fn(spark, sf)
+        plan = explain_str(df)
+        got = sorted(tuple(r) for r in df.collect())
+        release_persisted(spark, owner=True)
+        return plan, got
+
+    rng = random.Random(59)
+    for trial in range(2):
+        rows = [
+            (o, p, rng.choice(qtys))
+            for o in range(30)
+            for p in rng.sample(range(12), rng.randint(1, 4))
+            for _ in range(rng.randint(1, 3))
+        ]
+        pairs = Counter((o, p) for o, p, _ in rows)
+        assert sum(c > 1 for c in pairs.values()) > len(pairs) // 3
+        sf = _write_lineitem(spark, rows)
+        for name in (
+            "b_graph_pagerank",
+            "b_graph_components",
+            "b_graph_community",
+            "b_graph_bfs",
+            "b_graph_sssp",
+        ):
+            plan, got = rows_of(name, sf)
+            with monkeypatch.context() as m:
+                m.setitem(lanes.CAPS, "graph", -1)
+                ref_plan, ref = rows_of(name, sf)
+            assert "MapInPandas" in plan and "MapInPandas" not in ref_plan
+            assert got and got == ref, (trial, name, got[:5], ref[:5])

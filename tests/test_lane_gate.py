@@ -1,9 +1,12 @@
 """The lane gate ``functions/cache.exceeds_cap``: a bare parquet scan is
-answered from the files' footers without a Spark job, every other plan
-takes the bounded ``limit(cap+1).count()`` probe, and both agree with
+answered from the files' footers without a Spark job, a filtered scan
+is bounded by them (caps at or above the bound answer without a job,
+caps below it probe), every other plan takes the bounded
+``limit(cap+1).count()`` probe, and every answer agrees with
 ``df.count() > cap``. Also guards jobless construction: building the
-lane queries of the llm pipeline submits no Spark job, so an eager
-collect or probe re-added to their construction fails here."""
+lane queries of the llm pipeline and the lineitem-pair graph lanes
+submits no Spark job, so an eager collect or probe re-added to their
+construction fails here."""
 
 from __future__ import annotations
 
@@ -77,12 +80,48 @@ def test_other_plans_take_the_probe(spark, kind):
         docs.unpersist()
 
 
+def test_filtered_scan_is_bounded_by_its_footers(spark):
+    """A Filter makes the footer sum an upper bound: caps at or above
+    it answer False with no job, caps below it take the probe."""
+    docs = load_table(spark, SF_SMOKE, "documents")
+    total = docs.count()
+    df = docs.filter(F.col("doc_id") % 3 == 0).select("doc_id")
+    n = df.count()
+    assert 0 < n and n + 1 < total - 1
+    for cap in (total, total + 1, 2 * total):
+        got, jobs = _jobs_during(spark, lambda: exceeds_cap(df, cap))
+        assert got is False and not jobs, cap
+    for cap in (n - 1, n, n + 1, total - 1):
+        got, jobs = _jobs_during(spark, lambda: exceeds_cap(df, cap))
+        assert got == (n > cap) and jobs, cap
+
+
+def test_global_aggregate_over_empty_filter_takes_the_probe(spark):
+    """Zero input rows still aggregate to one row, so an Aggregate is
+    never bounded by the footers under it."""
+    docs = load_table(spark, SF_SMOKE, "documents")
+    df = docs.filter(F.col("doc_id") < 0).groupBy().count()
+    for cap in (0, 1):
+        got, jobs = _jobs_during(spark, lambda: exceeds_cap(df, cap))
+        assert got == (df.count() > cap) == (cap == 0) and jobs, cap
+
+
+GRAPH_PAIR_LANES = [
+    "b_graph_pagerank",
+    "b_graph_components",
+    "b_graph_community",
+    "b_graph_bfs",
+    "b_graph_sssp",
+]
+
+
 @pytest.mark.parametrize(
-    "name", ["c_token_bpe_encode", "c_embed_pca", "c_dedup_ngram"]
+    "name",
+    ["c_token_bpe_encode", "c_embed_pca", "c_dedup_ngram"] + GRAPH_PAIR_LANES,
 )
 def test_lane_construction_submits_no_job(spark, name):
     # the first read of a path infers its schema with a job; warm it
-    for t in ("documents", "embeddings"):
+    for t in ("documents", "embeddings", "lineitem"):
         load_table(spark, SF_SMOKE, t)
     df, jobs = _jobs_during(spark, lambda: REGISTRY[name].fn(spark, SF_SMOKE))
     try:

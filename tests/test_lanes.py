@@ -24,10 +24,13 @@ load_all_operators()
 
 LANE_QUERIES = {
     "graph": [
+        "b_graph_pagerank",
         "b_graph_components",
+        "b_graph_community",
         "b_graph_bfs",
         "b_graph_sssp",
         "b_graph_triangles",
+        "b_graph_kcore",
     ],
     "emb": [
         "c_embed_pca",

@@ -657,22 +657,23 @@ def test_shuffle_budgets_table(spark):
         # pays each once), plus 3 unrolled share-join + rank-groupBy
         # rounds and the final top-100 sort; the share table is
         # node-sized so AQE broadcasts the per-iteration join
-        # r12 block lane at fixture scale: the pairs distinct is the
-        # only exchange (iterations replay in one task); above
-        # CAPS["graph"] the distributed rounds run (~12)
-        "b_graph_pagerank": 1,
+        # r12 block lane at fixture scale: zero exchanges (the kernel
+        # dedups the scanned pairs and replays the iterations in one
+        # task); above CAPS["graph"] the distributed rounds run (~12)
+        "b_graph_pagerank": 0,
         # linear unrolled min-label rounds (self-loop edge list keeps
         # the label table referenced once per round); the persisted
         # half/edges subtrees repeat in the static plan like pagerank's
-        # r12 block lane at fixture scale: pairs distinct only (the
-        # min-label rounds replay in one task); above CAPS["graph"]
-        # the distributed rounds run (~15)
-        "b_graph_components": 1,
+        # r12 block lane at fixture scale: zero exchanges (pairs dedup
+        # and the min-label rounds replay in one task); above
+        # CAPS["graph"] the distributed rounds run (~15)
+        "b_graph_components": 0,
         # frequency-vote LPA: 3 unrolled rounds, each a groupBy(node,lbl)
         # count + the per-node argmax window (two node-keyed exchanges vs
         # components' one min-agg), over the same persisted edge subtrees
-        # r12 block lane: pairs distinct only (votes replay in-task)
-        "b_graph_community": 1,
+        # r12 block lane: zero exchanges (pairs dedup and votes replay
+        # in-task)
+        "b_graph_community": 0,
         # 3 unrolled power iterations, each: posexplode+groupBy(dim)
         # collapsing map-side to 64 rows, a single-partition window for
         # the norm, and the 1-row component rebuild — all intermediates
@@ -815,12 +816,14 @@ def test_shuffle_budgets_table(spark):
         # enumeration and the close replay in one task (the distributed
         # lane above CAPS["graph"] measured 44 static exchanges)
         "b_graph_triangles": 3,
-        # min-plus BFS: r12 block lane — pairs distinct only (the
-        # relaxation rounds replay in one task; distributed lane ~16)
-        "b_graph_bfs": 1,
-        # weighted Bellman-Ford: same lane as BFS — the weighted pair
-        # rollup (groupBy min) is the one exchange
-        "b_graph_sssp": 1,
+        # min-plus BFS: r12 block lane — zero exchanges (pairs dedup
+        # and the relaxation rounds replay in one task; distributed
+        # lane ~16)
+        "b_graph_bfs": 0,
+        # weighted Bellman-Ford: same lane as BFS — zero exchanges (the
+        # kernel keeps each pair's minimum weight; the groupBy-min
+        # rollup runs only on the distributed chain)
+        "b_graph_sssp": 0,
         # k-core peeling: each round's edge set is read TWICE (degree
         # pass + restriction base) by construction — filter-by-derived-
         # stat can't be a single reference — so the static plan
