@@ -347,10 +347,12 @@ def _run_once(name: str, spark, sf_dir: str) -> None:
 def _streaming_throughput(spark, sf_dir: str, target_records: int = 1_000_000) -> dict:
     """Fixed-size streaming wire-path measurement: replicate the
     events table into an append-only log of ~target_records, consume
-    the whole topic through the events_log source (Arrow RecordBatch
-    executor reads, offset planning, key-hash partitions) into a
-    parquet sink with exactly-once checkpointing, and report the
-    end-to-end rate. Fixed size (not sf-proportional) so the anchor is
+    the whole topic through the events_log source into a parquet sink
+    with exactly-once checkpointing, and report the end-to-end rate.
+    The source plans the ~100 log files into at most 16 read tasks
+    (its ``partitions``) of consecutive files; each task reads each of
+    its files once and emits Arrow RecordBatches carrying every row's
+    key-hash partition and offset. Fixed size (not sf-proportional) so the anchor is
     comparable across rounds; best-of-2 like the batch rows. Previously
     this number lived only in BASELINE.md prose (489-517k rec/s at 5M
     records) — as a bench key, a wire-path regression shows up as an

@@ -3522,6 +3522,45 @@ def _community_iter_sql(i: int) -> str:
 )"""
 
 
+def _community_kernel(batches, iters=COMMUNITY_ITERS):
+    """b_graph_community's block lane: dedup the (o, p) pair rows,
+    replay ``iters`` synchronous label-propagation rounds over the
+    undirected edges plus one self-loop per node, and yield the top
+    100 communities. All-integer votes, bit-exact against the
+    distributed rounds."""
+    import numpy as np
+    import pandas as pd
+
+    o, p = np_dedup(*np_gather(batches, ["o", "p"]))
+    src = np.concatenate([o, p])
+    dst = np.concatenate([p, o])
+    nodes = np.unique(src)
+    # self-loop damping rides the edge list, exactly as the
+    # distributed lane unions nodes as (src, src) edges
+    sidx = np.searchsorted(nodes, np.concatenate([src, nodes]))
+    didx = np.searchsorted(nodes, np.concatenate([dst, nodes]))
+    lbl = nodes.copy()
+    for _ in range(iters):
+        gd, gl, cnt = _grouped_counts(didx, lbl[sidx])
+        order = np.lexsort((gl, -cnt, gd))
+        gd2, gl2 = gd[order], gl[order]
+        first = np.r_[True, gd2[1:] != gd2[:-1]]
+        lbl = gl2[first]  # gd2[first] == 0..n-1 (every node votes)
+    order = np.lexsort((nodes, lbl))  # by label, nodes asc within
+    l2, n2 = lbl[order], nodes[order]
+    starts = np.flatnonzero(np.r_[True, l2[1:] != l2[:-1]])
+    n_nodes = np.diff(np.r_[starts, len(l2)])
+    comm, min_node = l2[starts], n2[starts]
+    top = np.lexsort((comm, -n_nodes))[:100]
+    yield pd.DataFrame(
+        {
+            "community": comm[top],
+            "n_nodes": n_nodes[top],
+            "min_node": min_node[top],
+        }
+    )
+
+
 @query(
     "b_graph_community",
     oracle=_COMMUNITY_EDGES_SQL
@@ -3562,43 +3601,11 @@ def b_graph_community(spark: SparkSession, sf_dir: str) -> DataFrame:
     from demo_segmenter_spark.functions.cache import persist
 
     raw = _pair_scan(spark, sf_dir, F.col("l_quantity") >= COMMUNITY_MIN_QTY)
-    iters = COMMUNITY_ITERS
-
-    def kern(batches):
-        import numpy as np
-        import pandas as pd
-
-        o, p = np_dedup(*np_gather(batches, ["o", "p"]))
-        src = np.concatenate([o, p])
-        dst = np.concatenate([p, o])
-        nodes = np.unique(src)
-        # self-loop damping rides the edge list, exactly as the
-        # distributed lane unions nodes as (src, src) edges
-        sidx = np.searchsorted(nodes, np.concatenate([src, nodes]))
-        didx = np.searchsorted(nodes, np.concatenate([dst, nodes]))
-        lbl = nodes.copy()
-        for _ in range(iters):
-            gd, gl, cnt = _grouped_counts(didx, lbl[sidx])
-            order = np.lexsort((gl, -cnt, gd))
-            gd2, gl2 = gd[order], gl[order]
-            first = np.r_[True, gd2[1:] != gd2[:-1]]
-            lbl = gl2[first]  # gd2[first] == 0..n-1 (every node votes)
-        order = np.lexsort((nodes, lbl))  # by label, nodes asc within
-        l2, n2 = lbl[order], nodes[order]
-        starts = np.flatnonzero(np.r_[True, l2[1:] != l2[:-1]])
-        n_nodes = np.diff(np.r_[starts, len(l2)])
-        comm, min_node = l2[starts], n2[starts]
-        top = np.lexsort((comm, -n_nodes))[:100]
-        yield pd.DataFrame(
-            {
-                "community": comm[top],
-                "n_nodes": n_nodes[top],
-                "min_node": min_node[top],
-            }
-        )
-
     blk = block_lane(
-        raw, "graph", kern, "community long, n_nodes long, min_node long"
+        raw,
+        "graph",
+        _community_kernel,
+        "community long, n_nodes long, min_node long",
     )
     if blk is not None:
         return blk

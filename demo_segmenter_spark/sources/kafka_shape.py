@@ -38,15 +38,22 @@ on every start). Arrow loads it behind the scenes in
 ``ChunkedArray.to_numpy``, ``pa.array`` over a numpy array or a Python
 list, and ``pq.read_table`` (through ``pyarrow.dataset``); use
 ``pq.ParquetFile`` and ``np.frombuffer`` over the column buffers there.
-The executor read path is exempt: its reused workers pay the import
-once.
+The executor read follows the same rule: a drain's read is often a
+single task, so a pandas import in it would sit on the batch's
+critical path whenever its Python worker is fresh.
 
-Scale note: ``partitions()`` plans one InputPartition per log
-partition per batch — executors read only their slice, nothing
-funnels through the driver (the driver touches metadata only: file
-listing + per-partition counts). With a real broker the read() body
-becomes a consumer.poll loop; every offset/partition mechanism above
-is unchanged — that is the point of the emulation.
+Scale note: ``partitions()`` plans read tasks as *file groups*: the
+log files holding rows of the batch's window, split in append order
+into at most ``n_partitions`` contiguous groups balanced by those rows
+(the log partition count caps the tasks as a consumer group's size
+caps its consumers). Each task reads each of its files once and emits
+the rows of every log partition in them, with exact per-partition
+offsets; nothing funnels through the driver, which touches metadata
+only (file listing + the cached per-partition counts). The per-batch
+cost is one file read per file, not one per (file, partition). With a
+real broker the read() body becomes a consumer.poll loop; every
+offset/partition mechanism above is unchanged — that is the point of
+the emulation.
 """
 
 from __future__ import annotations
@@ -97,62 +104,70 @@ def _log_files(path: str) -> list[str]:
     )
 
 
+def _int64_values(table, name: str, fpath: str):
+    """Column ``name`` as one int64 numpy array, each chunk viewed in
+    place over its data buffer (pandas-free, see the module
+    docstring). Nulls raise TypeError."""
+    import numpy as np
+    import pyarrow as pa
+
+    parts = [np.empty(0, dtype=np.int64)]
+    for chunk in table.column(name).chunks:
+        if chunk.null_count:
+            raise TypeError(f"{fpath}: '{name}' has {chunk.null_count} nulls")
+        if chunk.type != pa.int64():
+            chunk = chunk.cast(pa.int64())
+        parts.append(
+            np.frombuffer(
+                chunk.buffers()[1], dtype=np.int64, count=len(chunk),
+                offset=chunk.offset * 8,
+            )
+        )
+    return np.concatenate(parts)
+
+
+def _arrow(values):
+    """A contiguous numpy array as an Arrow array over its buffer
+    (pandas-free, unlike ``pa.array``)."""
+    import pyarrow as pa
+
+    return pa.Array.from_buffers(
+        pa.from_numpy_dtype(values.dtype), len(values),
+        [None, pa.py_buffer(values)],
+    )
+
+
 def _file_partition_counts(fpath: str, n_parts: int) -> list[int]:
     """Rows per log partition inside one committed file (user_id scan
     only, vectorized bincount). Committed files are immutable (atomic
     rename, append-only log), so callers may cache the result
-    forever. Pandas-free (see the module docstring): each chunk is
-    viewed in place over its int64 data buffer."""
+    forever."""
     import numpy as np
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     with pq.ParquetFile(fpath) as pf:
-        col = pf.read(columns=["user_id"]).column("user_id")
-    counts = np.zeros(n_parts, dtype=np.int64)
-    for chunk in col.chunks:
-        if chunk.null_count:
-            raise TypeError(f"{fpath}: 'user_id' has {chunk.null_count} nulls")
-        if chunk.type != pa.int64():
-            chunk = chunk.cast(pa.int64())
-        uid = np.frombuffer(
-            chunk.buffers()[1], dtype=np.int64, count=len(chunk),
-            offset=chunk.offset * 8,
-        )
-        counts += np.bincount(uid % n_parts, minlength=n_parts)
-    return counts.tolist()
+        t = pf.read(columns=["user_id"])
+    uid = _int64_values(t, "user_id", fpath)
+    return np.bincount(uid % n_parts, minlength=n_parts).tolist()
 
 
 def _partition_rows(
     files: list[str],
     part_id: int,
     n_parts: int,
-    bases: list[int] | None = None,
     start: int = 0,
     end: float = float("inf"),
 ):
-    """One partition's rows with offsets in [start, end), append order.
-
-    With per-file offset ``bases`` (bases[i] = this partition's
-    cumulative offset at the start of files[i], plus a final entry for
-    the log end; planned driver-side from the immutable-file count
-    cache), files wholly before ``start`` are never OPENED and
-    iteration stops at the first file at/past ``end`` — the seek a real
-    consumer gets from the broker's offset index, which keeps a
-    long-lived query's micro-batch cost proportional to the NEW rows
-    rather than the whole log. Without bases every file is scanned and
-    offsets count from 0 (compat path; same yielded rows)."""
+    """The scalar reference for ``EventsLogStreamReader.read``: one
+    partition's rows with offsets in [start, end), in append order,
+    walked row at a time through every file with offsets counted from
+    0. Nothing reads through it; tests/test_kafka_shape.py compares the
+    vectorized read against it."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     off = 0
-    for i, fpath in enumerate(files):
-        if bases is not None:
-            if bases[i + 1] <= start:
-                continue  # wholly before the requested range: never opened
-            if bases[i] >= end:
-                break
-            off = bases[i]
+    for fpath in files:
         with pq.ParquetFile(fpath) as pf:
             ts_col = "ts_us" if "ts_us" in pf.schema_arrow.names else "ts"
             t = pf.read(columns=["event_id", ts_col, "user_id", "event_type", "value"])
@@ -184,84 +199,17 @@ def _partition_rows(
                 off += 1
 
 
-def _slice_record_batches(
-    files: list[str],
-    part_id: int,
-    n_parts: int,
-    bases: list[int],
-    start: int,
-    end: int,
-):
-    """Vectorized executor read: per overlapping file, one pyarrow
-    filter + slice, yielded as Arrow RecordBatches — Spark's Python
-    DataSource API consumes Arrow directly, so no per-row Python tuple
-    ever exists on the wire path (measured ~20× the row-at-a-time
-    throughput at sf0.1). Row/offset semantics are IDENTICAL to
-    _partition_rows, which stays as the scalar reference twin; the
-    equivalence is pinned in tests/test_kafka_shape.py."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+class _FileGroup(InputPartition):
+    """One read task: a run of consecutive log files, each read once.
+    ``bases[i][p]`` is partition p's first offset in ``files[i]``;
+    ``start[p]`` and ``end[p]`` bound partition p's offset window."""
 
-    for i, fpath in enumerate(files):
-        lo_off, hi_off = bases[i], bases[i + 1]
-        if hi_off <= start:
-            continue  # wholly before the range: never opened
-        if lo_off >= end:
-            break
-        with pq.ParquetFile(fpath) as pf:
-            ts_col = "ts_us" if "ts_us" in pf.schema_arrow.names else "ts"
-            t = pf.read(columns=["event_id", ts_col, "user_id", "event_type", "value"])
-        uid = t.column("user_id").to_numpy(zero_copy_only=False)
-        ft = t.filter(pa.array(uid % n_parts == part_id))
-        # partition-local offset range inside this file
-        lo = max(start - lo_off, 0)
-        hi = min(end, hi_off) - lo_off
-        ft = ft.slice(lo, hi - lo)
-        if ft.num_rows == 0:
-            continue
-        if ts_col == "ts_us":
-            ts_us = ft.column("ts_us").cast(pa.int64())
-        else:
-            col = ft.column("ts")
-            if not pa.types.is_timestamp(col.type):
-                raise TypeError(
-                    f"{fpath}: 'ts' must be a parquet timestamp column, "
-                    f"got {col.type}"
-                )
-            div, mult = US_SCALE[col.type.unit]
-            raw = col.cast(pa.int64()).to_numpy(zero_copy_only=False)
-            ts_us = pa.array(raw // div * mult, type=pa.int64())
-        n = ft.num_rows
-        out = pa.table(
-            {
-                "event_id": ft.column("event_id").cast(pa.int64()),
-                "ts_us": ts_us,
-                "user_id": ft.column("user_id").cast(pa.int64()),
-                "event_type": ft.column("event_type").cast(pa.string()),
-                "value": ft.column("value").cast(pa.float64()),
-                "log_partition": pa.array(
-                    np.full(n, part_id, dtype=np.int32), type=pa.int32()
-                ),
-                "log_offset": pa.array(
-                    np.arange(lo_off + lo, lo_off + lo + n, dtype=np.int64),
-                    type=pa.int64(),
-                ),
-            }
-        )
-        yield from out.to_batches()
-
-
-class _LogSlice(InputPartition):
-    def __init__(self, files, part_id, n_parts, start, end, bases=None):
+    def __init__(self, files, bases, n_parts, start, end):
         self.files = files
-        self.part_id = part_id
+        self.bases = bases
         self.n_parts = n_parts
         self.start = start
         self.end = end
-        # per-file cumulative offsets for THIS partition (len(files)+1
-        # entries); lets the executor seek instead of replaying the log
-        self.bases = bases
 
 
 class EventsLogStreamReader(DataSourceStreamReader):
@@ -300,39 +248,94 @@ class EventsLogStreamReader(DataSourceStreamReader):
         return self._ends()
 
     def partitions(self, start: dict, end: dict):
-        files = _log_files(self.path)
-        # bases[p][i] = partition p's first offset in files[i]
-        per_file = [self._file_counts(f) for f in files]
-        bases = {p: [0] for p in range(self.n_parts)}
-        for counts in per_file:
-            for p in range(self.n_parts):
-                bases[p].append(bases[p][-1] + counts[p])
+        """Plan from the count cache alone: files with no row inside
+        the window are dropped (never opened, the seek a broker's
+        offset index gives), and the rest split, in append order, into
+        at most ``n_parts`` contiguous groups balanced by their rows in
+        the window, as a consumer group's size caps its consumers."""
+        n = self.n_parts
+        lo = [start.get(str(p), 0) for p in range(n)]
+        hi = [end.get(str(p), 0) for p in range(n)]
+        planned = []  # (file, its per-partition bases, its rows in window)
+        base = [0] * n
+        for fpath in _log_files(self.path):
+            counts = self._file_counts(fpath)
+            rows = sum(
+                max(0, min(b + c, h) - max(b, s))
+                for b, c, s, h in zip(base, counts, lo, hi)
+            )
+            if rows:
+                planned.append((fpath, base, rows))
+            base = [b + c for b, c in zip(base, counts)]
+        total = sum(rows for _, _, rows in planned)
+        k = min(n, len(planned))
+        groups: dict[int, list] = {}
+        seen = 0
+        for fpath, b, rows in planned:
+            # the group of the file's middle row: contiguous, balanced
+            groups.setdefault((2 * seen + rows) * k // (2 * total), []).append(
+                (fpath, b)
+            )
+            seen += rows
         return [
-            _LogSlice(files, p, self.n_parts, start.get(str(p), 0), e, bases[p])
-            for p in range(self.n_parts)
-            for e in [end.get(str(p), 0)]
-            if e > start.get(str(p), 0)
+            _FileGroup([f for f, _ in g], [b for _, b in g], n, lo, hi)
+            for g in groups.values()
         ]
 
-    def read(self, partition: _LogSlice):
-        bases = partition.bases
-        if bases is None:  # hand-built slice: plan offsets on the fly
-            bases = [0]
-            for f in partition.files:
-                bases.append(
-                    bases[-1]
-                    + _file_partition_counts(f, partition.n_parts)[
-                        partition.part_id
-                    ]
+    def read(self, partition: _FileGroup):
+        """Vectorized executor read, yielded as Arrow RecordBatches
+        (Spark's Python DataSource API consumes Arrow directly, so no
+        per-row Python tuple exists on the wire path). Each file is
+        read once and emits the rows of every partition inside its
+        window; a row's offset is its file's base for the row's
+        partition plus its rank among the file's rows of that
+        partition, so rows and offsets equal _partition_rows'."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        n = partition.n_parts
+        lo = np.asarray(partition.start, dtype=np.int64)
+        hi = np.asarray(partition.end, dtype=np.int64)
+        for fpath, base in zip(partition.files, partition.bases):
+            with pq.ParquetFile(fpath) as pf:
+                ts_col = "ts_us" if "ts_us" in pf.schema_arrow.names else "ts"
+                t = pf.read(
+                    columns=["event_id", ts_col, "user_id", "event_type", "value"]
                 )
-        yield from _slice_record_batches(
-            partition.files,
-            partition.part_id,
-            partition.n_parts,
-            bases,
-            partition.start,
-            partition.end,
-        )
+            part = _int64_values(t, "user_id", fpath) % n
+            counts = np.bincount(part, minlength=n)
+            order = np.argsort(part, kind="stable")  # by partition, append order
+            rank = np.empty_like(order)
+            rank[order] = np.arange(len(part)) - np.repeat(
+                np.cumsum(counts) - counts, counts
+            )
+            off = np.asarray(base, dtype=np.int64)[part] + rank
+            keep = np.flatnonzero((off >= lo[part]) & (off < hi[part]))
+            ft = t.take(_arrow(keep))
+            if ts_col == "ts_us":
+                ts_us = ft.column("ts_us").cast(pa.int64())
+            else:
+                col = ft.column("ts")
+                if not pa.types.is_timestamp(col.type):
+                    raise TypeError(
+                        f"{fpath}: 'ts' must be a parquet timestamp column, "
+                        f"got {col.type}"
+                    )
+                div, mult = US_SCALE[col.type.unit]
+                ts_us = _arrow(_int64_values(ft, "ts", fpath) // div * mult)
+            out = pa.table(
+                {
+                    "event_id": ft.column("event_id").cast(pa.int64()),
+                    "ts_us": ts_us,
+                    "user_id": ft.column("user_id").cast(pa.int64()),
+                    "event_type": ft.column("event_type").cast(pa.string()),
+                    "value": ft.column("value").cast(pa.float64()),
+                    "log_partition": _arrow(part[keep].astype(np.int32)),
+                    "log_offset": _arrow(off[keep]),
+                }
+            )
+            yield from out.to_batches()
 
     def commit(self, end: dict) -> None:
         # Offsets are durable in the query checkpoint; a broker-backed

@@ -1,17 +1,28 @@
 #!/usr/bin/env python
 """Above-cap fixture bench (round-13, verdict r12 ask #1): build a
 fixture that sits ABOVE the block-lane caps — embeddings replicated to
-26 k vectors (> lanes.CAPS emb / nd = 20 k), lineitem replicated
-so the graph queries see > lanes.CAPS graph = 1 M distinct
-edges, and documents replicated to 125 k docs (> lanes.CAPS shingle =
-100 k) in disjoint (lang, source) blocks — and run the gated families on it with NO cap overrides, so the
-lane gates route to the distributed chains naturally and those chains
-get timed (not just row-identity-tested) every round.
+26 k vectors (> lanes.CAPS emb / nd = 20 k), lineitem replicated to
+1.2 M rows (> lanes.CAPS graph = 1 M), and documents replicated to
+125 k docs (> lanes.CAPS shingle = 100 k) in disjoint (lang, source)
+blocks — and run the gated families on it with NO cap overrides, so
+the lane gates route to the distributed chains naturally and those
+chains get timed (not just row-identity-tested) every round.
+
+The graph gates count the lineitem rows each query keeps, so on this
+fixture only ``b_graph_pagerank`` (every row) is above the graph cap
+and runs its chain. Components and bfs (quantity >= 48), sssp
+(quantity <= 3), community and kcore (quantity >= 40) keep far fewer
+rows and take their lanes. Each query's route is recorded beside its
+seconds, so a lane time is never read as a chain time.
+
+It also times two events_log drains above fixture scale, where the
+source's read-task count matters (``STREAM_DRAINS``): one 400 k-row
+file at 8 log partitions and 100 files at 16.
 
 Replication is deterministic: copy r gets id-offset keys derived from
 the fixture maxima, so replicas can never collide (the scale_smoke
 stride lesson). Writes ABOVECAP_r13.json with per-query seconds and
-the fixture row counts.
+routes, the drain seconds and the fixture row counts.
 
 Usage: python scripts/abovecap_bench.py [out.json] [runs]
 
@@ -26,6 +37,7 @@ import os
 import shutil
 import sys
 import time
+from unittest import mock
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -33,12 +45,16 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-from demo_segmenter_spark.functions.cache import release_persisted
+from demo_segmenter_spark.functions import lanes
+from demo_segmenter_spark.functions.cache import exceeds_cap, release_persisted
+from demo_segmenter_spark.operators import layer_c
+from demo_segmenter_spark.functions.scratch import scratch_dir
 from demo_segmenter_spark.registry import REGISTRY, load_all_operators
 from demo_segmenter_spark.session import get_spark
 
 SRC = "/root/testdata/sf0.1"
-FIX = "/tmp/dss_abovecap_fixture"
+SRC_SMALL = "/root/testdata/sf0.01"
+FIX = scratch_dir("abovecap_fixture")
 
 EMB_QUERIES = [
     "c_embed_pca",
@@ -65,9 +81,17 @@ GRAPH_QUERIES = [
     "b_graph_pagerank",
     "b_graph_components",
     "b_graph_bfs",
+    "b_graph_sssp",
     "b_graph_kcore",
     "b_graph_community",
 ]
+# events_log drains where the read plan's task count matters: one large
+# file (sf0.1 events x4) at 8 log partitions, and 100 small files (the
+# sf0.01 events) at 16
+STREAM_DRAINS = {
+    "one_file_400k_p8": (SRC, 4, 1, 8),
+    "files_100_p16": (SRC_SMALL, 1, 100, 16),
+}
 
 
 def build_fixture() -> dict:
@@ -139,6 +163,68 @@ def build_fixture() -> dict:
     return counts
 
 
+def build_routed(name: str, spark, sf_dir: str):
+    """Build query ``name`` and name its route: "lane" when one of the
+    lane gates it passes (``exceeds_cap``) finds its input under the
+    cap, "chain" when every one finds it above, None when it passes
+    none (the nd family gates on its own vector count)."""
+    answers = []
+
+    def gate(df, cap):
+        answers.append(exceeds_cap(df, cap))
+        return answers[-1]
+
+    with mock.patch.object(lanes, "exceeds_cap", gate), mock.patch.object(
+        layer_c, "exceeds_cap", gate
+    ):
+        df = REGISTRY[name].fn(spark, sf_dir)
+    if not answers:
+        return df, None
+    return df, "chain" if all(answers) else "lane"
+
+
+def stream_drains(spark, runs: int) -> dict:
+    """Best-of-``runs`` seconds of one availableNow drain of each
+    ``STREAM_DRAINS`` log through the events_log source into a parquet
+    sink; every drain must commit each log row once."""
+    from demo_segmenter_spark.sources.kafka_shape import register
+    from demo_segmenter_spark.streaming.sinks import write_stream_parquet
+
+    register(spark)
+    out = {}
+    for name, (src, copies, n_files, n_parts) in STREAM_DRAINS.items():
+        base = f"{FIX}/stream_{name}"
+        os.makedirs(f"{base}/log")
+        t = pq.read_table(f"{src}/events.parquet")
+        t = pa.concat_tables([t] * copies)
+        for i in range(n_files):
+            pq.write_table(t, f"{base}/log/chunk_{i:03d}.parquet")
+        best = float("inf")
+        for _ in range(runs):
+            for d in ("out", "ckpt"):
+                shutil.rmtree(f"{base}/{d}", ignore_errors=True)
+            t0 = time.perf_counter()
+            stream = (
+                spark.readStream.format("events_log")
+                .option("path", f"{base}/log")
+                .option("partitions", str(n_parts))
+                .load()
+            )
+            write_stream_parquet(
+                stream, f"{base}/out", f"{base}/ckpt"
+            ).awaitTermination()
+            best = min(best, time.perf_counter() - t0)
+            n = spark.read.parquet(f"{base}/out").count()
+            assert n == t.num_rows * n_files, (name, n)
+        out[name] = {
+            "records": t.num_rows * n_files,
+            "partitions": n_parts,
+            "s": round(best, 3),
+        }
+        shutil.rmtree(base, ignore_errors=True)
+    return out
+
+
 def main() -> None:
     out_path = sys.argv[1] if len(sys.argv) > 1 else "ABOVECAP_r13.json"
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 2
@@ -153,10 +239,10 @@ def main() -> None:
         "machine_before": {"loadavg": list(os.getloadavg())},
         "queries": {},
     }
+    routes = {}
     for name in names:  # warm
-        REGISTRY[name].fn(spark, FIX).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        df, routes[name] = build_routed(name, spark, FIX)
+        df.write.format("noop").mode("overwrite").save()
         release_persisted(spark, owner=True)
         spark.catalog.clearCache()
     best = {n: float("inf") for n in names}
@@ -169,8 +255,11 @@ def main() -> None:
             best[name] = min(best[name], time.perf_counter() - t0)
             release_persisted(spark, owner=True)
             spark.catalog.clearCache()
-    doc["queries"] = {n: round(t, 3) for n, t in best.items()}
+    doc["queries"] = {
+        n: {"s": round(t, 3), "route": routes[n]} for n, t in best.items()
+    }
     doc["total"] = round(sum(best.values()), 3)
+    doc["stream_drains"] = stream_drains(spark, runs)
     doc["machine_after"] = {"loadavg": list(os.getloadavg())}
     with open(out_path, "w") as f:
         json.dump(doc, f, indent=1)

@@ -14,52 +14,20 @@ import demo_segmenter_spark.operators.layer_b as lb
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _run_kernel(spark, pairs_df, kern_query, sf_dir=SF_DIR):
-    df = lb.__dict__[kern_query](spark, sf_dir)
-    return {tuple(r) for r in df.collect()}
-
-
 def test_community_kernel_matches_spark_reference(spark):
     # crafted: two dense triangles bridged by one edge + an isolated
     # edge; LPA label ties must break (count DESC, label ASC)
+    import pandas as pd
+
     edges = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (4, 6),
              (10, 11)]
     pairs = spark.createDataFrame(edges, "o long, p long")
-    kern_rows = set()
-
-    def kern_run():
-        import pandas as pd
-
-        kern = None
-        # reuse the registered query's kernel by rebuilding it inline:
-        # the kernel body lives in b_graph_community; here we replay
-        # the same numpy steps through the module helpers directly
-        import numpy as np
-
-        o = pairs.toPandas()["o"].to_numpy(np.int64)
-        p = pairs.toPandas()["p"].to_numpy(np.int64)
-        src = np.concatenate([o, p])
-        dst = np.concatenate([p, o])
-        nodes = np.unique(src)
-        sidx = np.searchsorted(nodes, np.concatenate([src, nodes]))
-        didx = np.searchsorted(nodes, np.concatenate([dst, nodes]))
-        lbl = nodes.copy()
-        for _ in range(lb.COMMUNITY_ITERS):
-            gd, gl, cnt = lb._grouped_counts(didx, lbl[sidx])
-            order = np.lexsort((gl, -cnt, gd))
-            gd2, gl2 = gd[order], gl[order]
-            first = np.r_[True, gd2[1:] != gd2[:-1]]
-            lbl = gl2[first]
-        order = np.lexsort((nodes, lbl))
-        l2, n2 = lbl[order], nodes[order]
-        starts = np.flatnonzero(np.r_[True, l2[1:] != l2[:-1]])
-        n_nodes = np.diff(np.r_[starts, len(l2)])
-        return {
-            (int(l2[s]), int(n), int(n2[s]))
-            for s, n in zip(starts, n_nodes)
-        }
-
-    kern_rows = kern_run()
+    batches = [pd.DataFrame(edges, columns=["o", "p"])]
+    kern_rows = {
+        tuple(int(v) for v in r)
+        for pdf in lb._community_kernel(batches)
+        for r in pdf.itertuples(index=False)
+    }
 
     # Spark reference: the distributed rounds (pre-block code path)
     from pyspark.sql import Window

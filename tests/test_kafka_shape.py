@@ -7,8 +7,9 @@ The scenarios mirror what you'd demo against a real broker:
    log; restart the query on the same checkpoint → only the new rows
    are processed (committed offsets are honored, nothing re-read);
 2. a fresh checkpoint replays the whole log from offset 0;
-3. partitions(start, end) + read() slice exactly [start, end) per
-   partition in stable append order (seek-to-offset replay);
+3. partitions(start, end) + read() return exactly [start, end) per
+   partition in stable append order (seek-to-offset replay), reading
+   each log file once in at most n read tasks;
 4. partitioning is user_id % n — per-user ordering within a partition;
 5. an availableNow start runs one batch (Spark's fallback for Python
    sources): a restart replays an uncommitted batch and the next start
@@ -49,6 +50,16 @@ def _read_tuples(reader, s):
     out = []
     for b in reader.read(s):
         out.extend(tuple(d.values()) for d in b.to_pylist())
+    return out
+
+
+def _rows_by_partition(reader, plan):
+    """Every planned task's rows, grouped by their log_partition in
+    read order."""
+    out: dict[int, list] = {}
+    for s in plan:
+        for r in _read_tuples(reader, s):
+            out.setdefault(r[5], []).append(r)
     return out
 
 
@@ -180,11 +191,10 @@ def test_seek_to_offset_slices(spark, tmp_path):
     )
     ends = reader.latestOffset()
     assert set(ends) == {str(p) for p in range(N_PARTS)}
-    full = {
-        p: _read_tuples(reader, s)
-        for s in reader.partitions(reader.initialOffset(), ends)
-        for p in [s.part_id]
-    }
+    full = _rows_by_partition(
+        reader, reader.partitions(reader.initialOffset(), ends)
+    )
+    assert set(full) == set(range(N_PARTS))
     # per-partition invariants: offsets contiguous from 0, key-hash
     # partitioning, counts match latestOffset
     for p, rows in full.items():
@@ -193,12 +203,14 @@ def test_seek_to_offset_slices(spark, tmp_path):
         assert len(rows) == ends[str(p)]
     # seek: an arbitrary [start, end) slice equals the same slice of
     # the full replay
-    for s in reader.partitions(
-        {str(p): 3 for p in range(N_PARTS)},
-        {str(p): 8 for p in range(N_PARTS)},
-    ):
-        got = _read_tuples(reader, s)
-        assert got == full[s.part_id][3:8]
+    got = _rows_by_partition(
+        reader,
+        reader.partitions(
+            {str(p): 3 for p in range(N_PARTS)},
+            {str(p): 8 for p in range(N_PARTS)},
+        ),
+    )
+    assert got == {p: rows[3:8] for p, rows in full.items()}
 
 
 def test_seek_skips_unneeded_files_and_caches_counts(spark, monkeypatch, tmp_path):
@@ -235,11 +247,12 @@ def test_seek_skips_unneeded_files_and_caches_counts(spark, monkeypatch, tmp_pat
         str(p): ends[str(p)] - reader._file_counts(f"{log_dir}/chunk_2.parquet")[p]
         for p in range(N_PARTS)
     }
-    slices = reader.partitions(start, ends)
+    plan = reader.partitions(start, ends)
     assert opened == []  # planning uses the count cache only
-    for s in slices:
-        got = _read_tuples(reader, s)
-        assert got and all(s.start <= r[-1] < s.end for r in got)
+    got = _rows_by_partition(reader, plan)
+    assert set(got) == set(range(N_PARTS))
+    for p, rows in got.items():
+        assert all(start[str(p)] <= r[-1] < ends[str(p)] for r in rows)
     assert opened and all("chunk_2" in f for f in opened)
 
 
@@ -252,22 +265,95 @@ def test_arrow_read_matches_scalar_reference(spark, tmp_path):
     pq.write_table(chunk_b, f"{log_dir}/chunk_b.parquet")
 
     reader = EventsLogStreamReader({"path": log_dir, "partitions": str(N_PARTS)})
+    files = [f"{log_dir}/chunk_a.parquet", f"{log_dir}/chunk_b.parquet"]
     ends = reader.latestOffset()
     windows = [
         (reader.initialOffset(), ends),
         ({str(p): 5 for p in range(N_PARTS)}, {str(p): 17 for p in range(N_PARTS)}),
     ]
     for start, end in windows:
-        for s in reader.partitions(start, end):
-            got = _read_tuples(reader, s)
+        got = _rows_by_partition(reader, reader.partitions(start, end))
+        for p in range(N_PARTS):
             ref = list(
-                _partition_rows(
-                    s.files, s.part_id, s.n_parts,
-                    bases=s.bases, start=s.start, end=s.end,
-                )
+                _partition_rows(files, p, N_PARTS, start[str(p)], end[str(p)])
             )
-            assert got == ref, (s.part_id, s.start, s.end)
-            assert got, "window unexpectedly empty"
+            assert got.get(p) == ref, (p, start[str(p)], end[str(p)])
+            assert ref, "window unexpectedly empty"
+
+
+def _multi_file_log(log_dir):
+    """sf0.001 events cut into 7 appends of uneven size (one a single
+    row); returns the files in append order."""
+    t = pq.read_table(f"{SF_SMOKE}/events.parquet")
+    cuts = [0, 90, 300, 301, 520, 700, 880, t.num_rows]
+    os.makedirs(log_dir)
+    files = []
+    for i, (a, b) in enumerate(zip(cuts, cuts[1:])):
+        files.append(f"{log_dir}/c{i}.parquet")
+        pq.write_table(t.slice(a, b - a), files[-1])
+    return files
+
+
+def test_grouped_read_matches_scalar_reference(spark, tmp_path):
+    """For every partition count and seeded random windows, the rows
+    of all planned file groups, grouped by log_partition, equal the
+    scalar _partition_rows reference."""
+    log_dir = str(tmp_path / "log")
+    files = _multi_file_log(log_dir)
+    rng = np.random.default_rng(15)
+    for n in (1, 3, 4, 8, 16):
+        reader = EventsLogStreamReader({"path": log_dir, "partitions": str(n)})
+        ends = reader.latestOffset()
+        for _ in range(8):
+            start = {k: int(rng.integers(0, v + 1)) for k, v in ends.items()}
+            end = {k: int(rng.integers(start[k], v + 1)) for k, v in ends.items()}
+            got = _rows_by_partition(reader, reader.partitions(start, end))
+            for p in range(n):
+                ref = list(_partition_rows(files, p, n, start[str(p)], end[str(p)]))
+                assert got.get(p, []) == ref, (n, p, start[str(p)], end[str(p)])
+
+
+def test_plan_groups_files_and_reads_each_once(spark, monkeypatch, tmp_path):
+    """The plan holds at most n tasks; every planned file sits in one
+    group, holds a row of some partition's window, and is opened once
+    by the read."""
+    import pyarrow.parquet as pqm
+
+    log_dir = str(tmp_path / "log")
+    files = _multi_file_log(log_dir)
+    opened: list[str] = []
+    real_parquet_file = pqm.ParquetFile
+    monkeypatch.setattr(
+        pqm, "ParquetFile",
+        lambda f, **kw: opened.append(str(f)) or real_parquet_file(f, **kw),
+    )
+    rng = np.random.default_rng(16)
+    for n in (1, 3, 4, 8, 16):
+        reader = EventsLogStreamReader({"path": log_dir, "partitions": str(n)})
+        counts = [_file_partition_counts(f, n) for f in files]
+        ends = reader.latestOffset()
+        windows = [(reader.initialOffset(), ends)]
+        for _ in range(6):
+            start = {k: int(rng.integers(0, v + 1)) for k, v in ends.items()}
+            end = {k: int(rng.integers(start[k], v + 1)) for k, v in ends.items()}
+            windows.append((start, end))
+        for start, end in windows:
+            plan = reader.partitions(start, end)
+            assert len(plan) <= n
+            planned = [f for s in plan for f in s.files]
+            assert len(planned) == len(set(planned))
+            assert planned == sorted(planned)  # contiguous, append order
+            for f in planned:
+                i = files.index(f)
+                lo = [sum(c[p] for c in counts[:i]) for p in range(n)]
+                assert any(
+                    max(lo[p], start[str(p)]) < min(lo[p] + counts[i][p], end[str(p)])
+                    for p in range(n)
+                ), f
+            opened.clear()
+            for s in plan:
+                _read_tuples(reader, s)
+            assert sorted(opened) == planned
 
 
 def test_empty_range_plans_no_partitions(spark, tmp_path):
@@ -389,7 +475,9 @@ def _reference_counts(fpath, n_parts):
 def test_runner_methods_import_no_pandas(tmp_path):
     """initialOffset, latestOffset, partitions and commit run in a fresh
     python_streaming_source_runner process per stream start; none of
-    them may import pandas there (its import cost 0.25-0.35 s a start)."""
+    them may import pandas there (its import cost 0.25-0.35 s a start).
+    Nor may read(): a drain's single read task would pay the import
+    whenever its Python worker is fresh."""
     rng = np.random.default_rng(7)
     log_dir = str(tmp_path / "log")
     _write_log(log_dir, "a", pa.array(rng.integers(0, 500, 5000)), row_group_size=700)
@@ -403,8 +491,11 @@ start = r.initialOffset()
 end = r.latestOffset()
 slices = r.partitions(start, end)
 r.commit(end)
-print(json.dumps({{"pandas": "pandas" in sys.modules, "end": end,
-                   "bases": {{s.part_id: s.bases for s in slices}}}}))
+runner_pandas = "pandas" in sys.modules
+rows = sum(b.num_rows for s in slices for b in r.read(s))
+print(json.dumps({{"pandas": [runner_pandas, "pandas" in sys.modules],
+                   "rows": rows, "end": end,
+                   "bases": {{f: b for s in slices for f, b in zip(s.files, s.bases)}}}}))
 """
     env = dict(os.environ)
     env["PYTHONPATH"] = os.pathsep.join(
@@ -415,16 +506,15 @@ print(json.dumps({{"pandas": "pandas" in sys.modules, "end": end,
         text=True, timeout=120, check=True,
     )
     got = json.loads(out.stdout.strip().splitlines()[-1])
-    assert got["pandas"] is False
+    assert got["pandas"] == [False, False]
+    assert got["rows"] == 5900
 
     files = [f"{log_dir}/a.parquet", f"{log_dir}/b.parquet"]
     ref = [_reference_counts(f, N_PARTS) for f in files]
     assert got["end"] == {
         str(p): ref[0][p] + ref[1][p] for p in range(N_PARTS)
     }
-    assert got["bases"] == {
-        str(p): [0, ref[0][p], ref[0][p] + ref[1][p]] for p in range(N_PARTS)
-    }
+    assert got["bases"] == {files[0]: [0] * N_PARTS, files[1]: ref[0]}
 
 
 def test_partition_counts_match_reference(tmp_path, monkeypatch):

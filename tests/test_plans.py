@@ -881,8 +881,9 @@ def test_shuffle_budgets_table(spark):
         "a_stream_stream_join_outer": 1,
         "a_stream_stream_join_outer_full": 3,  # both outer sides + coalesce key
         "a_ktable_join": 2,  # two changelog compactions; lookup broadcasts
-        "a_sessionize_kafka_shape": 0,  # rides the source's partitioning —
-        # the whole point of the Kafka-shaped source (co-partitioned input)
+        "a_sessionize_kafka_shape": 0,  # counted on the memory table the
+        # query returns; a Python source reports no partitioning, so the
+        # session window still shuffles inside the stream run
         "a_papi_sessionize": 0,  # applyInPandasWithState repartitions
         # internally (not an Exchange node); state shuffle documented
         "a_papi_session_suppress": 0,  # same PAPI-internal state shuffle
